@@ -407,6 +407,35 @@ _R15_NEXT: tuple[str, ...] = (
     "dd06_dedup_clusters",
     "st08_cdc_pipeline_bucketed",
     "st09_stream_ivm_agg",
+    # the one-fold / one-state-table refactor: apply_changes and
+    # agg_delta_from_batch share one fold text, BucketedStateTable
+    # replaces the snapshot table under st05/io18 and scans a batch
+    # once, and the fingerprint walker now unwraps property accessors
+    # (cdc08 gains the registry's type helper) — every drifted entry
+    # re-verified oracle-green at sf0.01
+    "cdc01_golden_replay",
+    "cdc08_wide_type_decode",
+    "cdc19_version_diff_feed",
+    "cdc20_stream_binary_wire",
+    "cdc21_wal2json_v2",
+    "cdc22_bidirectional_origin_filter",
+    "cdc23_checkpoint_resume",
+    "cdc24_multi_table_demux",
+    "cdc28_as_of_lsn_read",
+    "cdc29_vacuum_survivor_state",
+    "cdc30_idempotent_consumer",
+    "cdc33_consistent_cut_read",
+    "dd13_incremental_dedup",
+    "io09_bucket_compaction",
+    "io10_python_stream_source",
+    "io18_write_audit_publish",
+    "q43_snapshot_backfill",
+    "st05_continuous_rollup",
+    "st12_incremental_snapshot_stream",
+    "st14_change_feed_publication",
+    "st16_cdf_consumer_agg",
+    "st17_stream_schema_evolution",
+    "st22_stream_scd2_build",
 )
 
 _R10_RANK = {n: i for i, n in enumerate(_R10_PREFIX)}

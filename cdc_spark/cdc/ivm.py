@@ -40,10 +40,11 @@ def _contributions(
     rows: DataFrame,
     group_cols: Sequence[str],
     measures: Mapping[str, Column],
-    weight: int,
+    weight: int | Column,
     scale: int,
 ) -> DataFrame:
-    """Per-row signed contribution vectors for the delta fold.
+    """Per-row signed contribution vectors for the delta fold
+    (``weight`` ±1, or a column holding it).
 
     Measures are carried as exact split-long fixed-point pairs (the
     `dsum` representation) so the subtraction in the merge is exact —
@@ -80,11 +81,19 @@ def agg_delta(
     if pre_rows is not None:
         pre = _contributions(pre_rows, group_cols, measures, -1, scale)
         post = post.unionByName(pre)
+    return _sum_deltas(post, group_cols, measures)
+
+
+def _sum_deltas(
+    contrib: DataFrame,
+    group_cols: Sequence[str],
+    measures: Mapping[str, Column],
+) -> DataFrame:
     sums = [F.sum("__w").alias("__dn")]
     for alias in measures:
         sums.append(F.sum(f"__hi_{alias}").alias(f"__dhi_{alias}"))
         sums.append(F.sum(f"__lo_{alias}").alias(f"__dlo_{alias}"))
-    return post.groupBy(*group_cols).agg(*sums)
+    return contrib.groupBy(*group_cols).agg(*sums)
 
 
 def agg_delta_from_batch(
@@ -103,8 +112,9 @@ def agg_delta_from_batch(
     SINGLE fold — no separate post-state input.
 
     Semantically identical to ``agg_delta(pre, apply_changes(pre,
-    batch))`` but half the plan: the batch is folded per key once
-    (:func:`~cdc_spark.cdc.merge.fold_per_key`), joined to the
+    batch))`` but half the plan: the batch is folded per key once by
+    the merge's own fold text (``merge._fold_ctes`` and
+    ``merge._post_image``, one ``spark.sql`` parse), left-joined to the
     pre-images, and each key emits its −pre and +post contribution
     from the same join row via an exploded 2-element array. One key
     shuffle + one group shuffle; ``pre_rows`` is scanned once.
@@ -112,63 +122,49 @@ def agg_delta_from_batch(
     ``pre_rows`` must be restricted to the batch's keys (semi join or
     bucket pruning) and must NOT contain truncates-survivors logic —
     callers handle ``op='t'`` batches via the generic path. ``None``
-    means cold start.
+    means cold start. Payload columns the pre-images predate are
+    widened with nulls, as the row-state merge does.
     """
-    from cdc_spark.cdc.merge import fold_per_key, post_image_col
+    from cdc_spark.cdc.merge import _fold_ctes, _post_image, _q, widen
 
     keys = list(keys)
     payload = [c for c in payload if c not in keys]
-    per_key = fold_per_key(
-        changes, keys, payload, lsn_col=lsn_col, op_col=op_col
-    )
+    spark = changes.sparkSession
+    fold = _fold_ctes("{changes}", keys, payload, lsn_col, op_col)
+    key_sel = ", ".join(f"__u.{_q(k)}" for k in keys)
 
-    if pre_rows is not None:
-        bp = pre_rows.select(
-            *keys,
-            *[F.col(c).alias(f"__b_{c}") for c in payload],
-            F.lit(True).alias("__has_base"),
-        )
-        j = per_key.join(bp, on=keys, how="left")
-        post_cols = [post_image_col(c).alias(c) for c in payload]
-        pre_branch = F.when(
-            F.col("__has_base"),
-            F.struct(
-                F.lit(-1).alias("__w"),
-                *[F.col(f"__b_{c}").alias(c) for c in payload],
-            ),
+    if pre_rows is None:
+        rows = spark.sql(
+            f"WITH {fold} SELECT {key_sel}, 1 AS __w"
+            f"{''.join(f', __u.{_q(c)}' for c in payload)} FROM __pk __u "
+            "WHERE __u.__last_live IS NOT NULL",
+            changes=changes,
         )
     else:
-        j = per_key
-        post_cols = [F.col(c).alias(c) for c in payload]
-        pre_branch = None
 
-    post_branch = F.when(
-        F.col("__last_live").isNotNull(),
-        F.struct(F.lit(1).alias("__w"), *post_cols),
-    )
-    branches = (
-        [post_branch] if pre_branch is None else [pre_branch, post_branch]
-    )
-    rows = (
-        j.select(*keys, F.explode(F.array(*branches)).alias("__s"))
-        .where(F.col("__s").isNotNull())
-        .select(*keys, "__s.*")
-    )
+        def image(w: int, values: list[str]) -> str:
+            fields = "".join(
+                f", '{c}', {v}" for c, v in zip(payload, values, strict=True)
+            )
+            return f"named_struct('__w', {w}{fields})"
 
-    cols = [F.col(c) for c in group_cols]
-    w = F.col("__w")
-    cols.append(w)
-    for alias, expr in measures.items():
-        hi, lo = _split_sums(expr, scale)
-        cols.append((hi * w).alias(f"__hi_{alias}"))
-        cols.append((lo * w).alias(f"__lo_{alias}"))
-    contrib = rows.select(*cols)
+        pre_img = image(-1, [f"__bp.{_q(c)}" for c in payload])
+        post_img = image(1, [_post_image(c, "__u", "__bp") for c in payload])
+        on_keys = " AND ".join(f"__u.{_q(k)} = __bp.{_q(k)}" for k in keys)
+        rows = spark.sql(
+            f"WITH {fold}, __j AS (SELECT {key_sel}, explode(array("
+            f"CASE WHEN __bp.__has_base THEN {pre_img} END, "
+            f"CASE WHEN __u.__last_live IS NOT NULL THEN {post_img} END"
+            ")) AS __s FROM __pk __u LEFT JOIN "
+            "(SELECT *, true AS __has_base FROM {pre}) __bp "
+            f"ON {on_keys}) SELECT {', '.join(_q(k) for k in keys)}, __s.* "
+            "FROM __j WHERE __s IS NOT NULL",
+            changes=changes,
+            pre=widen(pre_rows, changes, payload),
+        )
 
-    sums = [F.sum("__w").alias("__dn")]
-    for alias in measures:
-        sums.append(F.sum(f"__hi_{alias}").alias(f"__dhi_{alias}"))
-        sums.append(F.sum(f"__lo_{alias}").alias(f"__dlo_{alias}"))
-    return contrib.groupBy(*group_cols).agg(*sums)
+    contrib = _contributions(rows, group_cols, measures, F.col("__w"), scale)
+    return _sum_deltas(contrib, group_cols, measures)
 
 
 def base_agg(

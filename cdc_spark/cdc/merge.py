@@ -94,6 +94,96 @@ def scd2_history(
     )
 
 
+def _q(c: str) -> str:
+    return f"`{c}`"
+
+
+def _fold_ctes(
+    src: str, keys: list[str], payload: list[str], lsn_col: str, op_col: str
+) -> str:
+    """The per-key LSN fold of the change relation ``src`` as the SQL
+    text of two CTEs — the engine's one spelling of latest-wins.
+
+    ``__pk0`` is ONE hash aggregation per key: the thresholds (newest
+    delete, newest live upsert, newest full image) and each payload
+    column's last non-null value are *unconditional* maxes, validated
+    in ``__pk``: the globally-newest candidate either satisfies the
+    threshold restriction — in which case it IS the restricted max
+    (the restricted set shares the ordering) — or fails it, in which
+    case every older candidate fails too. No sort; map-side partial
+    aggregation collapses each partition to one row per key before
+    the only shuffle.
+
+    ``__pk`` output: key columns, ``__last_live`` (lsn of the newest
+    surviving upsert, null ⇒ the key's final state is deleted/absent),
+    ``__last_ins`` (lsn of the newest surviving full image), and each
+    payload column holding the validated fold (null ⇒ unchanged-TOAST,
+    to be resolved against a base image by :func:`_post_image`).
+    Truncates are not handled here; callers filter them first.
+    """
+    L, O = _q(lsn_col), _q(op_col)
+    key_list = ", ".join(_q(k) for k in keys)
+
+    def after_del(x: str) -> str:  # strictly newer than the last delete
+        return f"(__last_del IS NULL OR {x} > __last_del)"
+
+    folds = "".join(
+        f", max_by(named_struct('l', {L}, 'v', {_q(c)}), "
+        f"CASE WHEN {O} IN ('c','u','r') AND {_q(c)} IS NOT NULL "
+        f"THEN {L} END) AS {_q('__f_' + c)}"
+        for c in payload
+    )
+    pay_sel = "".join(
+        f", CASE WHEN {after_del(_q('__f_' + c) + '.l')} "
+        f"AND (__ins_cand IS NULL OR NOT {after_del('__ins_cand')} "
+        f"OR {_q('__f_' + c)}.l >= __ins_cand) "
+        f"THEN {_q('__f_' + c)}.v END AS {_q(c)}"
+        for c in payload
+    )
+    return (
+        f"__pk0 AS (SELECT {key_list}, "
+        f"max(CASE WHEN {O} = 'd' THEN {L} END) AS __last_del, "
+        f"max(CASE WHEN {O} IN ('c','u','r') THEN {L} END) AS __live_cand, "
+        f"max(CASE WHEN {O} IN ('c','r') THEN {L} END) AS __ins_cand"
+        f"{folds} FROM {src} GROUP BY {key_list}), "
+        f"__pk AS (SELECT {key_list}, "
+        f"CASE WHEN {after_del('__live_cand')} THEN __live_cand END"
+        " AS __last_live, "
+        f"CASE WHEN {after_del('__ins_cand')} THEN __ins_cand END"
+        f" AS __last_ins{pay_sel} FROM __pk0)"
+    )
+
+
+def _post_image(c: str, fold: str, base: str) -> str:
+    """SQL text of payload column ``c``'s final value for an upserted
+    key, given the fold row ``fold`` and the base-image row ``base``:
+    a live insert resets the row (no fallback); otherwise a null fold
+    means unchanged-TOAST and falls back to the base image."""
+    return (
+        f"CASE WHEN {fold}.__last_ins IS NOT NULL THEN {fold}.{_q(c)} "
+        f"ELSE coalesce({fold}.{_q(c)}, {base}.{_q(c)}) END"
+    )
+
+
+def widen(
+    base: DataFrame, changes: DataFrame, payload: Sequence[str]
+) -> DataFrame:
+    """Mid-stream schema evolution (the reference's migration-002
+    story, 002_user_field.up.sql): a batch may carry payload columns
+    the stored rows predate — each becomes a typed null on ``base`` so
+    a fold sees both sides full-width. Column DROP is deliberately not
+    folded in (an analytics sink keeps the history; dropped columns
+    just stop receiving values)."""
+    ch_types = {f.name: f.dataType for f in changes.schema.fields}
+    have = set(base.columns)
+    missing = {
+        c: F.lit(None).cast(ch_types[c])
+        for c in payload
+        if c in ch_types and c not in have
+    }
+    return base.withColumns(missing) if missing else base
+
+
 def apply_changes(
     base: DataFrame | None,
     changes: DataFrame,
@@ -108,7 +198,8 @@ def apply_changes(
 
     ``changes`` must carry: key columns, ``payload`` columns, ``op``
     (c/u/d/t/r) and a total-order ``lsn``. ``base`` is the prior
-    materialized state (key + payload columns), or None for cold start.
+    materialized state (key + payload columns), or None for cold start;
+    payload columns it predates are widened with nulls (:func:`widen`).
 
     ``may_truncate=False`` skips the truncate-wipe subplan (two 1-row
     broadcast aggregates) — pass it when the caller has already
@@ -130,48 +221,24 @@ def apply_changes(
     Column API paid ~10 eagerly-analyzed DataFrame constructions of a
     deepening tree per call — ~0.3 s of driver time PER MICRO-BATCH
     on the apply hot path, the same per-batch plan-build tax the LSH
-    operators shed. The parsed tree is the same fold/anti/left/union
-    shape (the fold reuses :func:`fold_per_key`'s exact expressions
-    as text), so executed plans and results are identical — pinned by
-    the property suite's independent reference implementation
+    operators shed. The per-key fold (:func:`_fold_ctes`) and the
+    post-image rule (:func:`_post_image`) are shared with the IVM
+    delta fold (``ivm.agg_delta_from_batch``), so the row state and
+    every aggregate maintained from it read one definition — pinned
+    by the property suite's independent reference implementation
     (tests/test_merge_property.py).
     """
     keys = list(keys)
     payload = [c for c in payload if c not in keys]
-
-    def q(c: str) -> str:
-        return f"`{c}`"
-
-    L, O = q(lsn_col), q(op_col)
-    key_list = ", ".join(q(k) for k in keys)
-    out_list = ", ".join(q(c) for c in keys + payload)
-
-    folds = ", ".join(
-        f"max_by(named_struct('l', {L}, 'v', {q(c)}), "
-        f"CASE WHEN {O} IN ('c','u','r') AND {q(c)} IS NOT NULL "
-        f"THEN {L} END) AS {q('__f_' + c)}"
-        for c in payload
-    )
-
-    def after_del(x: str) -> str:
-        return f"(__last_del IS NULL OR {x} > __last_del)"
-
-    pay_sel = ", ".join(
-        f"CASE WHEN {after_del(q('__f_' + c) + '.l')} "
-        f"AND (__ins_cand IS NULL OR NOT {after_del('__ins_cand')} "
-        f"OR {q('__f_' + c)}.l >= __ins_cand) "
-        f"THEN {q('__f_' + c)}.v END AS {q(c)}"
-        for c in payload
-    )
+    L, O = _q(lsn_col), _q(op_col)
+    out_list = ", ".join(_q(c) for c in keys + payload)
 
     if may_truncate:
-        # the Column formulation's two broadcast 1-row crossjoins,
-        # as CTEs: drop changes at-or-before the newest truncate,
-        # and the whole base when any truncate is present
-        # BROADCAST hints: the Column formulation crossJoined an
-        # explicit F.broadcast(t_agg); without the hint the 1-row CTE's
-        # size is unknown to the planner and the cross join degrades to
-        # CartesianProduct (caught by the plan-guardrail suite)
+        # drop changes at-or-before the newest truncate, and the whole
+        # base when any truncate is present. BROADCAST hints: without
+        # them the 1-row CTE's size is unknown to the planner and the
+        # cross join degrades to CartesianProduct (caught by the
+        # plan-guardrail suite)
         ch_src = "__ch"
         tr_ctes = (
             f"__tr AS (SELECT max(CASE WHEN {O} = 't' THEN {L} END)"
@@ -190,31 +257,8 @@ def apply_changes(
         tr_ctes = ""
         base_src = "{base}"
 
-    ctes = (
-        f"WITH {tr_ctes}"
-        f"__pk0 AS (SELECT {key_list}, "
-        f"max(CASE WHEN {O} = 'd' THEN {L} END) AS __last_del, "
-        f"max(CASE WHEN {O} IN ('c','u','r') THEN {L} END) AS __live_cand, "
-        f"max(CASE WHEN {O} IN ('c','r') THEN {L} END) AS __ins_cand"
-        f"{', ' + folds if folds else ''} "
-        f"FROM {ch_src} GROUP BY {key_list}), "
-        f"__pk AS (SELECT {key_list}, "
-        f"CASE WHEN {after_del('__live_cand')} THEN __live_cand END"
-        " AS __last_live, "
-        f"CASE WHEN {after_del('__ins_cand')} THEN __ins_cand END"
-        " AS __last_ins"
-        f"{', ' + pay_sel if pay_sel else ''} "
-        "FROM __pk0)"
-    )
-
-    upsert_sel = ", ".join(
-        [f"__u.{q(k)}" for k in keys]
-        + [
-            f"CASE WHEN __u.__last_ins IS NOT NULL THEN __u.{q(c)} "
-            f"ELSE coalesce(__u.{q(c)}, __bp.{q(c)}) END AS {q(c)}"
-            for c in payload
-        ]
-    )
+    fold = _fold_ctes(ch_src, keys, payload, lsn_col, op_col)
+    ctes = f"WITH {tr_ctes}{fold}"
 
     if base is None:
         # cold start: no prior rows to carry over or coalesce against
@@ -224,8 +268,13 @@ def apply_changes(
         )
         return changes.sparkSession.sql(sql, changes=changes)
 
-    on_keys = " AND ".join(f"__b.{q(k)} = __pk.{q(k)}" for k in keys)
-    on_keys_u = " AND ".join(f"__u.{q(k)} = __bp.{q(k)}" for k in keys)
+    base = widen(base, changes, payload)
+    upsert_sel = ", ".join(
+        [f"__u.{_q(k)}" for k in keys]
+        + [f"{_post_image(c, '__u', '__bp')} AS {_q(c)}" for c in payload]
+    )
+    on_keys = " AND ".join(f"__b.{_q(k)} = __pk.{_q(k)}" for k in keys)
+    on_keys_u = " AND ".join(f"__u.{_q(k)} = __bp.{_q(k)}" for k in keys)
     sql = (
         f"{ctes} "
         # untouched base rows: keys the batch never mentions (keys
@@ -239,113 +288,3 @@ def apply_changes(
         f"LEFT JOIN {base_src} __bp ON {on_keys_u}"
     )
     return changes.sparkSession.sql(sql, changes=changes, base=base)
-
-
-def _truncate_filter(
-    changes: DataFrame,
-    base: DataFrame | None,
-    *,
-    lsn_col: str = "lsn",
-    op_col: str = "op",
-) -> tuple[DataFrame, DataFrame | None]:
-    """Drop every change at-or-before the newest truncate, and the
-    whole base when any truncate is present (declarative — a broadcast
-    1-row aggregate, no collect)."""
-    op = F.col(op_col)
-    lsn = F.col(lsn_col)
-    t_agg = changes.agg(F.max(F.when(op == "t", lsn)).alias("__tmax"))
-    changes = (
-        changes.crossJoin(F.broadcast(t_agg))
-        .where(
-            (op != "t")
-            & (F.col("__tmax").isNull() | (lsn > F.col("__tmax")))
-        )
-        .drop("__tmax")
-    )
-    if base is not None:
-        base = base.crossJoin(F.broadcast(t_agg)).where(
-            F.col("__tmax").isNull()
-        ).drop("__tmax")
-    return changes, base
-
-
-def post_image_col(c: str) -> Column:
-    """Final value of payload column ``c`` for an upserted key, given
-    the fold output and a ``__b_{c}`` base-image column: a live insert
-    resets the row (no fallback); otherwise null folds mean
-    unchanged-TOAST and fall back to the base image."""
-    return F.when(F.col("__last_ins").isNotNull(), F.col(c)).otherwise(
-        F.coalesce(F.col(c), F.col(f"__b_{c}"))
-    )
-
-
-def fold_per_key(
-    changes: DataFrame,
-    keys: Sequence[str],
-    payload: Sequence[str],
-    *,
-    lsn_col: str = "lsn",
-    op_col: str = "op",
-) -> DataFrame:
-    """Per-key LSN-ordered fold of one change batch → ONE hash
-    aggregation, no truncate handling (callers filter truncates first).
-
-    Output: key columns, ``__last_live`` (lsn of the newest surviving
-    upsert, null ⇒ the key's final state is deleted/absent),
-    ``__last_ins`` (lsn of the newest surviving full image), and each
-    payload column holding the validated last-non-null fold (null ⇒
-    unchanged-TOAST, to be coalesced against a base image).
-    """
-    keys = list(keys)
-    payload = [c for c in payload if c not in keys]
-    op = F.col(op_col)
-    lsn = F.col(lsn_col)
-
-    # --- per-key fold in lsn order: ONE hash aggregation ------------
-    # The thresholds (newest delete, newest live full image) and the
-    # per-column folds are all derived from *unconditional* maxes and
-    # validated afterwards: the globally-newest candidate either
-    # satisfies the threshold restriction — in which case it IS the
-    # restricted max (the restricted set shares the ordering) — or it
-    # fails it, in which case every older candidate fails too. This
-    # replaces the previous window+groupBy formulation: no sort, and
-    # map-side partial aggregation collapses each partition to one row
-    # per key before the only shuffle.
-    is_up = op.isin(*UPSERT_OPS)
-    folds = [
-        F.expr(
-            f"max_by(named_struct('l', `{lsn_col}`, 'v', `{c}`), "
-            f"CASE WHEN `{op_col}` IN ('c','u','r') "
-            f"AND `{c}` IS NOT NULL THEN `{lsn_col}` END)"
-        ).alias(f"__f_{c}")
-        for c in payload
-    ]
-    per_key = changes.groupBy(*keys).agg(
-        F.max(F.when(op == "d", lsn)).alias("__last_del"),
-        F.max(F.when(is_up, lsn)).alias("__live_cand"),
-        F.max(F.when(op.isin("c", "r"), lsn)).alias("__ins_cand"),
-        *folds,
-    )
-
-    def _after_del(c):  # strictly newer than the last delete
-        return F.col("__last_del").isNull() | (c > F.col("__last_del"))
-
-    return per_key.select(
-        *keys,
-        F.when(_after_del(F.col("__live_cand")), F.col("__live_cand"))
-        .alias("__last_live"),
-        F.when(_after_del(F.col("__ins_cand")), F.col("__ins_cand"))
-        .alias("__last_ins"),
-        *[
-            F.when(
-                _after_del(F.col(f"__f_{c}.l"))
-                & (
-                    F.col("__ins_cand").isNull()
-                    | ~_after_del(F.col("__ins_cand"))
-                    | (F.col(f"__f_{c}.l") >= F.col("__ins_cand"))
-                ),
-                F.col(f"__f_{c}.v"),
-            ).alias(c)
-            for c in payload
-        ],
-    )

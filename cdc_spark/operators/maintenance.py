@@ -9,11 +9,11 @@ reference never faces this — its sink is a terminal log
 deck's sync-to-analytics-DB pattern (CDC_small.pdf slides 33-37) does.
 
 Compaction here is expressed as a *versioned rewrite*: read the
-current snapshot, repartition to the byte-budgeted file count,
-optionally sort within partitions for data-skipping locality, and
-publish as a new immutable version via the same atomic pointer swap
-the streaming sink uses. Readers never see a half-compacted table, and
-the pre-compaction version stays readable (time travel / audit).
+fragmented buckets, repartition them to the byte-budgeted file count,
+and publish as a new immutable version via the same atomic pointer
+swap the streaming sink uses. Readers never see a half-compacted
+table, and the pre-compaction version stays readable (time travel /
+audit).
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ import os
 
 from pyspark.sql import functions as F
 
-from cdc_spark.streaming.pipeline import VersionedStateTable
 from cdc_spark.streaming.state import BucketedStateTable, _fsync_replace
 
 
@@ -63,40 +62,6 @@ def needs_compaction(
         stats["n_files"] >= min_files
         and stats["avg_file_bytes"] < target_file_bytes // 4
     )
-
-
-def compact(
-    state: VersionedStateTable,
-    *,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_by: list[str] | None = None,
-) -> int:
-    """Rewrite the current snapshot into byte-budgeted files.
-
-    File count = ceil(current_bytes / target): parquet re-encoding
-    changes sizes, so the budget is approximate — the point is order-
-    of-magnitude (thousands of KB files → tens of 128 MB files).
-    ``sort_by`` additionally range-partitions and sorts rows so each
-    output file covers a narrow key range: parquet min/max footer
-    stats then let later scans skip whole files (zone-map pruning) —
-    the cheap local substitute for Z-ordering when there is one
-    dominant filter column.
-
-    Returns the new version number; the pre-compaction version remains
-    readable via ``state.read(version=...)``.
-    """
-    v = state.current_version()
-    if v is None:
-        raise ValueError("cannot compact an empty state table")
-    df = state.read()
-    stats = dir_file_stats(os.path.join(state.path, f"v{v}"))
-    n_out = max(1, math.ceil(stats["total_bytes"] / target_file_bytes))
-    if sort_by:
-        df = df.repartitionByRange(n_out, *[F.col(c) for c in sort_by])
-        df = df.sortWithinPartitions(*sort_by)
-    else:
-        df = df.repartition(n_out)
-    return state.write(df)
 
 
 def compact_buckets(

@@ -1146,7 +1146,7 @@ def cdc18_dead_letter_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc19_version_diff_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from cdc_spark.streaming.state import BucketedStateTable
+    from cdc_spark.streaming.state import BucketedStateTable, TouchedInfo
 
     events = load_table(spark, sf_dir, "events")
     # ONE materialization of the change projection for the whole replay
@@ -1200,7 +1200,7 @@ def cdc19_version_diff_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     infos = {
-        r["__s"]: (set(r["bs"]), bool(r["has_t"]), r["mx"])
+        r["__s"]: TouchedInfo(set(r["bs"]), bool(r["has_t"]), r["mx"])
         for r in info_rows
     }
     versions = []
@@ -1214,7 +1214,7 @@ def cdc19_version_diff_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             state.apply(
                 b,
                 ["event_type", "value"],
-                touched_info=infos.get(i, (set(), False, None)),
+                touched_info=infos.get(i, TouchedInfo(set(), False)),
             )
         )
     return state.version_diff(versions[0], versions[-1])

@@ -1520,7 +1520,7 @@ def dd12_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dd13_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from cdc_spark.streaming.state import BucketedStateTable
+    from cdc_spark.streaming.state import BucketedStateTable, TouchedInfo
 
     docs = load_table(spark, sf_dir, "documents")
     # 64 buckets: plenty to prove pruning (the probe batch hashes into
@@ -1562,7 +1562,9 @@ def dd13_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # records exactly the buckets that receive files), so the caller
     # states it and the seed pipeline runs once, in the write.
     state.apply(
-        seed, ["keeper_id"], touched_info=(set(range(n_buckets)), False)
+        seed,
+        ["keeper_id"],
+        touched_info=TouchedInfo(set(range(n_buckets)), False),
     )
 
     newb = docs.where(F.col("doc_id") % 50 == 0).select(

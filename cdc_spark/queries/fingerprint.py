@@ -26,6 +26,7 @@ entry unless ``--force``).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import importlib
 import inspect
@@ -85,19 +86,25 @@ def collect_sources(fn) -> dict[str, str]:
             return
         out[key] = src
         if inspect.isclass(obj):
-            # unwrap classmethod/staticmethod descriptors: vars() hands
-            # back the descriptor object, which isfunction() rejects —
-            # without the unwrap, globals referenced ONLY from a
-            # classmethod (e.g. an index builder's helper) never enter
-            # the closure and changes to them cannot drift any
-            # fingerprint (round-14 coverage hole, found when a helper
-            # rewrite left every ivf entry's fingerprint unchanged)
+            # unwrap descriptors: vars() hands back the descriptor
+            # object, which isfunction() rejects — without the unwrap,
+            # globals referenced ONLY from a classmethod (e.g. an index
+            # builder's helper), a property accessor or a cached
+            # property never enter the closure and changes to them
+            # cannot drift any fingerprint (round-14 coverage hole,
+            # found when a helper rewrite left every ivf entry's
+            # fingerprint unchanged)
             fns = []
             for v in vars(obj).values():
                 if isinstance(v, (classmethod, staticmethod)):
-                    v = v.__func__
-                if inspect.isfunction(v):
-                    fns.append(v)
+                    vs = [v.__func__]
+                elif isinstance(v, property):
+                    vs = [v.fget, v.fset, v.fdel]
+                elif isinstance(v, functools.cached_property):
+                    vs = [v.func]
+                else:
+                    vs = [v]
+                fns.extend(f for f in vs if inspect.isfunction(f))
         else:
             fns = [obj]
         for f in fns:

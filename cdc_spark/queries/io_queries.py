@@ -960,30 +960,31 @@ def io17_type_widening_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderstatus
     """,
     note="write-audit-publish (the Iceberg/dbt WAP pattern on the "
-    "engine's own pointer machinery): new snapshots STAGE into an "
-    "unpublished version directory, an audit (null keys, duplicate "
-    "keys, row-count floor) runs against the staged files, and only "
-    "a passing audit swaps the fsync'd CURRENT pointer — readers "
-    "never see unaudited data. The gated run stages a CORRUPT "
-    "snapshot (null + duplicate keys) whose audit must fail leaving "
-    "the pointer untouched (asserted), then a clean snapshot that "
-    "publishes; the read-through-pointer result hash-matches the "
-    "clean snapshot's aggregation",
+    "engine's own state table): new snapshots STAGE into a directory "
+    "outside the published one-bucket BucketedStateTable, an audit "
+    "(null keys, duplicate keys, row-count floor) runs against the "
+    "staged files, and only a passing snapshot is published through "
+    "overwrite_buckets — readers never see unaudited data. The gated "
+    "run stages a CORRUPT snapshot (null + duplicate keys) whose audit "
+    "must fail leaving the published version untouched (asserted), "
+    "then a clean snapshot that publishes; the read-through-pointer "
+    "result hash-matches the clean snapshot's aggregation",
     tags=("io", "wap", "audit", "publish"),
 )
 def io18_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cdc_spark.streaming.pipeline import VersionedStateTable
-    from cdc_spark.streaming.state import _fsync_replace
+    from cdc_spark.streaming.state import BucketedStateTable
 
     orders = load_table(spark, sf_dir, "orders")
     d = tempfile.mkdtemp(prefix="io18_wap_")
-    vt = VersionedStateTable(spark, d)
+    vt = BucketedStateTable(
+        spark, os.path.join(d, "published"), ["o_orderkey"], n_buckets=1
+    )
     # baseline publish
-    vt.write(orders.where(F.col("o_orderkey") % 7 == 0))
+    vt.overwrite_buckets(orders.where(F.col("o_orderkey") % 7 == 0), [0])
     v_before = vt.current_version()
 
-    def stage_and_audit(df, v):
-        target = os.path.join(d, f"v{v}")
+    def stage_and_audit(df, name):
+        target = os.path.join(d, "staged", name)
         df.write.mode("overwrite").parquet(target)
         staged = spark.read.parquet(target)
         checks = staged.agg(
@@ -1001,11 +1002,7 @@ def io18_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             and checks.n > 0
         )
         if ok:
-            _fsync_replace(
-                os.path.join(d, "CURRENT.tmp"),
-                os.path.join(d, "CURRENT"),
-                str(v),
-            )
+            vt.overwrite_buckets(staged, [0])
         return ok
 
     # corrupt snapshot: a null key and a duplicated key sneak in
@@ -1016,13 +1013,13 @@ def io18_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[c for c in base.columns if c != "o_orderkey"],
         )
     ).unionByName(base.limit(1))
-    if stage_and_audit(corrupt, v_before + 1):
+    if stage_and_audit(corrupt, "corrupt"):
         raise AssertionError("audit passed a corrupt snapshot")
     if vt.current_version() != v_before:
         raise AssertionError("failed audit moved the published pointer")
 
     # clean snapshot publishes
-    if not stage_and_audit(base, v_before + 2):
+    if not stage_and_audit(base, "clean"):
         raise AssertionError("audit rejected a clean snapshot")
 
     published = vt.read()

@@ -2,19 +2,15 @@
 
 from cdc_spark.streaming.pipeline import (
     CdcStreamPipeline,
-    VersionedStateTable,
-)
-from cdc_spark.streaming.state import BucketedStateTable
-from cdc_spark.streaming.pipeline import (
     sessionized_counts,
     stream_dedup,
     windowed_agg,
 )
+from cdc_spark.streaming.state import BucketedStateTable
 
 __all__ = [
     "BucketedStateTable",
     "CdcStreamPipeline",
-    "VersionedStateTable",
     "windowed_agg",
     "sessionized_counts",
     "stream_dedup",

@@ -10,17 +10,20 @@ rewrite, never a full-table one.
 
 Per batch the work is:
 
-1. bucket-pruned read of the row-state buckets the batch touches,
+1. one 1-row scan of the batch (``BucketedStateTable.scan``): touched
+   buckets, truncate flag, high LSN;
+2. bucket-pruned read of the row-state buckets the batch touches,
    semi-joined to the batch's keys → pre-images;
-2. the normal incremental row-state apply;
-3. same pruned read against the new version → post-images;
-4. ``agg_delta(pre, post)`` → per-group counter deltas (exact
-   split-long fixed point, so base ⊕ delta ≡ full recompute bit for
-   bit);
-5. the affected groups' aggregate rows are read bucket-pruned, merged
-   with the delta, and written back through ``apply_changes`` as
-   upserts — groups whose row count reaches zero become delete
-   tombstones, so the aggregate table never carries empty groups.
+3. ``agg_delta_from_batch`` folds the batch with the row-state merge's
+   own fold text and emits −pre / +post per key → per-group counter
+   deltas (exact split-long fixed point, so base ⊕ delta ≡ full
+   recompute bit for bit), concurrently with the normal incremental
+   row-state apply, which reuses the scan record;
+4. the affected groups' aggregate rows are read bucket-pruned, merged
+   with the delta, and the touched aggregate buckets are rewritten
+   through ``overwrite_buckets`` — groups whose row count reaches zero
+   are simply not written, so the aggregate table never carries empty
+   groups.
 
 State size appears nowhere: both sides cost O(batch + touched
 buckets). A truncate in the batch degrades to O(state) by necessity
@@ -91,18 +94,18 @@ class IncrementalAggregate:
     ) -> int | None:
         """Apply one change batch to the row state AND the aggregate.
 
-        Returns the new row-state version. The touched-bucket scan
-        duplicates the one ``BucketedStateTable.apply`` runs — two
-        bounded 1-row jobs per batch, accepted for composability.
+        Returns the new row-state version. One bounded 1-row scan job
+        per batch (``BucketedStateTable.scan``): its record is passed
+        down, so the row-state apply does not scan again.
         """
         from cdc_spark.cdc.merge import apply_changes
 
         st = self.state
-        v_cur = st.current_version()
+        v_cur, man = st._current()
         if (
             batch_id is not None
-            and v_cur is not None
-            and st._load_manifest(v_cur).get("batch_id") == batch_id
+            and man is not None
+            and man.get("batch_id") == batch_id
         ):
             # exactly-once replay skip: the row state already has this
             # epoch; _sync catches the aggregate up if its merge was
@@ -111,19 +114,11 @@ class IncrementalAggregate:
             return v_cur
         self._sync_with_state(v_cur)
 
-        ch = changes.withColumn(_BUCKET, st._bucket_expr())
-        info = ch.agg(
-            F.collect_set(F.col(_BUCKET)).alias("bs"),
-            F.max(F.col(op_col) == "t").alias("has_t"),
-            F.max(F.col(lsn_col)).alias("mx"),
-        ).first()
-        touched = sorted(info["bs"] or ())
-        if not touched:
+        touched_info = st.scan(changes, lsn_col=lsn_col, op_col=op_col)
+        if not touched_info.buckets:
             return v_cur
-        any_t = bool(info["has_t"])
-        touched_info = (set(touched), any_t, info["mx"])
 
-        if any_t:
+        if touched_info.has_truncate:
             # truncate: every key dies — O(state) by necessity. Compute
             # post in-plan (apply_changes over the whole old state) and
             # diff against the full pre image.
@@ -159,18 +154,23 @@ class IncrementalAggregate:
             # common path: ONE fold computes both sides of the delta.
             # Pre-images come from a bucket-pruned read semi-joined to
             # the batch's keys; the batch's per-key post-images are
-            # derived in the same join (fold_per_key + base coalesce —
+            # derived in the same join (the merge's own fold text —
             # exactly what the state write persists, since
             # apply_changes is per-key), so the new version is never
             # read back and the pre buckets are scanned once.
-            touched_keys = changes.select(*st.keys).distinct()
-            pre = (
-                st.read_buckets(touched, version=v_cur)
-                if v_cur is not None
-                else None
-            )
-            if pre is not None:
-                pre = pre.join(touched_keys, on=st.keys, how="left_semi")
+            # The pre read lives on the CHANGES frame's session, which
+            # the one-parse fold SQL needs (see BucketedStateTable.apply).
+            pre = None
+            if man is not None:
+                pre = st._read_dirs(
+                    man,
+                    st._dirs(man, touched_info.buckets),
+                    session=changes.sparkSession,
+                ).join(
+                    changes.select(*st.keys).distinct(),
+                    on=st.keys,
+                    how="left_semi",
+                )
             delta = agg_delta_from_batch(
                 pre,
                 changes,

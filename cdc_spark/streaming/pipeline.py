@@ -13,9 +13,9 @@ Streaming like this (SURVEY.md §3.1):
 State lives in a ``BucketedStateTable`` (streaming/state.py):
 hash-bucketed immutable parquet versions plus a manifest + CURRENT
 pointer — per micro-batch only touched buckets are rewritten
-(Delta-MERGE-shaped apply without Delta jars). ``VersionedStateTable``
-below is the simpler full-snapshot variant, kept for small rollup /
-maintenance tables where a snapshot per version IS the contract.
+(Delta-MERGE-shaped apply without Delta jars). It is the engine's one
+state table: small snapshot-per-version tables (the continuous rollup,
+write-audit-publish) are its ``n_buckets=1`` case.
 """
 
 from __future__ import annotations
@@ -29,61 +29,7 @@ from pyspark.sql import functions as F
 from cdc_spark.catalog import normalize_event_time
 from cdc_spark.cdc.envelope import parse_pgoutput_json, parse_wal2json
 from cdc_spark.cdc.registry import SchemaRegistry
-from cdc_spark.streaming.state import BucketedStateTable, _fsync_replace
-
-
-class VersionedStateTable:
-    """Materialized table as immutable parquet versions + CURRENT
-    pointer file. Readers see a consistent snapshot; the writer swaps
-    the pointer after a successful write (atomic rename)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
-    def current_version(self) -> int | None:
-        try:
-            with open(self._pointer) as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-        except ValueError:
-            # crash mid-swap left an empty/corrupt pointer: fall back
-            # to the highest complete version directory
-            vs = [
-                int(n[1:])
-                for n in os.listdir(self.path)
-                if n.startswith("v")
-                and n[1:].isdigit()
-                and os.path.exists(os.path.join(self.path, n, "_SUCCESS"))
-            ]
-            return max(vs) if vs else None
-
-    def read(self, version: int | None = None) -> DataFrame | None:
-        """Current snapshot, or time-travel to an earlier version —
-        immutable versions double as the audit trail (deck slide 50:
-        replication/auditing as CDC outcomes)."""
-        v = self.current_version() if version is None else version
-        if v is None:
-            return None
-        target = os.path.join(self.path, f"v{v}")
-        if not os.path.isdir(target):
-            raise ValueError(f"version {v} does not exist at {self.path}")
-        return self.spark.read.parquet(target)
-
-    def write(self, df: DataFrame) -> int:
-        v = (self.current_version() or 0) + 1
-        target = os.path.join(self.path, f"v{v}")
-        df.write.mode("overwrite").parquet(target)
-        # fsync'd atomic pointer swap: a crash leaves either the old
-        # pointer or the new one, never a torn write
-        _fsync_replace(self._pointer + ".tmp", self._pointer, str(v))
-        return v
+from cdc_spark.streaming.state import BucketedStateTable
 
 
 class CdcStreamPipeline:

@@ -9,9 +9,9 @@ a re-scan of history. Algebraic partials (count/sum/min/max) merge
 exactly; with decimal sums the rollup equals the from-scratch batch
 aggregate bit-for-bit (tested).
 
-At scale the state table is partitioned by bucket date so the merge
-join prunes to the buckets the batch touches (late data only reopens
-old buckets within the watermark horizon).
+The rollup is a one-bucket ``BucketedStateTable`` keyed by
+(bucket_start, dims): each batch publishes the merged snapshot as one
+new immutable version, and earlier versions stay readable.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_spark.streaming.pipeline import VersionedStateTable
+from cdc_spark.streaming.state import BucketedStateTable
 
 
 class ContinuousRollup:
@@ -38,10 +38,12 @@ class ContinuousRollup:
         value_col: str = "value",
     ):
         self.spark = spark
-        self.state = VersionedStateTable(spark, state_path)
         self.ts_col = ts_col
         self.bucket = bucket
         self.dims = list(dims)
+        self.state = BucketedStateTable(
+            spark, state_path, ["bucket_start", *self.dims], n_buckets=1
+        )
         self.value_col = value_col
 
     def _partials(self, batch: DataFrame) -> DataFrame:
@@ -65,14 +67,13 @@ class ContinuousRollup:
     def apply_batch(self, batch: DataFrame, epoch_id: int = 0) -> None:
         """foreachBatch body: merge this batch's partials into state."""
         partials = self._partials(batch)
-        base = self.state.read()
+        base = self.state.read(session=batch.sparkSession)
         if base is None:
             merged = partials
         else:
-            keys = ["bucket_start", *self.dims]
             merged = (
                 base.unionByName(partials)
-                .groupBy(*keys)
+                .groupBy(*self.state.keys)
                 .agg(
                     F.sum("n").alias("n"),
                     F.sum("sum_value").alias("sum_value"),
@@ -80,7 +81,7 @@ class ContinuousRollup:
                     F.max("max_value").alias("max_value"),
                 )
             )
-        self.state.write(merged)
+        self.state.overwrite_buckets(merged, [0])
 
     def read(self) -> DataFrame | None:
         """Current rollup with derived columns (avg from exact partials)."""

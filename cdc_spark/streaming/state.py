@@ -18,7 +18,9 @@ Delta-MERGE-shaped semantics without Delta jars:
   missing pointer falls back to the highest version with a readable
   manifest, so a crash mid-write never bricks the table;
 - immutable versions double as the audit trail: ``read(version=...)``
-  time-travels, exactly as in ``VersionedStateTable``.
+  time-travels. A snapshot table (a rollup, a published audit
+  snapshot) is the ``n_buckets=1`` case: ``overwrite_buckets(rows,
+  [0])`` replaces the whole content as one new version.
 
 Sizing: pick ``n_buckets`` so a bucket is a few tens of GB at the
 target scale (100 TB / 4096 ≈ 25 GB). A batch touching k distinct
@@ -31,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +42,32 @@ from pyspark.sql.types import StructType
 from cdc_spark.cdc.merge import apply_changes
 
 _BUCKET = "__bucket"
+
+# Generation cap for insert-only appends (round 14): an
+# ``apply(..., insert_only=True)`` APPENDS a delta directory to each
+# touched bucket instead of rewriting its contents — O(batch) written
+# bytes instead of O(touched bucket contents), the LSM discipline for
+# the commonest CDC-dedup shape (probe, anti-join, insert the
+# provably-new keys). Reads union a bucket's generation list; when any
+# touched bucket has MAX_GENERATIONS generations the apply falls back
+# to the normal merge path, which folds those buckets back to one
+# directory — bounded read amplification, coarse compaction.
+MAX_GENERATIONS = 8
+
+
+class TouchedInfo(NamedTuple):
+    """What one change batch touches — the result of the single 1-row
+    scan :meth:`BucketedStateTable.scan` runs, or a caller's own
+    equivalent (which then skips the scan)."""
+
+    buckets: set
+    has_truncate: bool
+    # high LSN of the batch (the applied-LSN watermark); None when the
+    # caller does not track it
+    max_lsn: int | None = None
+    # any op other than c/r: such a batch cannot take the insert-only
+    # append path (conservative default for caller-built records)
+    has_non_insert: bool = True
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -110,23 +139,11 @@ class BucketedStateTable:
         *,
         n_buckets: int = 16,
         one_file_per_bucket: bool = False,
-        max_generations: int = 8,
     ):
         self.spark = spark
         self.path = local_fs_path(path)  # the one FS-assumption seam
         self.keys = list(keys)
         self.n_buckets = n_buckets
-        # Generation cap for insert-only appends (round 14): an
-        # ``apply(..., insert_only=True)`` APPENDS a delta directory to
-        # each touched bucket instead of rewriting its contents —
-        # O(batch) written bytes instead of O(touched bucket contents),
-        # the LSM discipline for the commonest CDC-dedup shape (probe,
-        # anti-join, insert the provably-new keys). Reads union a
-        # bucket's generation list; when any touched bucket has
-        # ``max_generations`` generations the apply falls back to the
-        # normal merge path, which folds those buckets back to one
-        # directory — bounded read amplification, coarse compaction.
-        self.max_generations = max_generations
         # For SMALL tables (materialized aggregates, dimension state) a
         # pre-write repartition by bucket costs a tiny shuffle and buys
         # exactly one file per bucket — reads open n_buckets footers
@@ -159,15 +176,39 @@ class BucketedStateTable:
         appended insert-only generations)."""
         return list(rel) if isinstance(rel, list) else [rel]
 
+    def _dirs(self, man: dict, bucket_ids=None) -> list[str]:
+        """Data directories of the named buckets (every bucket when
+        None) in manifest ``man``, generation lists flattened. Buckets
+        with no files yet are silently absent (an empty bucket has no
+        rows)."""
+        wanted = None if bucket_ids is None else {int(b) for b in bucket_ids}
+        return [
+            os.path.join(self.path, r)
+            for b, rel in man["buckets"].items()
+            if wanted is None or int(b) in wanted
+            for r in self._rels(rel)
+        ]
+
     def current_version(self) -> int | None:
+        return self._current()[0]
+
+    def _current(self) -> tuple[int | None, dict | None]:
+        """(current version, its manifest) for one manifest load."""
         try:
             with open(self._pointer) as fh:
                 v = int(fh.read().strip())
             # pointer must reference a readable manifest
-            self._load_manifest(v)
-            return v
+            return v, self._load_manifest(v)
         except (FileNotFoundError, ValueError, json.JSONDecodeError):
-            return self._recover_version()
+            v = self._recover_version()
+            return v, None if v is None else self._load_manifest(v)
+
+    def _manifest(self, version: int | None = None) -> dict | None:
+        """Manifest of ``version``, or of the current version (None on
+        an empty table)."""
+        if version is None:
+            return self._current()[1]
+        return self._load_manifest(version)
 
     def _recover_version(self) -> int | None:
         """Corrupt/missing pointer: highest version with a valid
@@ -195,6 +236,30 @@ class BucketedStateTable:
             F.lit(self.n_buckets),
         ).cast("int")
 
+    def scan(
+        self, changes: DataFrame, *, lsn_col: str = "lsn", op_col: str = "op"
+    ) -> TouchedInfo:
+        """One bounded 1-row job: which buckets does this batch touch,
+        does it truncate (truncate wipes every key, so every bucket is
+        dirty), what is its high LSN (the reference's standby ack
+        position, main.go:61-74), and does it carry any op besides
+        c/r? A global aggregate — collect_set is capped at n_buckets —
+        gets map-side partials and a single-row exchange, ~3x cheaper
+        per micro-batch than a grouped shuffle."""
+        op = F.col(op_col)
+        info = changes.agg(
+            F.collect_set(self._bucket_expr()).alias("bs"),
+            F.max(op == "t").alias("has_t"),
+            F.max(F.col(lsn_col)).alias("mx"),
+            F.max(~op.isin("c", "r")).alias("non_ins"),
+        ).first()
+        return TouchedInfo(
+            set(info["bs"] or ()),
+            bool(info["has_t"]),
+            info["mx"],
+            bool(info["non_ins"]),
+        )
+
     # --- read / time travel ------------------------------------------
 
     def read(
@@ -203,11 +268,10 @@ class BucketedStateTable:
         """``session`` reparents the scan (e.g. onto a foreachBatch
         micro-batch session so it can compose with the batch frame in
         one SQL text); default is the table's own session."""
-        v = self.current_version() if version is None else version
-        if v is None:
+        man = self._manifest(version)
+        if man is None:
             return None
-        man = self._load_manifest(v)
-        return self._read_manifest(man, session=session)
+        return self._read_dirs(man, self._dirs(man), session=session)
 
     def read_as_of_lsn(self, lsn: int) -> DataFrame | None:
         """Snapshot-consistent read at a replication position: the
@@ -262,24 +326,8 @@ class BucketedStateTable:
             (b for b in set(ba) | set(bb) if ba.get(b) != bb.get(b)),
             key=int,
         )
-        old = self._read_dirs(
-            man_a,
-            [
-                os.path.join(self.path, r)
-                for b in changed
-                if b in ba
-                for r in self._rels(ba[b])
-            ],
-        )
-        new = self._read_dirs(
-            man_b,
-            [
-                os.path.join(self.path, r)
-                for b in changed
-                if b in bb
-                for r in self._rels(bb[b])
-            ],
-        )
+        old = self._read_dirs(man_a, self._dirs(man_a, changed))
+        new = self._read_dirs(man_b, self._dirs(man_b, changed))
         vcols = [
             f.name
             for f in new.schema.fields
@@ -329,20 +377,11 @@ class BucketedStateTable:
     ) -> DataFrame | None:
         """Bucket-pruned read: only the named buckets' directories are
         opened — the I/O analog of partition pruning, O(touched
-        buckets) regardless of table size. Buckets with no files yet
-        are silently absent (an empty bucket has no rows)."""
-        v = self.current_version() if version is None else version
-        if v is None:
+        buckets) regardless of table size."""
+        man = self._manifest(version)
+        if man is None:
             return None
-        man = self._load_manifest(v)
-        wanted = {str(int(b)) for b in bucket_ids}
-        dirs = [
-            os.path.join(self.path, r)
-            for b, rel in man["buckets"].items()
-            if b in wanted
-            for r in self._rels(rel)
-        ]
-        return self._read_dirs(man, dirs)
+        return self._read_dirs(man, self._dirs(man, bucket_ids))
 
     def _read_dirs(
         self, man: dict, dirs: list[str], session=None
@@ -370,17 +409,11 @@ class BucketedStateTable:
         """
         import pyarrow.parquet as pq
 
-        v = self.current_version() if version is None else version
-        if v is None:
+        man = self._manifest(version)
+        if man is None:
             return None
-        man = self._load_manifest(v)
         total = 0
-        dirs = [
-            os.path.join(self.path, r)
-            for rel in man["buckets"].values()
-            for r in self._rels(rel)
-        ]
-        for d in dirs:
+        for d in self._dirs(man):
             for name in os.listdir(d):
                 # every non-hidden file — the same visibility rule the
                 # parquet scan applies (names starting with '_' or '.'
@@ -395,14 +428,6 @@ class BucketedStateTable:
                     ).metadata.num_rows
         return total
 
-    def _read_manifest(self, man: dict, session=None) -> DataFrame:
-        dirs = [
-            os.path.join(self.path, r)
-            for rel in man["buckets"].values()
-            for r in self._rels(rel)
-        ]
-        return self._read_dirs(man, dirs, session=session)
-
     # --- incremental apply -------------------------------------------
 
     def apply(
@@ -412,14 +437,14 @@ class BucketedStateTable:
         *,
         lsn_col: str = "lsn",
         op_col: str = "op",
-        touched_info: tuple[set, bool] | None = None,
+        touched_info: TouchedInfo | None = None,
         batch_id: int | None = None,
         insert_only: bool = False,
     ) -> int | None:
         """Merge one batch of typed changes; rewrite only touched
         buckets. Returns the new version (or the current one for an
-        empty batch). ``touched_info=(bucket_ids, has_truncate)`` lets
-        a caller that already scanned the batch skip the scan here.
+        empty batch). ``touched_info`` lets a caller that already
+        scanned the batch (:meth:`scan`) skip the scan here.
 
         ``insert_only=True`` is the caller's GUARANTEE that no change
         key exists in the current state (e.g. the batch was anti-joined
@@ -430,13 +455,16 @@ class BucketedStateTable:
         buckets that is the difference between appending megabytes and
         rewriting terabytes per probe batch. Reads union a bucket's
         generation list (read/read_buckets/version_diff/row_count all
-        flatten it); once a touched bucket reaches ``max_generations``
-        the apply silently falls back to the merge path, folding those
-        buckets to one directory again. A violated guarantee surfaces
-        as duplicate keys in ``read()`` — the caller owns the contract
-        (this table stores final images, so it cannot re-check without
-        the probe the caller already ran). Truncates always take the
-        merge path.
+        flatten it). The apply takes the merge path instead — folding
+        the touched buckets to one directory again — when a touched
+        bucket already holds ``MAX_GENERATIONS`` generations, when the
+        batch truncates, and when it carries any op other than c/r (a
+        delete or update must reach the stored row, which an append
+        cannot). A violated guarantee — a c/r for a key already stored
+        — leaves both images in the bucket, and ``read()`` returns the
+        key twice: the caller owns the contract (this table stores
+        final images, so it cannot re-check without the probe the
+        caller already ran).
 
         ``batch_id`` (a foreachBatch epoch id) upgrades at-least-once
         replay to exactly-once apply: the committed manifest records
@@ -451,38 +479,22 @@ class BucketedStateTable:
         manifest already records batch_id=0 from the prior run, the
         first legitimate new batch would be silently dropped. Reset
         (or retarget) both together — never just the checkpoint."""
-        v_cur = self.current_version()
+        # the current manifest is loaded once and serves the replay
+        # guard, the append check, the base read, the LSN watermark
+        # and the commit
+        v_cur, man = self._current()
         if (
             batch_id is not None
-            and v_cur is not None
-            and self._load_manifest(v_cur).get("batch_id") == batch_id
+            and man is not None
+            and man.get("batch_id") == batch_id
         ):
             return v_cur
-        ch = changes.withColumn(_BUCKET, self._bucket_expr())
-
         if touched_info is None:
-            # one bounded 1-row job: which buckets does this batch
-            # touch, does it truncate (truncate wipes every key, so
-            # every bucket is dirty), and what is its high LSN (the
-            # reference's standby ack position, main.go:61-74 — free
-            # here, folded into the same scan)? A global aggregate —
-            # collect_set is capped at n_buckets — gets map-side
-            # partials and a single-row exchange, ~3x cheaper per
-            # micro-batch than a grouped shuffle.
-            info = ch.agg(
-                F.collect_set(F.col(_BUCKET)).alias("bs"),
-                F.max(F.col(op_col) == "t").alias("has_t"),
-                F.max(F.col(lsn_col)).alias("mx"),
-            ).first()
-            touched_info = (
-                set(info["bs"] or ()),
-                bool(info["has_t"]),
-                info["mx"],
-            )
-        touched, any_t = set(touched_info[0]), touched_info[1]
-        batch_max_lsn = touched_info[2] if len(touched_info) > 2 else None
+            touched_info = self.scan(changes, lsn_col=lsn_col, op_col=op_col)
+        touched = set(touched_info.buckets)
         if not touched:
             return v_cur  # empty batch: no new version
+        any_t = touched_info.has_truncate
         if any_t:
             touched = set(range(self.n_buckets))
 
@@ -491,27 +503,18 @@ class BucketedStateTable:
         append = (
             insert_only
             and not any_t
-            and v_cur is not None
-        )
-        if append:
-            man = self._load_manifest(v_cur)
-            if any(
-                len(self._rels(man["buckets"][str(b)]))
-                >= self.max_generations
+            and not touched_info.has_non_insert
+            and man is not None
+            and not any(
+                len(self._rels(man["buckets"][str(b)])) >= MAX_GENERATIONS
                 for b in touched
                 if str(b) in man["buckets"]
-            ):
-                append = False  # cap reached: fold via the merge path
+            )
+        )
 
         base = None
-        if v_cur is not None and not append:
-            man = self._load_manifest(v_cur)
-            base_dirs = [
-                os.path.join(self.path, r)
-                for b, rel in man["buckets"].items()
-                if int(b) in touched
-                for r in self._rels(rel)
-            ]
+        if man is not None and not append:
+            base_dirs = self._dirs(man, touched)
             if base_dirs:
                 # read base on the CHANGES frame's session: inside
                 # foreachBatch the batch frame lives in a cloned
@@ -523,42 +526,31 @@ class BucketedStateTable:
                 )
 
         if len(touched) < self.n_buckets:
-            ch = ch.where(F.col(_BUCKET).isin([int(b) for b in touched]))
-        # mid-stream schema evolution (the reference's migration-002
-        # story, 002_user_field.up.sql): a batch may carry payload
-        # columns the stored schema predates — widen the base with
-        # nulls so the merge sees both sides full-width; the committed
-        # manifest then records the widened schema, and inherited
-        # old buckets null-backfill on read (_read_dirs). Column DROP
-        # is deliberately not folded in (an analytics sink keeps the
-        # history; dropped columns just stop receiving values).
-        if base is not None:
-            ch_types = {f.name: f.dataType for f in ch.schema.fields}
-            for c in payload:
-                if c not in base.columns and c in ch_types:
-                    base = base.withColumn(
-                        c, F.lit(None).cast(ch_types[c])
-                    )
+            changes = changes.where(
+                self._bucket_expr().isin([int(b) for b in touched])
+            )
+        # mid-stream schema evolution: apply_changes widens the base
+        # with nulls for payload columns it predates; the committed
+        # manifest then records the widened schema, and inherited old
+        # buckets null-backfill on read (_read_dirs)
         new_state = apply_changes(
             base,
-            ch.drop(_BUCKET),
+            changes,
             self.keys,
             payload,
             lsn_col=lsn_col,
             op_col=op_col,
-            # the touched-bucket scan above already looked at every op:
-            # skip the truncate subplan when none is present
+            # the touched-bucket scan already looked at every op: skip
+            # the truncate subplan when none is present
             may_truncate=any_t,
         )
 
         # applied-LSN watermark: the confirmed replication position
         # (monotone across versions; the analog of the standby status
         # update the reference sends every 10s)
-        prev_lsn = None
-        if v_cur is not None:
-            prev_lsn = self._load_manifest(v_cur).get("applied_lsn")
+        prev_lsn = man.get("applied_lsn") if man is not None else None
         applied = max(
-            (x for x in (prev_lsn, batch_max_lsn) if x is not None),
+            (x for x in (prev_lsn, touched_info.max_lsn) if x is not None),
             default=None,
         )
         meta: dict = {}
@@ -567,7 +559,7 @@ class BucketedStateTable:
         if applied is not None:
             meta["applied_lsn"] = applied
         return self._commit_new_version(
-            new_state, touched, v_cur, meta or None, append=append
+            new_state, touched, man, meta or None, append=append
         )
 
     def vacuum(self, *, keep_last: int = 2) -> dict:
@@ -622,10 +614,9 @@ class BucketedStateTable:
         reference acks its applied LSN upstream every 10s,
         main.go:61-74; here the manifest IS the ack record). Pure
         manifest reads, no Spark job."""
-        v = self.current_version()
-        if v is None:
+        v, man = self._current()
+        if man is None:
             return None
-        man = self._load_manifest(v)
         return {
             "version": v,
             "applied_lsn": man.get("applied_lsn"),
@@ -648,19 +639,21 @@ class BucketedStateTable:
         that already computed the buckets' final rows — no merge.
         ``extra_meta`` lands in the new version's manifest (e.g. the
         row-state version a derived aggregate reflects)."""
-        v_cur = self.current_version() if version is None else version
         return self._commit_new_version(
-            new_rows, {int(b) for b in bucket_ids}, v_cur, extra_meta
+            new_rows,
+            {int(b) for b in bucket_ids},
+            self._manifest(version),
+            extra_meta,
         )
 
     def commit_meta(self, extra_meta: dict, *, version: int | None = None) -> int:
         """Metadata-only commit: a new version inheriting every bucket
         unchanged, with ``extra_meta`` merged into the manifest. No
         Spark job — pure manifest/pointer work."""
-        v_cur = self.current_version() if version is None else version
-        if v_cur is None:
+        prev = self._manifest(version)
+        if prev is None:
             raise ValueError("commit_meta requires an existing version")
-        prev = self._load_manifest(v_cur)
+        v_cur = prev["version"]
         v_new = v_cur + 1
         os.makedirs(self._version_dir(v_new), exist_ok=True)
         manifest = {
@@ -684,14 +677,18 @@ class BucketedStateTable:
         self,
         new_state: DataFrame,
         touched: set,
-        v_cur: int | None,
+        prev: dict | None,
         extra_meta: dict | None = None,
         *,
         append: bool = False,
     ) -> int:
-        prev_buckets: dict[str, str | list] = {}
-        if v_cur is not None:
-            prev_buckets = self._load_manifest(v_cur)["buckets"]
+        """Write ``new_state`` into the touched buckets of the version
+        after ``prev`` (the manifest planned against; None on an empty
+        table) and commit it."""
+        v_cur = prev["version"] if prev is not None else None
+        prev_buckets: dict[str, str | list] = (
+            prev["buckets"] if prev is not None else {}
+        )
         v_new = (v_cur or 0) + 1
         target = self._version_dir(v_new)
         # no pre-write repartition (saves a full shuffle of the touched

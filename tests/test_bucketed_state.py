@@ -704,15 +704,17 @@ def test_insert_only_append_generations(spark, tmp_path):
     assert diff == {("c", i) for i in range(100, 110)}
 
 
-def test_insert_only_generation_cap_folds(spark, tmp_path):
-    """At max_generations the apply falls back to the merge path and
+def test_insert_only_generation_cap_folds(spark, tmp_path, monkeypatch):
+    """At MAX_GENERATIONS the apply falls back to the merge path and
     the touched buckets fold to a single directory again."""
+    import cdc_spark.streaming.state as state_mod
+
+    monkeypatch.setattr(state_mod, "MAX_GENERATIONS", 2)
     t = BucketedStateTable(
         spark,
         str(tmp_path / "cap"),
         ["id"],
         n_buckets=2,
-        max_generations=2,
     )
     t.apply(
         _changes(spark, [(i, "s", i, "c", i) for i in range(1, 5)]),
@@ -737,6 +739,27 @@ def test_insert_only_generation_cap_folds(spark, tmp_path):
         not isinstance(rel, list) for rel in man["buckets"].values()
     )
     assert t.read().count() == 12 == t.row_count()
+
+
+def test_insert_only_batch_with_delete_takes_merge_path(spark, tmp_path):
+    """An insert_only batch that deletes a stored key must not append:
+    an appended generation cannot remove the stored image, so the
+    delete would be dropped. The apply takes the merge path and the
+    key is gone."""
+    t = BucketedStateTable(
+        spark, str(tmp_path / "del"), ["id"], n_buckets=4
+    )
+    t.apply(
+        _changes(spark, [(i, "s", i, "c", i) for i in range(1, 5)]),
+        ["name", "qty"],
+    )
+    t.apply(
+        _changes(spark, [(2, None, None, "d", 10), (7, "n", 7, "c", 11)]),
+        ["name", "qty"],
+        insert_only=True,
+    )
+    assert sorted(r.id for r in t.read().collect()) == [1, 3, 4, 7]
+    assert t.row_count() == 4
 
 
 def test_vacuum_pins_generation_heads(spark, tmp_path):

@@ -111,6 +111,42 @@ def test_truncate_rebuilds_aggregate(spark, tmp_path):
     assert _agg_rows(inc) == _recompute(inc)
 
 
+def test_schema_evolution_widens_pre_images(spark, tmp_path):
+    """A batch carrying a column added by a migration (the reference's
+    002_user_field) folds against pre-images that predate it: the
+    missing column reads as null, the aggregate equals the recompute,
+    and rows the batch did not rewrite carry a null ``phone``."""
+    inc = _mk(spark, tmp_path)
+    inc.apply(
+        spark.createDataFrame(
+            [
+                ("c", 1, 1, "a", 1.0),
+                ("c", 2, 2, "a", 2.0),
+                ("c", 3, 3, "b", 4.0),
+            ],
+            SCHEMA,
+        ),
+        PAYLOAD,
+    )
+    wide = "op string, lsn long, k long, grp string, v double, phone string"
+    inc.apply(
+        spark.createDataFrame(
+            [("u", 4, 1, "b", None, "555"), ("c", 5, 4, "a", 8.0, "556")],
+            wide,
+        ),
+        [*PAYLOAD, "phone"],
+    )
+    assert _agg_rows(inc) == _recompute(inc)
+    assert _agg_rows(inc) == [("a", 2, 10.0), ("b", 2, 5.0)]
+    rows = {r.k: (r.grp, r.v, r.phone) for r in inc.state.read().collect()}
+    assert rows == {
+        1: ("b", 1.0, "555"),
+        2: ("a", 2.0, None),
+        3: ("b", 4.0, None),
+        4: ("a", 8.0, "556"),
+    }
+
+
 def test_cold_start_first_batch(spark, tmp_path):
     inc = _mk(spark, tmp_path)
     inc.apply(

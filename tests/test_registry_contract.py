@@ -163,6 +163,14 @@ def test_fingerprint_covers_shared_operators():
         "cdc_spark.operators.dedup.portable_hash60"
         in collect_sources(REGISTRY["dd21_production_recall_eval"].fn)
     )
+    # a global referenced only from a property getter (vars() hands
+    # back the property object, which isfunction() rejects)
+    from cdc_spark.cdc.registry import ColumnSpec
+
+    assert (
+        "cdc_spark.cdc.typemap.spark_type_for_pg_name"
+        in collect_sources(ColumnSpec)
+    )
     # sensitivity: a one-character oracle change moves the print
     tampered = dataclasses.replace(
         spec, oracle=(spec.oracle or "") + " "

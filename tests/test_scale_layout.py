@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cdc_spark.catalog import load_table
-from cdc_spark.streaming.pipeline import VersionedStateTable
+from cdc_spark.streaming.state import BucketedStateTable
 
 SF = "/root/testdata/sf0.001"
 
@@ -92,13 +92,18 @@ def test_partitioned_write_prunes_at_scan(spark):
 
 def test_state_time_travel(spark):
     with tempfile.TemporaryDirectory() as d:
-        t = VersionedStateTable(spark, d)
-        t.write(spark.createDataFrame([(1, "v1")], "id int, v string"))
-        t.write(spark.createDataFrame([(1, "v2"), (2, "v2")], "id int, v string"))
+        t = BucketedStateTable(spark, d, ["id"], n_buckets=1)
+        t.overwrite_buckets(
+            spark.createDataFrame([(1, "v1")], "id int, v string"), [0]
+        )
+        t.overwrite_buckets(
+            spark.createDataFrame([(1, "v2"), (2, "v2")], "id int, v string"),
+            [0],
+        )
         assert t.read().count() == 2
         old = t.read(version=1)
         assert old.count() == 1 and old.first().v == "v1"
-        with pytest.raises(ValueError):
+        with pytest.raises(FileNotFoundError):
             t.read(version=99)
 
 

@@ -147,17 +147,20 @@ def test_kafka_connectors_configure_without_broker(spark):
 
 def test_compaction_reduces_files_preserves_content(spark, tmp_path):
     from cdc_spark.operators.maintenance import (
-        compact,
+        compact_buckets,
         dir_file_stats,
         needs_compaction,
     )
-    from cdc_spark.streaming.pipeline import VersionedStateTable
+    from cdc_spark.streaming.state import BucketedStateTable
 
-    state = VersionedStateTable(spark, str(tmp_path / "tbl"))
+    state = BucketedStateTable(
+        spark, str(tmp_path / "tbl"), ["id"], n_buckets=1
+    )
     df = spark.range(10_000).select(
         F.col("id"), (F.col("id") % 7).alias("k")
     )
-    v1 = state.write(df.repartition(64))  # fragmented: 64 tiny files
+    # fragmented: 64 tiny files
+    v1 = state.overwrite_buckets(df.repartition(64), [0])
 
     import os
 
@@ -165,7 +168,7 @@ def test_compaction_reduces_files_preserves_content(spark, tmp_path):
     assert stats["n_files"] == 64
     assert needs_compaction(stats, target_file_bytes=1 << 20)
 
-    v2 = compact(state, target_file_bytes=1 << 20, sort_by=["id"])
+    v2 = compact_buckets(state, target_file_bytes=1 << 20)
     stats2 = dir_file_stats(os.path.join(state.path, f"v{v2}"))
     assert stats2["n_files"] < 8
     assert not needs_compaction(stats2, target_file_bytes=1 << 20)

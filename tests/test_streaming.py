@@ -14,11 +14,11 @@ from pyspark.sql import functions as F
 from cdc_spark.cdc.registry import SchemaRegistry
 from cdc_spark.streaming.pipeline import (
     CdcStreamPipeline,
-    VersionedStateTable,
     sessionized_counts,
     stream_dedup,
     windowed_agg,
 )
+from cdc_spark.streaming.state import BucketedStateTable
 
 
 def _users_registry() -> SchemaRegistry:
@@ -127,10 +127,14 @@ def test_checkpoint_restart_no_reprocessing(spark, dirs):
 
 def test_versioned_state_table_swap(spark):
     with tempfile.TemporaryDirectory() as d:
-        t = VersionedStateTable(spark, d)
+        t = BucketedStateTable(spark, d, ["id"], n_buckets=1)
         assert t.read() is None
-        t.write(spark.createDataFrame([(1, "a")], "id int, v string"))
-        t.write(spark.createDataFrame([(2, "b")], "id int, v string"))
+        t.overwrite_buckets(
+            spark.createDataFrame([(1, "a")], "id int, v string"), [0]
+        )
+        t.overwrite_buckets(
+            spark.createDataFrame([(2, "b")], "id int, v string"), [0]
+        )
         assert t.current_version() == 2
         assert t.read().collect()[0].id == 2
 
