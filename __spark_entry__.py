@@ -436,6 +436,16 @@ _R15_NEXT: tuple[str, ...] = (
     "st16_cdf_consumer_agg",
     "st17_stream_schema_evolution",
     "st22_stream_scd2_build",
+    # evaluate-once applies (the touched-bucket scan checkpoints the
+    # batch) drift every state-closure entry above again; the IVF/PQ
+    # builders' _spread now reads maxPartitionBytes with unit suffixes
+    # — these six were last gated in the r14 prefix
+    "ss06_ivf_persisted_index",
+    "ss16_pq_persisted_index",
+    "ss17_ivfpq_index",
+    "ss23_filtered_ivfpq_probe",
+    "ss25_ivf_sized_serving",
+    "st20_stream_vector_index_ingest",
 )
 
 _R10_RANK = {n: i for i, n in enumerate(_R10_PREFIX)}

@@ -259,6 +259,17 @@ def apply_changes(
 
     fold = _fold_ctes(ch_src, keys, payload, lsn_col, op_col)
     ctes = f"WITH {tr_ctes}{fold}"
+    # ``changes`` (and ``base``) bind through spark.sql's DataFrame
+    # arguments, which is why ``persist()`` is the wrong tool for a
+    # batch this merge reads: PySpark registers each argument as a
+    # temp view and drops the view once the text is analyzed, and
+    # dropping a view uncaches its plan. The optimized plan then keeps
+    # the frame's own leaf (a ``LogicalRDD``), never an
+    # ``InMemoryRelation`` — the batch re-runs its source and the
+    # persist only adds its caching cost (measured slower). A caller
+    # that reads a batch more than once materializes it with
+    # ``localCheckpoint`` instead, whose stored blocks ARE the plan's
+    # leaf on any path (``streaming.state._local_checkpoints``).
 
     if base is None:
         # cold start: no prior rows to carry over or coalesce against

@@ -54,18 +54,15 @@ def _spread(df: DataFrame) -> DataFrame:
     measured) and can execute shuffle stages outright."""
     n = _session_parallelism(df)
     try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        split = int(
-            df.sparkSession.conf.get(
-                "spark.sql.files.maxPartitionBytes", str(128 << 20)
-            )
-        )
-        if size >= n * split:
-            return df  # already ≥ parallelism splits wide
-    except Exception:  # noqa: BLE001 — e.g. Connect: no _jdf surface
-        pass
+        jdf = df._jdf
+    except AttributeError:  # e.g. Connect: no _jdf surface
+        return df.repartition(n)
+    size = int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    # the session conf's own byte reader: takes unit suffixes ("128m")
+    # as the scan planner does, not only a bare byte count
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    if size >= n * conf.filesMaxPartitionBytes():
+        return df  # already ≥ parallelism splits wide
     return df.repartition(n)
 
 

@@ -11,7 +11,9 @@ rewrite, never a full-table one.
 Per batch the work is:
 
 1. one 1-row scan of the batch (``BucketedStateTable.scan``): touched
-   buckets, truncate flag, high LSN;
+   buckets, truncate flag, high LSN. The same job materializes the
+   batch, so every later step reads stored blocks
+   (``state._local_checkpoints``);
 2. bucket-pruned read of the row-state buckets the batch touches,
    semi-joined to the batch's keys → pre-images;
 3. ``agg_delta_from_batch`` folds the batch with the row-state merge's
@@ -23,7 +25,8 @@ Per batch the work is:
    with the delta, and the touched aggregate buckets are rewritten
    through ``overwrite_buckets`` — groups whose row count reaches zero
    are simply not written, so the aggregate table never carries empty
-   groups.
+   groups;
+5. the batch's and the delta's checkpoint blocks are released.
 
 State size appears nowhere: both sides cost O(batch + touched
 buckets). A truncate in the batch degrades to O(state) by necessity
@@ -48,7 +51,7 @@ from cdc_spark.cdc.ivm import (
     finish_agg,
     merge_agg,
 )
-from cdc_spark.streaming.state import BucketedStateTable
+from cdc_spark.streaming.state import BucketedStateTable, _local_checkpoints
 
 _BUCKET = "__bucket"
 
@@ -96,7 +99,9 @@ class IncrementalAggregate:
 
         Returns the new row-state version. One bounded 1-row scan job
         per batch (``BucketedStateTable.scan``): its record is passed
-        down, so the row-state apply does not scan again.
+        down, so the row-state apply does not scan again. That job
+        also materializes the batch, so each change row is evaluated
+        once per apply (``state._local_checkpoints``).
         """
         from cdc_spark.cdc.merge import apply_changes
 
@@ -114,43 +119,49 @@ class IncrementalAggregate:
             return v_cur
         self._sync_with_state(v_cur)
 
-        touched_info = st.scan(changes, lsn_col=lsn_col, op_col=op_col)
-        if not touched_info.buckets:
-            return v_cur
+        with _local_checkpoints() as checkpoint:
+            changes = checkpoint(changes)  # filled by the scan job
+            touched_info = st.scan(changes, lsn_col=lsn_col, op_col=op_col)
+            if not touched_info.buckets:
+                return v_cur
+            if touched_info.has_truncate:
+                # truncate: every key dies — O(state) by necessity.
+                # Compute post in-plan (apply_changes over the whole old
+                # state) and diff against the full pre image.
+                pre = (
+                    st.read(version=v_cur, session=changes.sparkSession)
+                    if v_cur is not None
+                    else None
+                )
+                post = apply_changes(
+                    pre,
+                    changes,
+                    st.keys,
+                    payload,
+                    lsn_col=lsn_col,
+                    op_col=op_col,
+                    may_truncate=True,
+                )
+                delta = checkpoint(
+                    agg_delta(
+                        pre,
+                        post,
+                        self.group_cols,
+                        self.measures,
+                        scale=self.scale,
+                    )
+                )
+                v_new = st.apply(
+                    changes,
+                    payload,
+                    lsn_col=lsn_col,
+                    op_col=op_col,
+                    touched_info=touched_info,
+                    batch_id=batch_id,
+                )
+                self._merge_delta(delta, row_version=v_new)
+                return v_new
 
-        if touched_info.has_truncate:
-            # truncate: every key dies — O(state) by necessity. Compute
-            # post in-plan (apply_changes over the whole old state) and
-            # diff against the full pre image.
-            pre = (
-                st.read(version=v_cur, session=changes.sparkSession)
-                if v_cur is not None
-                else None
-            )
-            post = apply_changes(
-                pre,
-                changes,
-                st.keys,
-                payload,
-                lsn_col=lsn_col,
-                op_col=op_col,
-                may_truncate=True,
-            )
-            delta = agg_delta(
-                pre, post, self.group_cols, self.measures, scale=self.scale
-            )
-            delta = delta.localCheckpoint(eager=False)
-            v_new = st.apply(
-                changes,
-                payload,
-                lsn_col=lsn_col,
-                op_col=op_col,
-                touched_info=touched_info,
-                batch_id=batch_id,
-            )
-            self._merge_delta(delta, row_version=v_new)
-            return v_new
-        else:
             # common path: ONE fold computes both sides of the delta.
             # Pre-images come from a bucket-pruned read semi-joined to
             # the batch's keys; the batch's per-key post-images are
@@ -182,34 +193,38 @@ class IncrementalAggregate:
                 op_col=op_col,
                 scale=self.scale,
             )
-        # the delta is group-cardinality-sized but its subtree reads
-        # the pre-image buckets; downstream actions (agg bucket scan,
-        # the writes) would each re-evaluate it — checkpoint once, then
-        # every consumer reads the tiny result. The checkpoint reads
-        # v_cur's immutable files, so it is independent of the row-state
-        # write: its analysis + materialization run in a worker thread
-        # CONCURRENTLY with the row-state apply (Spark schedules jobs
-        # from separate threads fine), overlapping the two dominant
-        # per-batch latencies — Catalyst analysis of the fold plan and
-        # the bucket-rewrite write job — instead of paying them
-        # serially.
-        def _materialize_delta():
-            d = delta.localCheckpoint(eager=False)
-            return d, self._delta_buckets(d)
 
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(_materialize_delta)
-            v_new = st.apply(
-                changes,
-                payload,
-                lsn_col=lsn_col,
-                op_col=op_col,
-                touched_info=touched_info,
-                batch_id=batch_id,
+            # the delta is group-cardinality-sized but its subtree reads
+            # the pre-image buckets; downstream actions (agg bucket
+            # scan, the writes) would each re-evaluate it — checkpoint
+            # once, then every consumer reads the tiny result. The
+            # checkpoint reads v_cur's immutable files, so it is
+            # independent of the row-state write: its analysis +
+            # materialization run in a worker thread CONCURRENTLY with
+            # the row-state apply (Spark schedules jobs from separate
+            # threads fine), overlapping the two dominant per-batch
+            # latencies — Catalyst analysis of the fold plan and the
+            # bucket-rewrite write job — instead of paying them
+            # serially.
+            def _materialize_delta():
+                d = checkpoint(delta)
+                return d, self._delta_buckets(d)
+
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                fut = pool.submit(_materialize_delta)
+                v_new = st.apply(
+                    changes,
+                    payload,
+                    lsn_col=lsn_col,
+                    op_col=op_col,
+                    touched_info=touched_info,
+                    batch_id=batch_id,
+                )
+                delta_ck, bucket_ids = fut.result()
+            self._merge_delta(
+                delta_ck, row_version=v_new, bucket_ids=bucket_ids
             )
-            delta_ck, bucket_ids = fut.result()
-        self._merge_delta(delta_ck, row_version=v_new, bucket_ids=bucket_ids)
-        return v_new
+            return v_new
 
     # --- agg/state consistency ---------------------------------------
     def _sync_with_state(self, v_cur: int | None) -> None:
@@ -273,10 +288,13 @@ class IncrementalAggregate:
                 extra_meta={"row_version": v_cur},
             )
             return
-        delta = agg_delta(
-            pre, post, self.group_cols, self.measures, scale=self.scale
-        ).localCheckpoint(eager=False)
-        self._merge_delta(delta, row_version=v_cur)
+        with _local_checkpoints() as checkpoint:
+            delta = checkpoint(
+                agg_delta(
+                    pre, post, self.group_cols, self.measures, scale=self.scale
+                )
+            )
+            self._merge_delta(delta, row_version=v_cur)
 
     def _delta_buckets(self, delta: DataFrame) -> list[int]:
         """Materialize the (checkpointed) delta and return the agg

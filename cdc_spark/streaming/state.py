@@ -32,7 +32,8 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -111,6 +112,46 @@ def local_fs_path(path: str) -> str:
     if path.startswith("file:"):
         return path[len("file:") :]
     return path
+
+
+@contextmanager
+def _local_checkpoints() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Evaluate-once scope for the frames an apply reads repeatedly.
+
+    Yields ``checkpoint(df)``, which returns ``df.localCheckpoint(
+    eager=False)``: no job runs, and the first action over the result
+    (the apply's 1-row touched-bucket scan for a change batch) stores
+    its partitions on the executors while it computes them. Every
+    later read — the IVM delta fold, the pre-image key semi-join, the
+    state merge — reads those blocks instead of re-running the batch's
+    source, so each change row is evaluated once per apply. That pays
+    for a source that is costly to re-run (rows built in Python, a
+    decode). A parquet-backed batch is not helped: the scan job used
+    to read only its key, op and lsn columns and now copies whole
+    rows, which measured slower for wide batches. Not ``persist()``:
+    see the note in ``merge.apply_changes``.
+
+    On exit every checkpoint taken in the scope drops its blocks at
+    once; left to garbage collection, a long stream would hold every
+    batch's blocks. The blocks live on executors, not in reliable
+    storage, and nothing can recompute them: a lost executor makes
+    the apply raise instead of rebuilding the rows from lineage. A
+    stream replays the failed batch (the ``batch_id`` guard keeps the
+    replay exactly-once); any other caller must retry the apply
+    itself. ``checkpoint`` may be called from a worker thread."""
+    held: list[DataFrame] = []
+
+    def checkpoint(df: DataFrame) -> DataFrame:
+        ck = df.localCheckpoint(eager=False)
+        held.append(ck)
+        return ck
+
+    try:
+        yield checkpoint
+    finally:
+        for ck in held:
+            # the checkpoint's plan is the LogicalRDD over the marked RDD
+            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _fsync_replace(tmp: str, dst: str, payload: str) -> None:
@@ -444,7 +485,9 @@ class BucketedStateTable:
         """Merge one batch of typed changes; rewrite only touched
         buckets. Returns the new version (or the current one for an
         empty batch). ``touched_info`` lets a caller that already
-        scanned the batch (:meth:`scan`) skip the scan here.
+        scanned the batch (:meth:`scan`) skip the scan here; an apply
+        that scans itself evaluates the batch once
+        (:func:`_local_checkpoints`).
 
         ``insert_only=True`` is the caller's GUARANTEE that no change
         key exists in the current state (e.g. the batch was anti-joined
@@ -489,78 +532,83 @@ class BucketedStateTable:
             and man.get("batch_id") == batch_id
         ):
             return v_cur
-        if touched_info is None:
-            touched_info = self.scan(changes, lsn_col=lsn_col, op_col=op_col)
-        touched = set(touched_info.buckets)
-        if not touched:
-            return v_cur  # empty batch: no new version
-        any_t = touched_info.has_truncate
-        if any_t:
-            touched = set(range(self.n_buckets))
-
-        # insert-only append path: no base read, no merge joins — the
-        # fold of the batch alone IS the buckets' delta content
-        append = (
-            insert_only
-            and not any_t
-            and not touched_info.has_non_insert
-            and man is not None
-            and not any(
-                len(self._rels(man["buckets"][str(b)])) >= MAX_GENERATIONS
-                for b in touched
-                if str(b) in man["buckets"]
-            )
-        )
-
-        base = None
-        if man is not None and not append:
-            base_dirs = self._dirs(man, touched)
-            if base_dirs:
-                # read base on the CHANGES frame's session: inside
-                # foreachBatch the batch frame lives in a cloned
-                # micro-batch session, and apply_changes' one-parse
-                # SQL resolves both relations in one session — a
-                # base bound to the outer session would not resolve
-                base = self._read_dirs(
-                    man, base_dirs, session=changes.sparkSession
+        with _local_checkpoints() as checkpoint:
+            if touched_info is None:
+                changes = checkpoint(changes)  # filled by the scan job
+                touched_info = self.scan(
+                    changes, lsn_col=lsn_col, op_col=op_col
                 )
+            touched = set(touched_info.buckets)
+            if not touched:
+                return v_cur  # empty batch: no new version
+            any_t = touched_info.has_truncate
+            if any_t:
+                touched = set(range(self.n_buckets))
 
-        if len(touched) < self.n_buckets:
-            changes = changes.where(
-                self._bucket_expr().isin([int(b) for b in touched])
+            # insert-only append path: no base read, no merge joins —
+            # the fold of the batch alone IS the buckets' delta content
+            append = (
+                insert_only
+                and not any_t
+                and not touched_info.has_non_insert
+                and man is not None
+                and not any(
+                    len(self._rels(man["buckets"][str(b)]))
+                    >= MAX_GENERATIONS
+                    for b in touched
+                    if str(b) in man["buckets"]
+                )
             )
-        # mid-stream schema evolution: apply_changes widens the base
-        # with nulls for payload columns it predates; the committed
-        # manifest then records the widened schema, and inherited old
-        # buckets null-backfill on read (_read_dirs)
-        new_state = apply_changes(
-            base,
-            changes,
-            self.keys,
-            payload,
-            lsn_col=lsn_col,
-            op_col=op_col,
-            # the touched-bucket scan already looked at every op: skip
-            # the truncate subplan when none is present
-            may_truncate=any_t,
-        )
 
-        # applied-LSN watermark: the confirmed replication position
-        # (monotone across versions; the analog of the standby status
-        # update the reference sends every 10s)
-        prev_lsn = man.get("applied_lsn") if man is not None else None
-        applied = max(
-            (x for x in (prev_lsn, touched_info.max_lsn) if x is not None),
-            default=None,
-        )
-        meta: dict = {}
-        if batch_id is not None:
-            meta["batch_id"] = batch_id
-        if applied is not None:
-            meta["applied_lsn"] = applied
-        return self._commit_new_version(
-            new_state, touched, man, meta or None, append=append
-        )
+            base = None
+            if man is not None and not append:
+                base_dirs = self._dirs(man, touched)
+                if base_dirs:
+                    # read base on the CHANGES frame's session: inside
+                    # foreachBatch the batch frame lives in a cloned
+                    # micro-batch session, and apply_changes' one-parse
+                    # SQL resolves both relations in one session — a
+                    # base bound to the outer session would not resolve
+                    base = self._read_dirs(
+                        man, base_dirs, session=changes.sparkSession
+                    )
+
+            if len(touched) < self.n_buckets:
+                changes = changes.where(
+                    self._bucket_expr().isin([int(b) for b in touched])
+                )
+            # mid-stream schema evolution: apply_changes widens the
+            # base with nulls for payload columns it predates; the
+            # committed manifest then records the widened schema, and
+            # inherited old buckets null-backfill on read (_read_dirs)
+            new_state = apply_changes(
+                base,
+                changes,
+                self.keys,
+                payload,
+                lsn_col=lsn_col,
+                op_col=op_col,
+                # the touched-bucket scan already looked at every op:
+                # skip the truncate subplan when none is present
+                may_truncate=any_t,
+            )
+
+            # applied-LSN watermark: the confirmed replication
+            # position (monotone across versions; the analog of the
+            # standby status update the reference sends every 10s)
+            prev_lsn = man.get("applied_lsn") if man is not None else None
+            applied = max(
+                (x for x in (prev_lsn, touched_info.max_lsn) if x is not None),
+                default=None,
+            )
+            meta: dict = {}
+            if batch_id is not None:
+                meta["batch_id"] = batch_id
+            if applied is not None:
+                meta["applied_lsn"] = applied
+            return self._commit_new_version(
+                new_state, touched, man, meta or None, append=append
+            )
 
     def vacuum(self, *, keep_last: int = 2) -> dict:
         """Version GC: drop history beyond the last ``keep_last``

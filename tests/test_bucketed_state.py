@@ -805,3 +805,37 @@ def test_compact_folds_generations(spark, tmp_path):
     assert all(not isinstance(rel, list) for rel in man["buckets"].values())
     assert {tuple(r) for r in t.read().collect()} == before
     assert t.row_count() == len(before)
+
+
+def test_self_scanning_apply_evaluates_each_change_once(spark, tmp_path):
+    """An apply that scans its own batch materializes it in that scan:
+    the merge reads the stored blocks, so the batch's source runs once
+    per row per apply, and the blocks are released on return."""
+    t = BucketedStateTable(
+        spark, str(tmp_path / "once"), ["id"], n_buckets=4
+    )
+    t.apply(
+        _changes(spark, [(i, "s", i, "c", i) for i in range(1, 5)]),
+        ["name", "qty"],
+    )
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(i):
+        seen.add(1)
+        return i
+
+    rows = [(2, "u", 20, "u", 10), (3, None, None, "d", 11), (9, "n", 9, "c", 12)]
+    batch = _changes(spark, rows).withColumn(
+        "id", F.udf(count, "long")("id")
+    )
+    stored = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    before = {i.id() for i in stored()}
+    t.apply(batch, ["name", "qty"])
+    assert seen.value == len(rows)
+    assert {i.id() for i in stored()} <= before
+    assert sorted((r.id, r.name, r.qty) for r in t.read().collect()) == [
+        (1, "s", 1),
+        (2, "u", 20),
+        (4, "s", 4),
+        (9, "n", 9),
+    ]

@@ -212,9 +212,8 @@ def test_spread_skips_repartition_when_input_is_wide(spark):
         # narrow case (default 128 MiB splits, 1-file corpus): the
         # spread must add a round-robin exchange
         narrow = _spread(emb)
-        assert "Exchange RoundRobinPartitioning" in narrow._jdf.queryExecution().executedPlan().toString() or (
-            narrow is not emb
-        )
+        plan = narrow._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange RoundRobinPartitioning" in plan
         assert narrow is not emb
 
         # wide case (1-byte splits make the same input count as
@@ -223,5 +222,12 @@ def test_spread_skips_repartition_when_input_is_wide(spark):
         spark.conf.set(key, "1")
         wide = _spread(emb)
         assert wide is emb
+
+        # byte-unit values are read as the scan planner reads them:
+        # "1k" splits make the input wide, "128m" keeps it narrow
+        spark.conf.set(key, "1k")
+        assert _spread(emb) is emb
+        spark.conf.set(key, "128m")
+        assert _spread(emb) is not emb
     finally:
         spark.conf.set(key, prev)

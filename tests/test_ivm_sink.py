@@ -336,3 +336,83 @@ def test_torn_state_manifest_triggers_rebuild(spark, tmp_path):
     # sync must fall back to the full rebuild from the intact v_cur
     inc._sync_with_state(v_cur)
     assert _agg_rows(inc) == _recompute(inc)
+
+
+def _counted(spark, rows):
+    """A change batch whose every row evaluation bumps an accumulator
+    (a Python UDF over the key), to count how often an apply re-runs
+    the batch's source."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(k):
+        seen.add(1)
+        return k
+
+    df = spark.createDataFrame(rows, SCHEMA).withColumn(
+        "k", F.udf(count, "long")("k")
+    )
+    return df, seen
+
+
+def _stored_rdds(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [("u", 3, 1, "b", 5.0), ("c", 4, 3, "a", 7.0), ("d", 5, 2, None, None)],
+        [("t", 3, None, None, None), ("c", 4, 3, "a", 7.0)],
+    ],
+    ids=["common", "truncate"],
+)
+def test_apply_evaluates_each_change_once(spark, tmp_path, rows):
+    """The touched-bucket scan materializes the batch: the delta fold,
+    the pre-image key semi-join and the row-state merge read the
+    stored blocks, so the source runs once per row per apply."""
+    inc = _mk(spark, tmp_path)
+    inc.apply(
+        spark.createDataFrame(
+            [("c", 1, 1, "a", 1.0), ("c", 2, 2, "b", 2.0)], SCHEMA
+        ),
+        PAYLOAD,
+    )
+    batch, seen = _counted(spark, rows)
+    inc.apply(batch, PAYLOAD)
+    assert seen.value == len(rows)
+    assert _agg_rows(inc) == _recompute(inc)
+
+
+def test_apply_releases_checkpoint_blocks(spark, tmp_path):
+    """The batch's and the delta's checkpoint blocks are dropped when
+    an apply returns — common path, truncate path and the resync — so
+    a long stream does not hold every batch's blocks until a GC."""
+    inc = _mk(spark, tmp_path)
+    before = _stored_rdds(spark)
+    inc.apply(
+        spark.createDataFrame(
+            [("c", 1, 1, "a", 1.0), ("c", 2, 2, "b", 2.0)], SCHEMA
+        ),
+        PAYLOAD,
+    )
+    assert _stored_rdds(spark) <= before
+    inc.apply(
+        spark.createDataFrame([("u", 3, 1, "b", 4.0)], SCHEMA), PAYLOAD
+    )
+    assert _stored_rdds(spark) <= before
+    inc.apply(
+        spark.createDataFrame(
+            [("t", 4, None, None, None), ("c", 5, 3, "a", 7.0)], SCHEMA
+        ),
+        PAYLOAD,
+    )
+    assert _stored_rdds(spark) <= before
+    # a row-state-only commit: the next apply resyncs the aggregate
+    inc.state.apply(
+        spark.createDataFrame([("c", 6, 4, "c", 1.0)], SCHEMA), PAYLOAD
+    )
+    inc.apply(
+        spark.createDataFrame([("c", 7, 5, "c", 2.0)], SCHEMA), PAYLOAD
+    )
+    assert _stored_rdds(spark) <= before
+    assert _agg_rows(inc) == _recompute(inc)
