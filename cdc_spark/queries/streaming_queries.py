@@ -16,7 +16,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_spark.catalog import load_table, normalize_event_time, table_path
+from cdc_spark.catalog import (
+    load_table,
+    normalize_event_time,
+    table_path,
+    table_schema,
+)
 from cdc_spark.queries.base import await_stream, dsum_sql, register
 from cdc_spark.streaming.pipeline import (
     sessionized_counts,
@@ -34,12 +39,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_path(sf_dir, "events"),
         os.path.join(stream_dir, "events.parquet"),
     )
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(table_path(sf_dir, "events")).schema
-        )
-        .parquet(stream_dir)
-    )
+    schema = table_schema(spark, sf_dir, "events")
+    raw = spark.readStream.schema(schema).parquet(stream_dir)
     # same bigint/timestamp_ntz → TIMESTAMP canonicalization the batch
     # catalog applies (watermarks reject TIMESTAMP_NTZ event time)
     raw = normalize_event_time(raw, "ts")
