@@ -120,9 +120,11 @@ def agg_delta_from_batch(
     shuffle + one group shuffle; ``pre_rows`` is scanned once.
 
     ``pre_rows`` must be restricted to the batch's keys (semi join or
-    bucket pruning) and must NOT contain truncates-survivors logic —
-    callers handle ``op='t'`` batches via the generic path. ``None``
-    means cold start. Payload columns the pre-images predate are
+    bucket pruning), and the batch must not truncate: a truncate
+    changes keys the batch never names. ``IncrementalAggregate``
+    applies such a batch to the row state first and folds
+    ``agg_delta`` over the full pre and post images. ``None`` means
+    cold start. Payload columns the pre-images predate are
     widened with nulls, as the row-state merge does.
     """
     from cdc_spark.cdc.merge import _fold_ctes, _post_image, _q, widen

@@ -10,21 +10,18 @@ deck's sync-to-analytics-DB pattern (CDC_small.pdf slides 33-37) does.
 
 Compaction here is expressed as a *versioned rewrite*: read the
 fragmented buckets, repartition them to the byte-budgeted file count,
-and publish as a new immutable version via the same atomic pointer
-swap the streaming sink uses. Readers never see a half-compacted
-table, and the pre-compaction version stays readable (time travel /
-audit).
+and publish as a new immutable version through the state table's
+one commit path, the same atomic pointer swap the streaming sink
+uses. Readers never see a half-compacted table, and the
+pre-compaction version stays readable (time travel / audit).
 """
 
 from __future__ import annotations
 
-import json
 import math
 import os
 
-from pyspark.sql import functions as F
-
-from cdc_spark.streaming.state import BucketedStateTable, _fsync_replace
+from cdc_spark.streaming.state import BucketedStateTable
 
 
 def dir_file_stats(path: str) -> dict:
@@ -74,94 +71,57 @@ def compact_buckets(
 
     A micro-batch sink accretes files per touched bucket (one file set
     per apply); this folds every bucket whose file census trips
-    ``needs_compaction`` into byte-budgeted files, publishing a new
-    version whose manifest points compacted buckets at the new
-    directories and inherits the rest untouched — the same
-    O(touched)-not-O(state) discipline as the apply path, applied to
-    maintenance.
+    ``needs_compaction`` — or that holds an insert-only generation
+    list — into byte-budgeted files, publishing a new version whose
+    manifest points compacted buckets at the new directories and
+    inherits the rest untouched: the same O(touched)-not-O(state)
+    discipline as the apply path, applied to maintenance.
 
-    One Spark job: the fragmented buckets are read together and
-    ``repartitionByRange(n, __bucket, *keys)`` makes output partitions
+    The fragmented buckets are read together with the manifest's
+    schema (no footer inference; buckets written before a schema
+    evolution null-fill the newer columns) and
+    ``repartitionByRange(n, bucket, *keys)`` makes output partitions
     contiguous in bucket order, so almost every partition holds a
-    single bucket and ``partitionBy`` does not re-fragment (total
-    files ≈ ceil(bytes/target) + one boundary file per bucket).
+    single bucket and the bucket-partitioned write does not
+    re-fragment (total files ≈ ceil(bytes/target) + one boundary file
+    per bucket). A table built with ``one_file_per_bucket`` keeps its
+    one file per bucket instead. The rows are committed through
+    ``overwrite_buckets`` with ``compaction: True`` in the manifest,
+    so the version carries the applied-LSN watermark and ``batch_id``
+    over, and an apply racing the compaction wins cleanly (the
+    compaction rolls back with ``ConcurrentWriteError``).
 
     Returns the new version, or the current one when nothing needs
     compaction. Data is byte-for-byte equivalent; only layout changes.
     """
-    v = state.current_version()
+    v, man = state._current()
     if v is None:
         raise ValueError("cannot compact an empty state table")
-    man = state._load_manifest(v)
-    frag: dict[str, dict] = {}
-    for b, rel in man["buckets"].items():
-        # a bucket entry may be a generation LIST (insert-only appends,
-        # round 14): census every generation together — compaction is
-        # exactly what folds the list back to one directory
-        rels = state._rels(rel)
-        stats_list = [
-            dir_file_stats(os.path.join(state.path, r)) for r in rels
-        ]
+    frag: dict[int, int] = {}  # bucket -> bytes
+    for b in man["buckets"]:
+        # a generation list is censused together — compaction is
+        # exactly what folds it back to one directory
+        per_dir = [dir_file_stats(d) for d in state._dirs(man, [b])]
+        n_files = sum(s["n_files"] for s in per_dir)
+        total = sum(s["total_bytes"] for s in per_dir)
         stats = {
-            "n_files": sum(s["n_files"] for s in stats_list),
-            "total_bytes": sum(s["total_bytes"] for s in stats_list),
+            "n_files": n_files,
+            "total_bytes": total,
+            "avg_file_bytes": total // n_files if n_files else 0,
         }
-        stats["avg_file_bytes"] = (
-            stats["total_bytes"] // stats["n_files"]
-            if stats["n_files"]
-            else 0
-        )
-        if len(rels) > 1 or needs_compaction(
+        if len(per_dir) > 1 or needs_compaction(
             stats,
             target_file_bytes=target_file_bytes,
             min_files=min_files,
         ):
-            frag[b] = stats
+            frag[int(b)] = total
     if not frag:
         return v
 
-    total = sum(s["total_bytes"] for s in frag.values())
-    n_out = max(len(frag), math.ceil(total / target_file_bytes))
-    dirs = [
-        os.path.join(state.path, r)
-        for b in frag
-        for r in state._rels(man["buckets"][b])
-    ]
-    df = state.spark.read.option("mergeSchema", "true").parquet(*dirs)
-    out = df.withColumn("__bucket", state._bucket_expr())
-
-    v_new = v + 1
-    target = state._version_dir(v_new)
-    (
-        out.repartitionByRange(
-            n_out, F.col("__bucket"), *[F.col(k) for k in state.keys]
-        )
-        .write.partitionBy("__bucket")
-        .mode("overwrite")
-        .parquet(target)
+    n_out = max(len(frag), math.ceil(sum(frag.values()) / target_file_bytes))
+    rows = state._read_dirs(man, state._dirs(man, frag)).repartitionByRange(
+        n_out, state._bucket_expr(), *state.keys
     )
-    written = {
-        name.split("=", 1)[1]: f"v{v_new}/{name}"
-        for name in os.listdir(target)
-        if name.startswith("__bucket=")
-    }
-    buckets = dict(man["buckets"])
-    buckets.update(written)
-    manifest = {
-        "version": v_new,
-        "n_buckets": man["n_buckets"],
-        "keys": man["keys"],
-        "schema": man["schema"],
-        "buckets": buckets,
-        "touched": sorted(int(b) for b in written),
-        "compaction": True,
-    }
-    _fsync_replace(
-        os.path.join(target, "MANIFEST.json.tmp"),
-        os.path.join(target, "MANIFEST.json"),
-        json.dumps(manifest, indent=1),
+    return state.overwrite_buckets(
+        rows, frag, version=v, extra_meta={"compaction": True}
     )
-    # same optimistic-concurrency commit as the apply path: an apply
-    # racing this compaction wins cleanly, the compaction rolls back
-    state._commit_pointer(v, v_new)
-    return v_new

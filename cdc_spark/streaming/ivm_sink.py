@@ -10,28 +10,32 @@ rewrite, never a full-table one.
 
 Per batch the work is:
 
-1. one 1-row scan of the batch (``BucketedStateTable.scan``): touched
+1. the aggregate is synced to the row state's current version
+   (``_sync_with_state``; a no-op unless a crash or a replayed
+   ``batch_id`` left it behind);
+2. one 1-row scan of the batch (``BucketedStateTable.scan``): touched
    buckets, truncate flag, high LSN. The same job materializes the
    batch, so every later step reads stored blocks
    (``state._local_checkpoints``);
-2. bucket-pruned read of the row-state buckets the batch touches,
+3. bucket-pruned read of the row-state buckets the batch touches,
    semi-joined to the batch's keys → pre-images;
-3. ``agg_delta_from_batch`` folds the batch with the row-state merge's
+4. ``agg_delta_from_batch`` folds the batch with the row-state merge's
    own fold text and emits −pre / +post per key → per-group counter
    deltas (exact split-long fixed point, so base ⊕ delta ≡ full
    recompute bit for bit), concurrently with the normal incremental
    row-state apply, which reuses the scan record;
-4. the affected groups' aggregate rows are read bucket-pruned, merged
+5. the affected groups' aggregate rows are read bucket-pruned, merged
    with the delta, and the touched aggregate buckets are rewritten
    through ``overwrite_buckets`` — groups whose row count reaches zero
    are simply not written, so the aggregate table never carries empty
    groups;
-5. the batch's and the delta's checkpoint blocks are released.
+6. the batch's and the delta's checkpoint blocks are released.
 
 State size appears nowhere: both sides cost O(batch + touched
 buckets). A truncate in the batch degrades to O(state) by necessity
-(every key dies), after which the aggregate is rebuilt from the
-post-truncate survivors.
+(every key dies): steps 3–5 are replaced by the row-state apply,
+which rewrites every bucket, and the resync of step 1 against the
+new version, whose pre/post diff of every bucket is the delta.
 """
 
 from __future__ import annotations
@@ -103,21 +107,18 @@ class IncrementalAggregate:
         also materializes the batch, so each change row is evaluated
         once per apply (``state._local_checkpoints``).
         """
-        from cdc_spark.cdc.merge import apply_changes
-
         st = self.state
         v_cur, man = st._current()
+        # catch the aggregate up first: a crash (or a failed batch)
+        # between the row-state commit and the aggregate merge left it
+        # behind, also on the batch a replay now skips
+        self._sync_with_state(v_cur)
         if (
             batch_id is not None
             and man is not None
             and man.get("batch_id") == batch_id
         ):
-            # exactly-once replay skip: the row state already has this
-            # epoch; _sync catches the aggregate up if its merge was
-            # the part that crashed
-            self._sync_with_state(v_cur)
-            return v_cur
-        self._sync_with_state(v_cur)
+            return v_cur  # exactly-once replay skip
 
         with _local_checkpoints() as checkpoint:
             changes = checkpoint(changes)  # filled by the scan job
@@ -125,32 +126,10 @@ class IncrementalAggregate:
             if not touched_info.buckets:
                 return v_cur
             if touched_info.has_truncate:
-                # truncate: every key dies — O(state) by necessity.
-                # Compute post in-plan (apply_changes over the whole old
-                # state) and diff against the full pre image.
-                pre = (
-                    st.read(version=v_cur, session=changes.sparkSession)
-                    if v_cur is not None
-                    else None
-                )
-                post = apply_changes(
-                    pre,
-                    changes,
-                    st.keys,
-                    payload,
-                    lsn_col=lsn_col,
-                    op_col=op_col,
-                    may_truncate=True,
-                )
-                delta = checkpoint(
-                    agg_delta(
-                        pre,
-                        post,
-                        self.group_cols,
-                        self.measures,
-                        scale=self.scale,
-                    )
-                )
+                # truncate: every key dies, so the row-state apply
+                # rewrites every bucket, and the resync's pre/post
+                # diff of all buckets is this batch's delta — O(state)
+                # by necessity
                 v_new = st.apply(
                     changes,
                     payload,
@@ -159,7 +138,7 @@ class IncrementalAggregate:
                     touched_info=touched_info,
                     batch_id=batch_id,
                 )
-                self._merge_delta(delta, row_version=v_new)
+                self._sync_with_state(v_new)
                 return v_new
 
             # common path: ONE fold computes both sides of the delta.
@@ -228,7 +207,7 @@ class IncrementalAggregate:
 
     # --- agg/state consistency ---------------------------------------
     def _sync_with_state(self, v_cur: int | None) -> None:
-        """Bring the aggregate up to the row state's current version.
+        """Bring the aggregate up to the row state's version ``v_cur``.
 
         The row state and the aggregate are two tables with no shared
         commit, so a crash (or a failed batch) between the row-state
@@ -241,33 +220,25 @@ class IncrementalAggregate:
         O(state). Replaying a batch whose effects are already in the
         row state then folds a zero delta, so the combination gives
         effectively-once aggregate maintenance on top of an
-        at-least-once stream."""
-        v_agg = self.table.current_version()
-        if v_agg is None:
-            if v_cur is not None:
-                # adopting an existing row state: backfill the aggregate
-                # with a one-time full aggregation (cold start only)
-                content = base_agg(
-                    self.state.read(version=v_cur),
-                    self.group_cols,
-                    self.measures,
-                    scale=self.scale,
-                )
-                self.table.overwrite_buckets(
-                    content,
-                    range(self.table.n_buckets),
-                    extra_meta={"row_version": v_cur},
-                )
+        at-least-once stream. A truncating batch is folded the same
+        way: it touched every bucket."""
+        if v_cur is None:
             return
-        rv = self.table._load_manifest(v_agg).get("row_version")
-        if rv == v_cur or v_cur is None:
+        v_agg = self.table.current_version()
+        rv = (
+            None
+            if v_agg is None
+            else self.table._load_manifest(v_agg).get("row_version")
+        )
+        if rv == v_cur:
             return
         try:
             if rv is None:
+                # cold start (adopting an existing row state) or a
                 # pre-upgrade aggregate with no recorded row_version:
-                # there is no anchor to diff from, so a zero-delta
+                # there is no anchor to diff from, and a zero-delta
                 # "adopt v_cur" would stamp a possibly-stale aggregate
-                # as in sync — force the full rebuild path instead
+                # as in sync
                 raise FileNotFoundError("no row_version anchor")
             missed: set[int] = set()
             for w in range(rv + 1, v_cur + 1):
@@ -275,7 +246,8 @@ class IncrementalAggregate:
             pre = self.state.read_buckets(sorted(missed), version=rv)
             post = self.state.read_buckets(sorted(missed), version=v_cur)
         except (FileNotFoundError, json.JSONDecodeError):
-            # the pre version was garbage-collected: rebuild outright
+            # no anchor, or a pre version garbage-collected or torn:
+            # rebuild outright with one full aggregation
             content = base_agg(
                 self.state.read(version=v_cur),
                 self.group_cols,
@@ -327,7 +299,7 @@ class IncrementalAggregate:
             # nothing to fold, but the row_version watermark must still
             # advance or every later apply would re-diff these versions
             if v_agg is not None:
-                at.commit_meta(meta, version=v_agg)
+                at.overwrite_buckets(None, (), version=v_agg, extra_meta=meta)
             return
         groups = delta.select(*gc)
         if v_agg is None:

@@ -192,7 +192,7 @@ class BucketedStateTable:
         # state, where the extra full shuffle of touched data per
         # micro-batch is the wrong trade.
         self.one_file_per_bucket = one_file_per_bucket
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(self.path, exist_ok=True)
 
     # --- layout -------------------------------------------------------
 
@@ -514,7 +514,10 @@ class BucketedStateTable:
         it, and re-applying the same id is a no-op — the replayed
         batch after a crash between the sink commit and the stream's
         checkpoint commit neither rewrites buckets nor burns a
-        version.
+        version. Every later version inherits the recorded
+        ``batch_id`` and applied-LSN watermark until an apply sets
+        new ones, so a compaction or a metadata-only commit after the
+        batch keeps the replay a no-op.
 
         The guard compares against the CURRENT manifest only, so the
         state path and the streaming checkpoint form one unit: deleting
@@ -601,13 +604,9 @@ class BucketedStateTable:
                 (x for x in (prev_lsn, touched_info.max_lsn) if x is not None),
                 default=None,
             )
-            meta: dict = {}
-            if batch_id is not None:
-                meta["batch_id"] = batch_id
-            if applied is not None:
-                meta["applied_lsn"] = applied
+            meta = {"batch_id": batch_id, "applied_lsn": applied}
             return self._commit_new_version(
-                new_state, touched, man, meta or None, append=append
+                new_state, touched, man, meta, append=append
             )
 
     def vacuum(self, *, keep_last: int = 2) -> dict:
@@ -661,7 +660,9 @@ class BucketedStateTable:
         current version — the engine's standby-status surface (the
         reference acks its applied LSN upstream every 10s,
         main.go:61-74; here the manifest IS the ack record). Pure
-        manifest reads, no Spark job."""
+        manifest reads, no Spark job. ``applied_lsn`` and
+        ``batch_id`` are those of the last apply that set them: a
+        compaction or a metadata-only commit carries both over."""
         v, man = self._current()
         if man is None:
             return None
@@ -675,7 +676,7 @@ class BucketedStateTable:
 
     def overwrite_buckets(
         self,
-        new_rows: DataFrame,
+        new_rows: DataFrame | None,
         bucket_ids,
         *,
         version: int | None = None,
@@ -686,7 +687,9 @@ class BucketedStateTable:
         untouched buckets are inherited. The fast path for callers
         that already computed the buckets' final rows — no merge.
         ``extra_meta`` lands in the new version's manifest (e.g. the
-        row-state version a derived aggregate reflects)."""
+        row-state version a derived aggregate reflects). ``new_rows``
+        None with no bucket ids is a metadata-only commit: no Spark
+        job, every bucket inherited."""
         return self._commit_new_version(
             new_rows,
             {int(b) for b in bucket_ids},
@@ -694,36 +697,9 @@ class BucketedStateTable:
             extra_meta,
         )
 
-    def commit_meta(self, extra_meta: dict, *, version: int | None = None) -> int:
-        """Metadata-only commit: a new version inheriting every bucket
-        unchanged, with ``extra_meta`` merged into the manifest. No
-        Spark job — pure manifest/pointer work."""
-        prev = self._manifest(version)
-        if prev is None:
-            raise ValueError("commit_meta requires an existing version")
-        v_cur = prev["version"]
-        v_new = v_cur + 1
-        os.makedirs(self._version_dir(v_new), exist_ok=True)
-        manifest = {
-            "version": v_new,
-            "n_buckets": self.n_buckets,
-            "keys": self.keys,
-            "schema": prev["schema"],
-            "buckets": prev["buckets"],
-            "touched": [],
-        }
-        manifest.update(extra_meta)
-        _fsync_replace(
-            self._manifest_path(v_new) + ".tmp",
-            self._manifest_path(v_new),
-            json.dumps(manifest, indent=1),
-        )
-        self._commit_pointer(v_cur, v_new)
-        return v_new
-
     def _commit_new_version(
         self,
-        new_state: DataFrame,
+        new_state: DataFrame | None,
         touched: set,
         prev: dict | None,
         extra_meta: dict | None = None,
@@ -732,23 +708,33 @@ class BucketedStateTable:
     ) -> int:
         """Write ``new_state`` into the touched buckets of the version
         after ``prev`` (the manifest planned against; None on an empty
-        table) and commit it."""
+        table) and commit it — the only code that writes a version.
+        ``new_state`` None writes no rows (touched buckets end up
+        empty) and keeps ``prev``'s schema. The manifest inherits
+        ``prev``'s ``applied_lsn`` and ``batch_id``; a non-None value
+        in ``extra_meta`` replaces an inherited one."""
         v_cur = prev["version"] if prev is not None else None
         prev_buckets: dict[str, str | list] = (
             prev["buckets"] if prev is not None else {}
         )
         v_new = (v_cur or 0) + 1
         target = self._version_dir(v_new)
-        # no pre-write repartition (saves a full shuffle of the touched
-        # data per micro-batch). Tradeoff: each output task may write a
-        # file into every touched-bucket dir, so a version holds up to
-        # tasks × |touched| files; AQE coalesces small merges to few
-        # tasks, and compaction (operators/maintenance.py) folds
-        # fragments when the count matters.
-        out = new_state.withColumn(_BUCKET, self._bucket_expr())
-        if self.one_file_per_bucket:
-            out = out.repartition(self.n_buckets, F.col(_BUCKET))
-        out.write.partitionBy(_BUCKET).mode("overwrite").parquet(target)
+        if new_state is None:
+            os.makedirs(target, exist_ok=True)
+            schema = prev["schema"]
+        else:
+            # no pre-write repartition (saves a full shuffle of the
+            # touched data per micro-batch). Tradeoff: each output task
+            # may write a file into every touched-bucket dir, so a
+            # version holds up to tasks × |touched| files; AQE
+            # coalesces small merges to few tasks, and compaction
+            # (operators/maintenance.py) folds fragments when the
+            # count matters.
+            out = new_state.withColumn(_BUCKET, self._bucket_expr())
+            if self.one_file_per_bucket:
+                out = out.repartition(self.n_buckets, F.col(_BUCKET))
+            out.write.partitionBy(_BUCKET).mode("overwrite").parquet(target)
+            schema = json.loads(new_state.schema.json())
 
         written = {
             int(name.split("=", 1)[1]): f"v{v_new}/{name}"
@@ -777,12 +763,21 @@ class BucketedStateTable:
             "version": v_new,
             "n_buckets": self.n_buckets,
             "keys": self.keys,
-            "schema": json.loads(new_state.schema.json()),
+            "schema": schema,
             "buckets": buckets,
             "touched": sorted(touched),
         }
-        if extra_meta:
-            manifest.update(extra_meta)
+        # the watermark and the epoch carry over every commit (a
+        # compaction or a metadata-only commit must not reset them)
+        if prev is not None:
+            manifest.update(
+                (k, prev[k])
+                for k in ("applied_lsn", "batch_id")
+                if prev.get(k) is not None
+            )
+        manifest.update(
+            (k, v) for k, v in (extra_meta or {}).items() if v is not None
+        )
         # manifest lands before the pointer: a crash in between leaves
         # a complete, unreferenced version that recovery may adopt
         _fsync_replace(

@@ -239,6 +239,45 @@ def test_compact_buckets_noop_below_threshold(spark, table):
     assert compact_buckets(table, min_files=99) == 1
 
 
+@pytest.mark.parametrize("commit", ["compaction", "metadata_only"])
+def test_commit_keeps_applied_lsn_and_batch_id(spark, table, commit):
+    """The manifest is the replication ack record: a compaction or a
+    metadata-only commit must carry the applied-LSN watermark and the
+    batch_id over, or the replay of the last batch would apply it a
+    second time."""
+    from cdc_spark.operators.maintenance import compact_buckets
+
+    table.apply(
+        _changes(spark, [(i, "a", i, "c", i) for i in range(1, 9)]),
+        ["name", "qty"],
+        batch_id=0,
+    )
+    b1 = _changes(spark, [(i, "b", i, "u", 20 + i) for i in range(1, 9)])
+    table.apply(b1, ["name", "qty"], batch_id=1)
+    before = table.replication_progress()
+    assert (before["applied_lsn"], before["batch_id"]) == (28, 1)
+    rows = sorted(tuple(r) for r in table.read().collect())
+
+    if commit == "compaction":
+        v = compact_buckets(table, min_files=1)
+    else:
+        v = table.overwrite_buckets(None, (), extra_meta={"row_version": 7})
+        # no data written: every bucket and the schema are inherited
+        man, prev = _manifest(table, v), _manifest(table, 2)
+        assert os.listdir(table._version_dir(v)) == ["MANIFEST.json"]
+        assert man["buckets"] == prev["buckets"]
+        assert man["schema"] == prev["schema"]
+        assert man["touched"] == [] and man["row_version"] == 7
+    assert v == 3
+    after = table.replication_progress()
+    assert after["version"] == v
+    assert (after["applied_lsn"], after["batch_id"]) == (28, 1)
+    # replaying batch 1 is still a no-op: no new version
+    assert table.apply(b1, ["name", "qty"], batch_id=1) == v
+    assert table.current_version() == v
+    assert sorted(tuple(r) for r in table.read().collect()) == rows
+
+
 def test_concurrent_writer_detected_and_rolled_back(spark, table):
     from unittest import mock
 
@@ -572,6 +611,19 @@ def test_apply_widens_schema_mid_stream(spark, table):
     untouched = [i for i in got if i not in (1, 40)]
     assert untouched and all(got[i][2] is None for i in untouched)
 
+    # compaction reads the fragments with the manifest's schema: the
+    # old buckets' rows are rewritten with the new column null-filled
+    from cdc_spark.operators.maintenance import compact_buckets
+
+    v = compact_buckets(table, target_file_bytes=1 << 30, min_files=1)
+    man = _manifest(table, v)
+    assert man["compaction"] is True
+    assert {r.id: (r.name, r.qty, r.phone) for r in table.read().collect()} == got
+    compacted = spark.read.parquet(
+        *[os.path.join(table.path, rel) for rel in man["buckets"].values()]
+    )
+    assert {r.id: (r.name, r.qty, r.phone) for r in compacted.collect()} == got
+
 
 def test_version_diff_across_schema_evolution(spark, table):
     table.apply(
@@ -594,12 +646,14 @@ def test_version_diff_across_schema_evolution(spark, table):
     assert 2 not in got  # untouched key in an inherited bucket
 
 
-def test_local_fs_path_seam(spark, tmp_path):
+def test_local_fs_path_seam(spark, tmp_path, monkeypatch):
     """Round 14: the state layer's file IO (manifests, pointer, footer
     counts) is local-filesystem-only through ONE seam — a file: URI
     normalizes to the bare path, any other scheme fails loudly instead
     of feeding a URI to os.listdir."""
     from cdc_spark.streaming.state import local_fs_path
+
+    monkeypatch.chdir(tmp_path)
 
     p = str(tmp_path / "seam_state")
     assert local_fs_path(p) == p
@@ -619,6 +673,9 @@ def test_local_fs_path_seam(spark, tmp_path):
     assert t.path == p
     assert t.row_count() == 2
     assert t.read().count() == 2
+    # the URI never reaches a relative os call: nothing named file:
+    # appears in the working directory
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("file:")]
 
     with pytest.raises(NotImplementedError):
         BucketedStateTable(spark, "s3://bucket/state", ["id"])
