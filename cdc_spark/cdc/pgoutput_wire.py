@@ -12,6 +12,11 @@ Spark-first rethink:
 - **frame decode** is inherently imperative byte-walking → an
   Arrow-batched ``mapInPandas`` (the one place Python belongs); each
   frame decodes independently, so it parallelizes over partitions;
+- **each bounded slice decodes once**, as the reference's receive
+  loop does: ``decode_frames`` memoizes one lazy ``localCheckpoint``
+  per raw frame, filled by the first action (the announce's single
+  collect) and read by the parse and the apply after it — lifetime
+  and the executor-loss caveat at ``decode_frames``;
 - **transaction context** (Begin's xid / commit timestamp, Origin
   name) is NOT process state: it is a fill-forward window over the
   stream order — ``last(..., ignorenulls)`` up to the current row;
@@ -19,7 +24,9 @@ Spark-first rethink:
   partitioned by relation id — an as-of association, not a mutable
   ``map[uint32]Relation``;
 - **tupledata → named maps** is a ``zip_with`` of the announced
-  column list against the tuple values, entirely JVM-side.
+  column list against the tuple values, entirely JVM-side. Both the
+  windows and the maps are SQL text, two ``selectExpr`` calls, so a
+  parse plan costs a few py4j round trips, not one per Column node.
 
 Canonical-map semantics (feeds ``registry.materialize`` /
 ``merge.apply_changes``):
@@ -39,12 +46,14 @@ old image the wire carried); a 'K' image yields before ≡ key.
 from __future__ import annotations
 
 import struct
+import threading
 import warnings
+import weakref
 from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # PostgreSQL epoch (2000-01-01 UTC) offset from Unix epoch, in µs.
@@ -231,6 +240,12 @@ def _decode_frame(frame: bytes) -> dict:
     return out
 
 
+# decoded frame per bounded raw frame and decode arguments; see
+# decode_frames for the lifetime. DataFrames hash by identity.
+_decoded: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_decoded_lock = threading.Lock()
+
+
 def decode_frames(
     raw: DataFrame,
     value_col: str = "value",
@@ -245,7 +260,39 @@ def decode_frames(
     ``parse_wal2json``. ``partition_col`` (a source-partition column,
     e.g. the Kafka partition) is carried through the decode so
     downstream windows can partition by it.
+
+    Decode once: for a bounded ``raw`` every call with the same
+    arguments returns the same ``localCheckpoint(eager=False)`` of the
+    decode, so the first action over it (normally the announce's
+    collect) runs the Python decode and stores its blocks, and
+    ``announce_to_registry``, ``parse_pgoutput_binary`` and whatever
+    the caller runs on either afterwards read those blocks. The memo
+    holds ``raw`` weakly and never references it; nothing releases
+    the blocks explicitly — a lazy result built from them may be
+    evaluated after ``raw`` is gone — so Spark's ContextCleaner drops
+    them once no live plan references the checkpoint and the driver
+    JVM has garbage-collected its RDD. Blocks cannot be
+    recomputed: an executor lost after the first action makes a later
+    read of the slice raise, and a bounded caller retries the slice.
+    A streaming ``raw`` gets the plain decode (``localCheckpoint`` is
+    not defined on streams), evaluated by each query that reads it.
     """
+    if raw.isStreaming:
+        return _decode(raw, value_col, order_col, partition_col)
+    args = (value_col, order_col, partition_col)
+    with _decoded_lock:
+        memo = _decoded.setdefault(raw, {})
+        if args not in memo:
+            memo[args] = _decode(raw, *args).localCheckpoint(eager=False)
+        return memo[args]
+
+
+def _decode(
+    raw: DataFrame,
+    value_col: str,
+    order_col: str | None,
+    partition_col: str | None,
+) -> DataFrame:
     order = (
         F.col(order_col)
         if order_col
@@ -261,6 +308,7 @@ def decode_frames(
         ptype = raw.schema[partition_col].dataType.simpleString()
         schema = f"{schema}, {partition_col} {ptype}"
     src = raw.select(*sel)
+    cols = _split_fields()
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -269,7 +317,6 @@ def decode_frames(
                 d = _decode_frame(bytes(frame) if frame is not None else b"")
                 d["__order"] = int(order_v)
                 rows.append(d)
-            cols = [f.split(":")[0] for f in _split_fields()]
             data = {c: [r.get(c) for r in rows] for c in cols}
             if partition_col:
                 data[partition_col] = list(pdf["__part"])
@@ -293,30 +340,21 @@ def _split_fields() -> list[str]:
     return fields
 
 
-def _entries(cols: Column, tup: Column) -> Column:
-    """zip announced columns with tuple values → array of
-    (name, value, flag, is_key) entries."""
-    return F.zip_with(
-        cols,
-        tup,
-        lambda c, t: F.struct(
-            c["name"].alias("name"),
-            F.when(t["flag"] == "t", t["value"]).alias("value"),
-            t["flag"].alias("flag"),
-            c["is_key"].alias("is_key"),
-        ),
+def _entries(tup: str) -> str:
+    """SQL text: the announced columns ``__cols`` zipped with tuple
+    ``tup`` → array of (name, value, flag, is_key) entries."""
+    return (
+        f"zip_with(__cols, {tup}, (c, t) -> named_struct("
+        "'name', c.name, 'value', CASE WHEN t.flag = 't' THEN t.value END,"
+        " 'flag', t.flag, 'is_key', c.is_key))"
     )
 
 
-def _to_map(entries: Column, keep: Column) -> Column:
-    kept = F.filter(entries, keep)
-    return F.when(
-        entries.isNotNull(),
-        F.map_from_entries(
-            F.transform(
-                kept, lambda e: F.struct(e["name"], e["value"])
-            )
-        ),
+def _to_map(entries: str, keep: str) -> str:
+    """SQL text: the ``keep`` entries as a name → value map."""
+    return (
+        f"CASE WHEN {entries} IS NOT NULL THEN map_from_entries(transform("
+        f"filter({entries}, e -> {keep}), e -> struct(e.name, e.value))) END"
     )
 
 
@@ -327,6 +365,12 @@ def parse_pgoutput_binary(
     partition_col: str | None = None,
 ) -> DataFrame:
     """Binary pgoutput frames → canonical change rows.
+
+    Reads ``decode_frames(raw, ...)``, so after an announce over the
+    same ``raw`` the frames are not decoded again. The plan is built
+    from SQL text (one ``selectExpr`` for the fill-forward context,
+    one for the canonical projection), which costs a few py4j calls
+    instead of one per Column node.
 
     ``partition_col`` is REQUIRED for input whose partitions carry
     INDEPENDENT frame orders (e.g. a Kafka topic with >1 partition):
@@ -356,115 +400,67 @@ def parse_pgoutput_binary(
                 stacklevel=2,
             )
 
-    part = [partition_col] if partition_col else []
-    w_tx = (
-        Window.partitionBy(*part)
-        .orderBy("__order")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_rel = (
-        Window.partitionBy("rel_id", *part)
-        .orderBy("__order")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tag = F.col("tag")
+    part = [f"`{partition_col}`"] if partition_col else []
+
+    def over(*by: str) -> str:  # fill-forward up to the current row
+        pb = f"PARTITION BY {', '.join(by)} " if by else ""
+        return (
+            f"OVER ({pb}ORDER BY __order"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+        )
+
+    w_tx, w_rel = over(*part), over("rel_id", *part)
+
+    def last_of(tag: str, col: str) -> str:
+        return f"last(CASE WHEN tag = '{tag}' THEN {col} END, true) {w_tx}"
 
     # one row per logical event: truncate frames explode to one row
     # per truncated relation id, then relation context resolves per id
-    events = (
-        decoded.withColumn(
-            "__rel_ids",
-            F.when(tag == "T", F.col("trunc_rel_ids")).otherwise(
-                F.array(F.col("rel_id"))
-            ),
-        )
-        .withColumn("rel_id", F.explode_outer("__rel_ids"))
-        .drop("__rel_ids")
+    events = decoded.withColumn(
+        "rel_id",
+        F.expr(
+            "explode_outer(CASE WHEN tag = 'T' THEN trunc_rel_ids"
+            " ELSE array(rel_id) END)"
+        ),
     )
-
-    ctx = (
-        events.withColumn(
-            "__xid",
-            F.last(F.when(tag == "B", F.col("xid")), True).over(w_tx),
-        )
-        .withColumn(
-            "__ts_us",
-            F.last(F.when(tag == "B", F.col("ts_us")), True).over(w_tx),
-        )
-        .withColumn(
-            "__b_ord",
-            F.last(F.when(tag == "B", F.col("__order")), True).over(w_tx),
-        )
-        .withColumn(
-            "__o_ord",
-            F.last(F.when(tag == "O", F.col("__order")), True).over(w_tx),
-        )
-        .withColumn(
-            "__origin",
-            F.when(
-                F.col("__o_ord") >= F.col("__b_ord"),  # origin is per-tx
-                F.last(
-                    F.when(tag == "O", F.col("origin_name")), True
-                ).over(w_tx),
-            ),
-        )
-        .withColumn("__ns", F.last(F.col("namespace"), True).over(w_rel))
-        .withColumn("__rel", F.last(F.col("rel_name"), True).over(w_rel))
-        .withColumn("__cols", F.last(F.col("cols"), True).over(w_rel))
+    ctx = events.selectExpr(
+        "*",
+        f"{last_of('B', 'xid')} AS __xid",
+        f"{last_of('B', 'ts_us')} AS __ts_us",
+        # origin is per-tx: only an 'O' at or after the current Begin
+        f"CASE WHEN {last_of('O', '__order')} >= {last_of('B', '__order')}"
+        f" THEN {last_of('O', 'origin_name')} END AS __origin",
+        f"last(namespace, true) {w_rel} AS __ns",
+        f"last(rel_name, true) {w_rel} AS __rel",
+        f"last(cols, true) {w_rel} AS __cols",
     )
+    data = ctx.where("tag IN ('I', 'U', 'D', 'T') OR tag IS NULL")
 
-    data = ctx.where(tag.isin("I", "U", "D", "T") | tag.isNull())
-
-    new_e = _entries(F.col("__cols"), F.col("new_tuple"))
-    old_e = _entries(F.col("__cols"), F.col("old_tuple"))
-    key_src = F.when(F.col("old_kind").isNotNull(), old_e).otherwise(new_e)
-
+    new_e, old_e = _entries("new_tuple"), _entries("old_tuple")
+    key_src = f"CASE WHEN old_kind IS NOT NULL THEN {old_e} ELSE {new_e} END"
     # absent = unchanged TOAST ('u'); present-null = SQL NULL ('n')
-    after = _to_map(new_e, lambda e: e["flag"] != "u")
-    before = _to_map(old_e, lambda e: e["flag"] != "u")
-    key = _to_map(key_src, lambda e: e["is_key"] & (e["flag"] != "u"))
-
-    oid_name = F.create_map(
-        *[F.lit(x) for kv in PG_OID_NAMES.items() for x in (kv[0], kv[1])]
-    )
-    col_types = F.when(
-        F.col("__cols").isNotNull(),
-        F.map_from_entries(
-            F.transform(
-                F.col("__cols"),
-                lambda c: F.struct(
-                    c["name"],
-                    F.coalesce(
-                        oid_name[c["type_oid"]],
-                        c["type_oid"].cast("string"),
-                    ),
-                ),
-            )
-        ),
-    )
-
-    op = (
-        F.when(tag == "I", "c")
-        .when(tag == "U", "u")
-        .when(tag == "D", "d")
-        .when(tag == "T", "t")
-    )
-    return data.select(
-        op.alias("op"),
-        F.col("__ns").alias("src_schema"),
-        F.col("__rel").alias("src_table"),
-        F.col("__order").alias("lsn"),
-        F.col("__xid").alias("tx_id"),
-        F.timestamp_micros(F.col("__ts_us") + F.lit(PG_EPOCH_US)).alias(
-            "commit_ts"
-        ),
-        key.alias("key"),
-        before.alias("before"),
-        after.alias("after"),
-        col_types.alias("col_types"),
-        F.col("__origin").alias("origin"),
-        F.col("old_kind").alias("replica_identity"),
-        *([F.col(partition_col)] if partition_col else []),
+    changed = "e.flag != 'u'"
+    key = _to_map(key_src, f"e.is_key AND {changed}")
+    oid_name = "map(" + ", ".join(
+        f"{oid}, '{name}'" for oid, name in PG_OID_NAMES.items()
+    ) + ")"
+    return data.selectExpr(
+        "CASE tag WHEN 'I' THEN 'c' WHEN 'U' THEN 'u' WHEN 'D' THEN 'd'"
+        " WHEN 'T' THEN 't' END AS op",
+        "__ns AS src_schema",
+        "__rel AS src_table",
+        "__order AS lsn",
+        "__xid AS tx_id",
+        f"timestamp_micros(__ts_us + {PG_EPOCH_US}) AS commit_ts",
+        f"{key} AS key",
+        f"{_to_map(old_e, changed)} AS before",
+        f"{_to_map(new_e, changed)} AS after",
+        "CASE WHEN __cols IS NOT NULL THEN map_from_entries(transform("
+        f"__cols, c -> struct(c.name, coalesce({oid_name}[c.type_oid],"
+        " CAST(c.type_oid AS STRING))))) END AS col_types",
+        "__origin AS origin",
+        "old_kind AS replica_identity",
+        *part,
     )
 
 
@@ -493,13 +489,6 @@ def relation_announcements(decoded: DataFrame) -> DataFrame:
             F.col("col.name").alias("col_name"),
             F.col("col.type_oid").alias("type_oid"),
         )
-    )
-
-
-def type_announcements(decoded: DataFrame) -> DataFrame:
-    """'Y' frames: in-band custom type announcements (oid → name)."""
-    return decoded.where(F.col("tag") == "Y").select(
-        "__order", "type_oid", "type_ns", "type_name"
     )
 
 
@@ -587,18 +576,22 @@ def encode_truncate(rel_ids: list[int], opts: int = 0) -> bytes:
 
 def announce_to_registry(registry, decoded: DataFrame) -> None:
     """Replay 'R' frames (stream order) into a ``SchemaRegistry`` —
-    the reference's RelationSet.Add loop (main.go:425-427). Bounded
-    collect: one row per announced relation version, with an in-band
-    'Y' name overriding the static OID table when present."""
-    y = {
-        int(r["type_oid"]): r["type_name"]
-        for r in type_announcements(decoded).collect()
-    }
-    rels = (
-        decoded.where(F.col("tag") == "R")
-        .select("__order", "namespace", "rel_name", "cols")
+    the reference's RelationSet.Add loop (main.go:425-427). One
+    bounded collect of the 'R' and 'Y' rows (one row per announced
+    relation version or custom type), split on the driver: an in-band
+    'Y' name overrides the static OID table when present. Over
+    ``decode_frames(raw)`` of a bounded ``raw`` this is the action
+    that decodes the slice (see ``decode_frames``)."""
+    rows = (
+        decoded.where("tag IN ('R', 'Y')")
+        .select("__order", "tag", "namespace", "rel_name", "cols",
+                "type_oid", "type_name")
         .collect()
     )
+    y = {
+        int(r["type_oid"]): r["type_name"] for r in rows if r["tag"] == "Y"
+    }
+    rels = [r for r in rows if r["tag"] == "R"]
     for r in sorted(rels, key=lambda r: r["__order"]):
         registry.announce(
             r["namespace"],

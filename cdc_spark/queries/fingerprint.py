@@ -10,9 +10,9 @@ SQL plus the TRANSITIVE SOURCE CLOSURE of its query function inside
 ``cdc_spark`` — the function itself, every cdc_spark function/class
 it references (through module-level imports, attribute access on
 cdc_spark modules, nested lambdas, and function-local
-``from cdc_spark... import`` statements, followed recursively), so a
-change to a shared operator moves the fingerprint of every entry
-built on it.
+``from cdc_spark... import`` and ``import cdc_spark... as``
+statements, followed recursively), so a change to a shared operator
+moves the fingerprint of every entry built on it.
 
 ``tests/registry_fingerprints.json`` is the checked-in ledger: the
 fingerprint of each entry as of its last staging. The contract test
@@ -40,6 +40,11 @@ from cdc_spark.queries.base import REGISTRY, QuerySpec
 #   from cdc_spark.x.y import a, b as c, (d, e)
 _LOCAL_IMPORT = re.compile(
     r"from\s+(cdc_spark[\w.]*)\s+import\s+\(?([\w,\s]+?)\)?\s*$",
+    re.MULTILINE,
+)
+#   import cdc_spark.x.y as z
+_LOCAL_MODULE_IMPORT = re.compile(
+    r"^\s*import\s+(cdc_spark[\w.]*)(?:\s+as\s+\w+)?\s*$",
     re.MULTILINE,
 )
 
@@ -123,6 +128,11 @@ def collect_sources(fn) -> dict[str, str]:
             for nm in re.split(r"[\s,]+", m.group(2).strip()):
                 if nm and nm != "as" and hasattr(mod, nm):
                     visit(getattr(mod, nm))
+        for m in _LOCAL_MODULE_IMPORT.finditer(src):
+            try:
+                visit(importlib.import_module(m.group(1)))
+            except ImportError:
+                continue
 
     visit(fn)
     return out
