@@ -1,27 +1,27 @@
-"""Per-entry source fingerprints for gate-rotation freshness.
+"""Per-entry source fingerprints and the gate-rotation ledger.
 
-The rotation invariant — "every oracled entry's latest driver row
-matches its current plan+oracle, or the entry is staged for the next
-gate" — was hand-tracked through round 12 via prefix comments, and
-round 12's verdict caught one miss (dd05: its shared operator gained
-two repartitions after the entry's last driver row). This module
-mechanizes the detection: an entry's fingerprint hashes its oracle
-SQL plus the TRANSITIVE SOURCE CLOSURE of its query function inside
-``cdc_spark`` — the function itself, every cdc_spark function/class
-it references (through module-level imports, attribute access on
-cdc_spark modules, nested lambdas, and function-local
+The driver's correctness gate runs the first ``GATE_SLOTS`` entries of
+``__spark_entry__.queries()``, so that order decides which entries get
+a fresh driver row each round. An entry's fingerprint hashes its
+oracle SQL plus the TRANSITIVE SOURCE CLOSURE of its query function
+inside ``cdc_spark`` — the function itself, every cdc_spark
+function/class it references (through module-level imports, attribute
+access on cdc_spark modules, nested lambdas, and function-local
 ``from cdc_spark... import`` and ``import cdc_spark... as``
 statements, followed recursively), so a change to a shared operator
 moves the fingerprint of every entry built on it.
 
-``tests/registry_fingerprints.json`` is the checked-in ledger: the
-fingerprint of each entry as of its last staging. The contract test
-fails any entry whose current fingerprint differs from the ledger
-unless it sits in ``GATE_PREFIX`` or ``NEXT_TIER`` — exactly the
-dd05 class, caught at commit time instead of by the next judge.
-Refresh the ledger with ``python tools/update_fingerprints.py`` when
-turning the rotation (it refuses to refresh an unstaged drifted
-entry unless ``--force``).
+``tests/registry_fingerprints.json`` is the ledger: one line per
+entry, ``"name": [fingerprint, round]``. ``round`` is the last round
+whose gate prefix held the entry at that fingerprint (``0``: no round
+from r10 on), or ``null`` when the entry changed after its last gate
+(pending). ``gate_order`` derives the driver order from the ledger
+alone: pending entries first, then the oldest gate, then the name;
+entries without an oracle go last, so they never take a gate slot.
+``stale`` lists every entry whose recorded fingerprint is not its
+current one; the contract test fails on any, so every change is
+recorded. ``tools/update_fingerprints.py`` applies ``refresh`` (record
+drift as pending) and, once a round's gate has run, ``rotate``.
 """
 
 from __future__ import annotations
@@ -30,8 +30,11 @@ import functools
 import hashlib
 import importlib
 import inspect
+import json
+import os
 import re
 import types
+from collections.abc import Collection, Iterable, Mapping
 
 from cdc_spark.queries.base import REGISTRY, QuerySpec
 
@@ -153,3 +156,84 @@ def entry_fingerprint(spec: QuerySpec) -> str:
 
 def all_fingerprints() -> dict[str, str]:
     return {name: entry_fingerprint(REGISTRY[name]) for name in sorted(REGISTRY)}
+
+
+# --- the gate-rotation ledger ---------------------------------------
+
+LEDGER = os.path.normpath(
+    os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        "..",
+        "..",
+        "tests",
+        "registry_fingerprints.json",
+    )
+)
+
+# the driver's correctness gate samples this many leading entries
+GATE_SLOTS = 50
+
+# name -> [fingerprint, round]; round None = pending
+Ledger = Mapping[str, list]
+
+
+def load_ledger() -> dict[str, list]:
+    with open(LEDGER) as f:
+        return json.load(f)
+
+
+def write_ledger(ledger: Ledger) -> None:
+    """Write one line per entry, sorted by name."""
+    lines = [
+        f" {json.dumps(n)}: {json.dumps(list(ledger[n]))}"
+        for n in sorted(ledger)
+    ]
+    with open(LEDGER, "w") as f:
+        f.write("{\n" + ",\n".join(lines) + "\n}\n")
+
+
+def gate_order(
+    names: Iterable[str], ledger: Ledger, oracled: Collection[str]
+) -> list[str]:
+    """``names`` in driver gate order: oracled before rows-only, then
+    pending (a name missing from the ledger is pending too), then the
+    oldest recorded round, then the name."""
+
+    def key(name: str) -> tuple[bool, bool, int, str]:
+        rnd = ledger.get(name, (None, None))[1]
+        return (name not in oracled, rnd is not None, rnd or 0, name)
+
+    return sorted(names, key=key)
+
+
+def stale(ledger: Ledger, current: Mapping[str, str]) -> list[str]:
+    """Names whose recorded fingerprint differs from the current one:
+    drifted, new (not in the ledger) or unregistered (not current)."""
+    return sorted(
+        n
+        for n in ledger.keys() | current.keys()
+        if ledger.get(n, (None,))[0] != current.get(n)
+    )
+
+
+def refresh(ledger: Ledger, current: Mapping[str, str]) -> dict[str, list]:
+    """The ledger over exactly ``current``'s names: an unchanged entry
+    keeps its round, a drifted or new one is recorded as pending."""
+    return {
+        n: list(ledger[n]) if ledger.get(n, (None,))[0] == fp else [fp, None]
+        for n, fp in sorted(current.items())
+    }
+
+
+def rotate(
+    ledger: Ledger,
+    current: Mapping[str, str],
+    oracled: Collection[str],
+    round_: int,
+) -> dict[str, list]:
+    """Stamp the current first ``GATE_SLOTS`` entries as gated in
+    ``round_`` at their current fingerprints."""
+    out = {n: list(v) for n, v in ledger.items()}
+    for n in gate_order(current, ledger, oracled)[:GATE_SLOTS]:
+        out[n] = [current[n], round_]
+    return out

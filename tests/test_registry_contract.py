@@ -65,75 +65,141 @@ def test_oracles_ground_in_registered_tables_or_literals():
 
 
 def test_rotation_prefix_is_50_oracled_entries():
-    """The driver samples a 50-row prefix of queries(): the prefix
-    tier must hold EXACTLY 50 registered entries, every one carrying
-    an oracle — a no-oracle entry there burns a gate slot on a
-    guaranteed no_oracle row (the q31 lesson from round 6)."""
+    """The driver samples a 50-row prefix of queries(): it must hold
+    50 distinct registered entries, every one carrying an oracle — a
+    no-oracle entry there burns a gate slot on a guaranteed no_oracle
+    row (the q31 lesson from round 6)."""
     import __spark_entry__ as entry
 
-    prefix = entry.GATE_PREFIX
-    assert len(prefix) == 50
-    assert len(set(prefix)) == 50, "duplicate entries in prefix"
+    from cdc_spark.queries.fingerprint import GATE_SLOTS
+
+    prefix = list(entry.queries())[:GATE_SLOTS]
+    assert len(set(prefix)) == GATE_SLOTS == 50
     for name in prefix:
         assert name in REGISTRY, f"{name} not registered"
         assert REGISTRY[name].oracle is not None, (
             f"{name} has no oracle — it would waste a driver slot"
         )
-    ordered = list(entry.queries())
-    assert ordered[:50] == list(prefix), "prefix is not first in queries()"
+    assert list(entry.oracle_sql())[:GATE_SLOTS] == prefix
 
 
-def test_next_rotation_tier_is_oracled_and_registered():
-    """Entries staged for the NEXT round's rotation must already be
-    registered with oracles, so the next prefix can be assembled by
-    reordering alone."""
+def test_queries_never_compute_fingerprints(monkeypatch):
+    """The driver order is read from the ledger file: hashing every
+    entry's source closure takes seconds and must stay in the tool."""
     import __spark_entry__ as entry
 
-    nxt = entry.NEXT_TIER
-    assert len(set(nxt)) == len(nxt)
-    for name in nxt:
-        assert name in REGISTRY, f"{name} not registered"
-        assert REGISTRY[name].oracle is not None, f"{name}: no oracle"
+    from cdc_spark.queries import fingerprint
+
+    def boom(*args, **kwargs):
+        raise AssertionError("queries() computed fingerprints")
+
+    monkeypatch.setattr(fingerprint, "all_fingerprints", boom)
+    monkeypatch.setattr(fingerprint, "entry_fingerprint", boom)
+    assert len(entry.queries()) == len(REGISTRY)
+    assert len(entry.oracle_sql()) == len(REGISTRY) - len(ROWS_ONLY_WHITELIST)
 
 
-# --- rotation-freshness ledger (r12 verdict item 4) ------------------
+# --- gate-rotation ledger (r12 verdict item 4) ----------------------
 #
-# The invariant "every oracled entry's latest driver row matches its
-# current plan+oracle, or the entry is staged for the next gate" was
-# hand-tracked through r12, and r12's verdict caught one miss (dd05:
-# a shared operator gained two repartitions after the entry's last
-# driver row). tests/registry_fingerprints.json pins each entry's
-# fingerprint — oracle SQL + the transitive cdc_spark source closure
-# of its query fn — as of its last staging; drift outside the staged
-# tiers fails here, at commit time.
+# tests/registry_fingerprints.json records, per entry, its fingerprint
+# — oracle SQL + the transitive cdc_spark source closure of its query
+# fn — and the last round whose gate prefix held it (null: changed
+# since, pending). The driver order is derived from it alone; the
+# synthetic ledgers below pin that rule without a Spark session.
+
+
+def _ledger(**entries):
+    return {n: list(v) for n, v in entries.items()}
+
+
+def test_gate_order_pending_then_oldest_round_then_name():
+    from cdc_spark.queries.fingerprint import gate_order
+
+    ledger = _ledger(
+        a=("fa", 14), b=("fb", None), c=("fc", 0), d=("fd", 12),
+        e=("fe", None), f=("ff", 12),
+    )
+    assert gate_order(ledger, ledger, set(ledger)) == [
+        "b", "e", "c", "d", "f", "a",
+    ]
+    # a registered name missing from the ledger counts as pending
+    assert gate_order([*ledger, "aa"], ledger, {*ledger, "aa"})[:3] == [
+        "aa", "b", "e",
+    ]
+
+
+def test_rows_only_entries_never_reach_the_prefix():
+    from cdc_spark.queries.fingerprint import GATE_SLOTS, gate_order
+
+    ledger = {f"o{i:03d}": [f"f{i}", 14] for i in range(GATE_SLOTS)}
+    # rows-only entries that are pending and never gated still go last
+    ledger.update(r1=["x", None], r2=["y", 0])
+    oracled = {n for n in ledger if n.startswith("o")}
+    order = gate_order(ledger, ledger, oracled)
+    assert set(order[:GATE_SLOTS]) == oracled
+    assert order[GATE_SLOTS:] == ["r1", "r2"]
+
+
+def test_rotate_stamps_the_prefix_and_the_rest_lead_next():
+    from cdc_spark.queries.fingerprint import GATE_SLOTS, gate_order, rotate
+
+    ledger = {f"p{i:02d}": [f"old{i}", None] for i in range(60)}
+    ledger.update(g=["fg", 3], h=["fh", 0])
+    current = {n: f"new-{n}" for n in ledger}
+    oracled = set(ledger)
+    gated = gate_order(ledger, ledger, oracled)[:GATE_SLOTS]
+    assert gated == [f"p{i:02d}" for i in range(GATE_SLOTS)]
+
+    turned = rotate(ledger, current, oracled, 15)
+    for n in gated:
+        assert turned[n] == [current[n], 15]
+    # the 10 pending entries the round could not hold lead the next
+    # order, then the oldest gates; nothing else was touched
+    nxt = gate_order(turned, turned, oracled)
+    assert nxt[:12] == [f"p{i}" for i in range(50, 60)] + ["h", "g"]
+    assert nxt[12:] == gated
+    assert all(turned[n] == ledger[n] for n in ledger if n not in gated)
+
+
+def test_refresh_records_new_entries_as_pending_and_drops_unregistered():
+    from cdc_spark.queries.fingerprint import refresh, stale
+
+    ledger = _ledger(kept=("fk", 12), gone=("fg", 13))
+    current = {"kept": "fk", "added": "fa"}
+    assert stale(ledger, current) == ["added", "gone"]
+    assert refresh(ledger, current) == {
+        "added": ["fa", None],
+        "kept": ["fk", 12],
+    }
+
+
+def test_freshness_check_fails_any_drift_until_recorded():
+    """RED path of test_rotation_freshness_ledger: an entry whose code
+    changed fails the check whatever its round — every change must be
+    recorded — and a plain tool run records it as pending."""
+    from cdc_spark.queries.fingerprint import refresh, stale
+
+    for rnd in (None, 0, 14):
+        ledger = _ledger(a=("f-old", rnd), b=("fb", 11))
+        current = {"a": "f-new", "b": "fb"}
+        assert stale(ledger, current) == ["a"]
+        recorded = refresh(ledger, current)
+        assert stale(recorded, current) == []
+        assert recorded == {"a": ["f-new", None], "b": ["fb", 11]}
 
 
 def test_rotation_freshness_ledger():
-    import json
-    import os
-
-    import __spark_entry__ as entry
-
-    from cdc_spark.queries.fingerprint import all_fingerprints
-
-    path = os.path.join(
-        os.path.dirname(__file__), "registry_fingerprints.json"
+    from cdc_spark.queries.fingerprint import (
+        all_fingerprints,
+        load_ledger,
+        stale,
     )
-    with open(path) as f:
-        ledger = json.load(f)
-    current = all_fingerprints()
-    assert set(ledger) == set(current), (
-        "ledger/registry entry sets diverge — run "
-        "tools/update_fingerprints.py after adding/removing entries"
-    )
-    staged = set(entry.GATE_PREFIX) | set(entry.NEXT_TIER)
-    drifted = sorted(
-        n for n in current if ledger[n] != current[n] and n not in staged
-    )
-    assert not drifted, (
-        "plan or oracle changed after these entries were last staged "
-        "for a driver gate — add them to GATE_PREFIX/NEXT_TIER and "
-        f"refresh the ledger (tools/update_fingerprints.py): {drifted}"
+
+    changed = stale(load_ledger(), all_fingerprints())
+    assert not changed, (
+        "plan or oracle changed (or an entry was added or removed) "
+        "without a ledger record — run tools/update_fingerprints.py, "
+        f"then tools/check_oracle.py on the names it prints: {changed}"
     )
 
 
@@ -182,27 +248,28 @@ def test_fingerprint_covers_shared_operators():
     assert entry_fingerprint(tampered) != entry_fingerprint(spec)
 
 
-# --- plan-BUILD-time guardrail (r11 verdict item 4) -----------------
+# --- plan-BUILD guardrail (r11 verdict item 4) ---------------------
 #
 # Three rounds produced the same defect class three times (pq_encode
 # r7, ivf_assign r8, lsh_bucket r11): a Column tree composed from
 # thousands of F.lit calls costs one py4j round trip PER LITERAL at
 # plan-build time — ~200 s of pure driver time at the sized shapes,
 # invisible to correctness gates because the result is still right.
-# This guardrail times DataFrame CONSTRUCTION (fn call, no action)
-# for every registry entry and fails past a budget, so the next
-# instance dies in-repo instead of at an sf10 probe.
+# This guardrail counts the py4j round trips of DataFrame
+# CONSTRUCTION (fn call, no action) for every registry entry and
+# fails past a budget, so the next instance dies in-repo instead of
+# at an sf10 probe. It counts round trips, the cost the guard exists
+# for, rather than wall seconds: a wall-time budget let box speed
+# decide whether a storm was caught.
 
-# Construction budget for entries whose fn only BUILDS a plan (a few
-# py4j calls + optional sizing count() jobs at sf0.001): measured
-# max 2.4 s across all 251 lazy entries on a warm session on the
-# round-12 box; the round-13 box is ~2x slower (warm max ~5 s under a
-# full-suite session — cdc30). On a later 4-core box py4j got faster:
-# the 10 k-literal storm of the red test below built in 7.7–8.5 s, so
-# a 10 s budget no longer caught it, while the slowest lazy entry
-# built in 3.3 s (cdc30, cold). 6 s keeps the storm over budget there
-# and leaves ~1.2x headroom over the round-13 box's warm max.
-BUILD_BUDGET_SEC = 6.0
+# Round-trip budget for entries whose fn only BUILDS a plan (py4j
+# calls for the plan + optional sizing count() jobs at sf0.001).
+# Measured on a 4-core box: the slowest of the 251 lazy entries make
+# 8,067 (ss18) and 4,528 (ss22) round trips; the red test's storms
+# make ~42k (2.5k literals) and ~170k (10k). On that box the wall
+# times could not separate the two sides: cdc24 built in 6.6 s cold,
+# the 2.5k storm in 6.2 s.
+ROUND_TRIP_BUDGET = 20_000
 
 # Entries whose fn EXECUTES work before returning (their wall time is
 # pipeline execution, not plan build — a storm inside them would
@@ -243,76 +310,70 @@ def test_eager_build_exemptions_are_registered():
         assert name in REGISTRY, f"stale exemption: {name}"
 
 
-def test_plan_build_time_bounded(spark):
-    """Every non-exempt entry must CONSTRUCT its DataFrame within the
-    budget at sf0.001 — new entries are guarded by default (an entry
-    must be explicitly exempted, with a structural reason, to skip).
+def _count_round_trips(spark, monkeypatch) -> list[int]:
+    """Wrap the session's py4j client so that every round trip bumps
+    the returned one-element counter.
 
-    An entry that measures over budget is re-timed once and graded on
-    the min: the defect class being guarded (one py4j round trip PER
-    LITERAL) costs the same on every rebuild, while the benign
-    over-budget cause observed in practice — first-call JVM classload
-    and JIT of an entry family's operators on a cold or slower box
-    (cdc24 measured 7.8 s cold / 2.7 s warm on the round-13 box) —
-    vanishes on the retry. A storm therefore still fails; box noise
-    does not tighten or loosen the guardrail."""
-    import time
+    Classic-py4j only: the cost being counted IS the per-call py4j
+    round trip. Under Spark Connect, Column trees build client-side
+    with no bridge round trips, so there is nothing to count."""
+    import pytest
 
+    if not hasattr(spark, "sparkContext"):
+        pytest.skip(
+            "Spark Connect session: plans build client-side, the py4j "
+            "round trips this guardrail counts do not exist there"
+        )
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counted(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    return calls
+
+
+def test_plan_build_time_bounded(spark, monkeypatch):
+    """Every non-exempt entry must CONSTRUCT its DataFrame at sf0.001
+    within the round-trip budget — new entries are guarded by default
+    (an entry must be explicitly exempted, with a structural reason,
+    to skip)."""
+    calls = _count_round_trips(spark, monkeypatch)
     sf = "/root/testdata/sf0.001"
-    # absorb first-call session warm-up outside any entry's timing
-    REGISTRY["q01_pricing_summary"].fn(spark, sf)
     violations = []
     for name, spec in sorted(REGISTRY.items()):
         if name in EAGER_BUILD or "streaming" in spec.tags:
             continue
-        t0 = time.monotonic()
+        before = calls[0]
         spec.fn(spark, sf)
-        dt = time.monotonic() - t0
-        if dt > BUILD_BUDGET_SEC:
-            # warm retry — classload/JIT noise is one-shot, a
-            # literal storm is not
-            t0 = time.monotonic()
-            spec.fn(spark, sf)
-            dt = min(dt, time.monotonic() - t0)
-        if dt > BUILD_BUDGET_SEC:
-            violations.append(f"{name}: {dt:.1f}s")
+        n = calls[0] - before
+        if n > ROUND_TRIP_BUDGET:
+            violations.append(f"{name}: {n} round trips")
     assert not violations, (
         "plan construction over budget (literal storm? driver-side "
         f"loop?): {violations}"
     )
 
 
-def test_guardrail_catches_literal_storm(spark):
-    """RED case: a 10k-literal Column tree (the pq_encode/ivf_assign/
-    lsh_bucket disease) must measure ABOVE the budget, proving the
-    timing harness detects the class it exists for. (The cure is one
-    parsed SQL literal — lsh_bucket's array form builds in
-    milliseconds.)
-
-    Classic-py4j only: the cost being demonstrated IS the per-literal
-    py4j round trip. Under Spark Connect, Column trees build
-    client-side with no bridge round trips, the storm measures near
-    zero, and this red test would fail spuriously — and its
-    prescribed fix (lower BUILD_BUDGET_SEC) would tighten the main
-    guardrail against unrelated entries (r12 ADVICE)."""
-    import time
-
-    import pytest
+def test_guardrail_catches_literal_storm(spark, monkeypatch):
+    """RED case: a Column tree of 10k literals (the pq_encode/
+    ivf_assign/lsh_bucket disease) and one of 2.5k must both count
+    ABOVE the budget, proving the harness detects the class it exists
+    for. (The cure is one parsed SQL literal — lsh_bucket's array form
+    builds in a handful of round trips.)"""
     from pyspark.sql import functions as F
 
-    if not hasattr(spark, "sparkContext"):
-        pytest.skip(
-            "Spark Connect session: literals build client-side, the "
-            "py4j round-trip cost this red test demonstrates does not "
-            "exist there"
+    calls = _count_round_trips(spark, monkeypatch)
+    for n_literals in (10_000, 2_500):
+        before = calls[0]
+        col = F.lit(0.0)
+        for i in range(n_literals):
+            col = col + F.lit(float(i))
+        n = calls[0] - before
+        assert n > ROUND_TRIP_BUDGET, (
+            f"{n_literals}-literal tree made only {n} round trips — "
+            "lower ROUND_TRIP_BUDGET to keep the guardrail binding"
         )
-
-    t0 = time.monotonic()
-    col = F.lit(0.0)
-    for i in range(10_000):
-        col = col + F.lit(float(i))
-    dt = time.monotonic() - t0
-    assert dt > BUILD_BUDGET_SEC, (
-        f"10k-literal tree built in {dt:.1f}s — if py4j got this "
-        "fast, lower BUILD_BUDGET_SEC to keep the guardrail binding"
-    )

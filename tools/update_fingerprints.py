@@ -1,86 +1,77 @@
-"""Refresh the rotation-freshness ledger (tests/registry_fingerprints.json).
+"""Record entry changes in the gate ledger (tests/registry_fingerprints.json).
 
-Convention: run with entry names (or nothing, meaning "every drifted
-entry that is currently staged") when turning the rotation — the
-ledger records each entry's fingerprint as of its last staging, so a
-refresh outside a staging would blind the guard. ``--force`` allows
-exactly that, for ledger bootstraps and structural refactors where
-the staging capacity cannot hold the blast radius; say why in the
-commit message.
+A plain run recomputes every entry's fingerprint. A drifted or new
+entry is recorded at its current fingerprint as pending (round
+``null``), which moves it to the front of ``__spark_entry__.queries()``
+and so into the next driver gate; an entry that is no longer
+registered is dropped. The run ends by printing every pending name,
+ready to pass to ``tools/check_oracle.py``. Run it after any change
+under ``cdc_spark/``: the contract test fails on an unrecorded change.
+
+Turning a round: once round R's driver gate has run on the committed
+tree, ``--rotate R`` stamps that gate's 50 entries (the current first
+50 of ``queries()``) with round R at their current fingerprints, so
+the next order leads with whatever is still pending, then the entries
+whose last gate is oldest.
 
 Usage:
-    python tools/update_fingerprints.py            # staged drifted entries
-    python tools/update_fingerprints.py dd05 dd20  # specific entries
-    python tools/update_fingerprints.py --force    # ALL drifted entries
+    python tools/update_fingerprints.py              # record changes
+    python tools/update_fingerprints.py --rotate 15  # round 15 was gated
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-LEDGER = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tests",
-    "registry_fingerprints.json",
-)
-
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="*")
-    ap.add_argument("--force", action="store_true")
+    ap.add_argument(
+        "--rotate",
+        type=int,
+        metavar="R",
+        help="stamp the current first 50 entries as gated in round R",
+    )
     args = ap.parse_args()
 
     from cdc_spark.queries import REGISTRY
-    from cdc_spark.queries.fingerprint import all_fingerprints
+    from cdc_spark.queries.fingerprint import (
+        LEDGER,
+        all_fingerprints,
+        gate_order,
+        load_ledger,
+        refresh,
+        rotate,
+        stale,
+        write_ledger,
+    )
 
-    import __spark_entry__ as entry
-
-    staged = set(entry.GATE_PREFIX) | set(entry.NEXT_TIER)
+    oracled = {n for n, s in REGISTRY.items() if s.oracle is not None}
     current = all_fingerprints()
-    ledger: dict[str, str] = {}
-    if os.path.exists(LEDGER):
-        with open(LEDGER) as f:
-            ledger = json.load(f)
+    ledger = load_ledger()
+    if args.rotate is not None:
+        ledger = rotate(ledger, current, oracled, args.rotate)
+        print(f"stamped the first 50 entries with round {args.rotate}")
 
-    drifted = {n for n in current if ledger.get(n) != current[n]}
-    gone = [n for n in ledger if n not in REGISTRY]
-    if args.names:
-        targets = set(args.names)
-        unknown = targets - set(current)
-        if unknown:
-            print(f"unknown entries: {sorted(unknown)}")
-            return 1
-    elif args.force:
-        targets = drifted
-    else:
-        new = {n for n in drifted if n not in ledger}
-        targets = (drifted & staged) | new
-        blocked = drifted - staged - new
-        if blocked:
-            print(
-                "refusing to refresh UNSTAGED drifted entries (stage "
-                f"them or --force): {sorted(blocked)}"
-            )
-            return 1
+    changed = stale(ledger, current)
+    for n in changed:
+        if n not in current:
+            print(f"drop: {n}")
+        else:
+            print(f"{'new' if n not in ledger else 'refresh'}: {n}")
+    dropped = sum(n not in current for n in changed)
+    ledger = refresh(ledger, current)
+    write_ledger(ledger)
+    print(f"{len(changed) - dropped} refreshed, {dropped} dropped -> {LEDGER}")
 
-    for n in sorted(targets):
-        tag = "new" if n not in ledger else "refresh"
-        print(f"{tag}: {n} -> {current[n]}")
-        ledger[n] = current[n]
-    for n in gone:
-        print(f"drop (unregistered): {n}")
-        del ledger[n]
-
-    with open(LEDGER, "w") as f:
-        json.dump(dict(sorted(ledger.items())), f, indent=1)
-        f.write("\n")
-    print(f"{len(targets)} updated, {len(gone)} dropped -> {LEDGER}")
+    order = gate_order(ledger, ledger, oracled)
+    pending = [n for n in order if ledger[n][1] is None]
+    print(f"{len(pending)} pending:")
+    print(" ".join(pending))
     return 0
 
 
