@@ -19,29 +19,19 @@ pre-compaction version stays readable (time travel / audit).
 from __future__ import annotations
 
 import math
-import os
 
-from cdc_spark.streaming.state import BucketedStateTable
+from cdc_spark.streaming.state import BucketedStateTable, generations
 
 
-def dir_file_stats(path: str) -> dict:
-    """Parquet data-file census for one table/version directory.
-
-    Local-FS walk; on a cluster the same numbers come from the
-    FileSystem listing API (or the table format's manifest), with the
-    identical decision shape downstream.
-    """
-    sizes = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                sizes.append(os.path.getsize(os.path.join(root, f)))
-    n = len(sizes)
+def census(sizes) -> dict:
+    """File census (count, bytes, mean size) of a bucket or a version,
+    from the byte sizes its manifest records for its files."""
+    sizes = list(sizes)
     total = sum(sizes)
     return {
-        "n_files": n,
+        "n_files": len(sizes),
         "total_bytes": total,
-        "avg_file_bytes": total // n if n else 0,
+        "avg_file_bytes": total // len(sizes) if sizes else 0,
     }
 
 
@@ -70,26 +60,30 @@ def compact_buckets(
     """Compact fragmented buckets of a ``BucketedStateTable``.
 
     A micro-batch sink accretes files per touched bucket (one file set
-    per apply); this folds every bucket whose file census trips
-    ``needs_compaction`` — or that holds an insert-only generation
-    list — into byte-budgeted files, publishing a new version whose
-    manifest points compacted buckets at the new directories and
-    inherits the rest untouched: the same O(touched)-not-O(state)
-    discipline as the apply path, applied to maintenance.
+    per apply); this folds every bucket whose census trips
+    ``needs_compaction`` — or whose list names more than one version,
+    as insert-only appends leave it — into byte-budgeted files,
+    publishing a new version that lists them under the compacted
+    buckets and inherits the rest untouched: the same
+    O(touched)-not-O(state) discipline as the apply path, applied to
+    maintenance. The census is the current manifest's, no listing: a
+    file spanning several buckets counts its bytes in proportion to
+    each bucket's rows in it. A bucket that shares a file with a
+    compacted bucket is compacted with it, so every file compaction
+    reads is replaced whole.
 
     The fragmented buckets are read together with the manifest's
-    schema (no footer inference; buckets written before a schema
+    schema (no footer inference; files written before a schema
     evolution null-fill the newer columns) and
     ``repartitionByRange(n, bucket, *keys)`` makes output partitions
-    contiguous in bucket order, so almost every partition holds a
-    single bucket and the bucket-partitioned write does not
-    re-fragment (total files ≈ ceil(bytes/target) + one boundary file
-    per bucket). A table built with ``one_file_per_bucket`` keeps its
-    one file per bucket instead. The rows are committed through
-    ``overwrite_buckets`` with ``compaction: True`` in the manifest,
-    so the version carries the applied-LSN watermark and ``batch_id``
-    over, and an apply racing the compaction wins cleanly (the
-    compaction rolls back with ``ConcurrentWriteError``).
+    contiguous in bucket order, so each new file covers a narrow
+    bucket range — how single-bucket reads get cheap again after wide
+    micro-batch files (total files ≈ max(buckets, ceil(bytes/target))).
+    The rows are committed through ``overwrite_buckets`` with
+    ``compaction: True`` in the manifest, so the version carries the
+    applied-LSN watermark and ``batch_id`` over, and an apply racing
+    the compaction wins cleanly (the compaction rolls back with
+    ``ConcurrentWriteError``).
 
     Returns the new version, or the current one when nothing needs
     compaction. Data is byte-for-byte equivalent; only layout changes.
@@ -97,29 +91,41 @@ def compact_buckets(
     v, man = state._current()
     if v is None:
         raise ValueError("cannot compact an empty state table")
-    frag: dict[int, int] = {}  # bucket -> bytes
-    for b in man["buckets"]:
-        # a generation list is censused together — compaction is
-        # exactly what folds it back to one directory
-        per_dir = [dir_file_stats(d) for d in state._dirs(man, [b])]
-        n_files = sum(s["n_files"] for s in per_dir)
-        total = sum(s["total_bytes"] for s in per_dir)
-        stats = {
-            "n_files": n_files,
-            "total_bytes": total,
-            "avg_file_bytes": total // n_files if n_files else 0,
-        }
-        if len(per_dir) > 1 or needs_compaction(
-            stats,
+    files = man["files"]
+    frag = {
+        b
+        for b, listed in man["buckets"].items()
+        if generations(listed) > 1
+        or needs_compaction(
+            census(
+                files[rel]["bytes"] * files[rel]["counts"][b]
+                // files[rel]["rows"]
+                for rel in listed
+            ),
             target_file_bytes=target_file_bytes,
             min_files=min_files,
-        ):
-            frag[int(b)] = total
+        )
+    }
+    # close over shared files: every bucket listing a file a compacted
+    # bucket lists is compacted too, so each file read here leaves the
+    # manifest whole (its stale rows and its version pin with it)
+    while True:
+        shared = {rel for b in frag for rel in man["buckets"][b]}
+        grown = frag | {
+            b
+            for b, listed in man["buckets"].items()
+            if shared.intersection(listed)
+        }
+        if grown == frag:
+            break
+        frag = grown
     if not frag:
         return v
 
-    n_out = max(len(frag), math.ceil(sum(frag.values()) / target_file_bytes))
-    rows = state._read_dirs(man, state._dirs(man, frag)).repartitionByRange(
+    live = state._live_files(man, frag)
+    read_bytes = sum(files[rel]["bytes"] for rel in live)
+    n_out = max(len(frag), math.ceil(read_bytes / target_file_bytes))
+    rows = state._read(man, frag).repartitionByRange(
         n_out, state._bucket_expr(), *state.keys
     )
     return state.overwrite_buckets(

@@ -1137,8 +1137,8 @@ def cdc18_dead_letter_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     note="change-data-feed reconstruction between two state versions "
     "(the Delta-CDF shape): manifests double as the change index, so "
-    "only buckets whose directory mapping differs between the "
-    "versions are opened and full-outer-diffed — O(changed buckets), "
+    "only buckets whose file list differs between the "
+    "versions are read and full-outer-diffed — O(changed buckets), "
     "not O(state). Oracle recomputes both snapshots from the log and "
     "diffs them in SQL",
     tags=("cdc", "time-travel", "audit"),
@@ -1161,17 +1161,11 @@ def cdc19_version_diff_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     mx = changes.agg(F.max("lsn")).first()[0] or 0
-    # one_file_per_bucket: each replay apply's merge otherwise lands in
-    # ONE AQE-coalesced task writing all 16 bucket files sequentially
-    # (measured A/B: 3.6-4.4 → 3.0-3.6 s end-to-end); rows are narrow
-    # and the version-diff read side then opens one footer per changed
-    # bucket — the read-heavy-audit trade, same as dd13's state
     state = BucketedStateTable(
         spark,
         tempfile.mkdtemp(prefix="cdc19_state_"),
         ["user_id"],
         n_buckets=16,
-        one_file_per_bucket=True,
     )
     bounds = [(None, mx // 3), (mx // 3, 2 * mx // 3), (2 * mx // 3, None)]
     # ONE pass computes every replay batch's touched-bucket info

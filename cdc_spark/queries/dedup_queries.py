@@ -1518,53 +1518,35 @@ def dd12_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "incremental", "state"),
 )
 def dd13_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
     import tempfile
 
-    from cdc_spark.streaming.state import BucketedStateTable, TouchedInfo
+    from cdc_spark.streaming.state import BucketedStateTable, local_fs_path
 
     docs = load_table(spark, sf_dir, "documents")
     # 64 buckets: plenty to prove pruning (the probe batch hashes into
-    # ≤ its own row count of buckets) without paying 100s of tiny
-    # bucket-directory writes at test scale; production sizes this to
+    # ≤ its own row count of buckets); production sizes this to
     # tens-of-GB buckets exactly like the CDC row state.
-    # one_file_per_bucket: the merged state otherwise lands in however
-    # many tasks AQE coalesces the merge to — ONE task at test scale,
-    # writing all 64 bucket files sequentially (measured A/B: bootstrap
-    # 1.9→1.3 s, probe apply 2.3→2.0 s). The pre-write repartition
-    # shuffles only fixed-width 40-byte fingerprint rows, and a
-    # membership table is read-heavy: every pruned probe then opens
-    # exactly ONE footer per touched bucket instead of tasks×versions
-    # fragments — the right trade for this table at any scale.
     n_buckets = 64
     state = BucketedStateTable(
         spark,
         tempfile.mkdtemp(prefix="dd13_state_"),
         ["content_hash"],
         n_buckets=n_buckets,
-        one_file_per_bucket=True,
     )
     seed = docs.select(
         F.sha2(F.col("text"), 256).alias("content_hash"),
         F.col("doc_id").alias("keeper_id"),
-    ).groupBy("content_hash").agg(
-        F.min("keeper_id").alias("keeper_id")
-    ).select(
-        F.lit("c").alias("op"),
-        F.col("keeper_id").alias("lsn"),
-        "content_hash",
-        "keeper_id",
-    )
-    # bootstrap apply: without touched_info, apply() runs a 1-row
-    # touched-bucket scan that computes the ENTIRE seed pipeline
-    # (corpus sha2 + groupBy) once, and the bucket write computes it
-    # again. A corpus bootstrap touches every bucket by construction
-    # (claiming a superset is safe: with no prior version the manifest
-    # records exactly the buckets that receive files), so the caller
-    # states it and the seed pipeline runs once, in the write.
-    state.apply(
-        seed,
-        ["keeper_id"],
-        touched_info=TouchedInfo(set(range(n_buckets)), False),
+    ).groupBy("content_hash").agg(F.min("keeper_id").alias("keeper_id"))
+    # bootstrap: the grouped seed already IS the state (one row per
+    # key, every op an insert), so it is written as is, with no merge,
+    # into every bucket. Range-partitioned by bucket, each write task
+    # holds one bucket and writes one narrow file: a membership table
+    # is read-heavy, and every pruned probe then opens one file per
+    # touched bucket instead of every file of the corpus state.
+    state.overwrite_buckets(
+        seed.repartitionByRange(n_buckets, state._bucket_expr()),
+        range(n_buckets),
     )
 
     newb = docs.where(F.col("doc_id") % 50 == 0).select(
@@ -1593,24 +1575,28 @@ def dd13_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     touched = sorted(probe_info["bs"])
     batch_n = probe_info["n"]
-    # The O(batch) claim is the bucket-directory SELECTION, not
-    # universal partial coverage — a large-enough probe batch
-    # legitimately hashes into every bucket (seen at sf1: 1000 doc
-    # hashes over 64 buckets; the dd14 lesson, round 7). So the
-    # scale-invariant assert is mechanism-level: every file the
-    # pruned read opens must live under a touched bucket's directory.
+    # The O(batch) claim is the file SELECTION, not universal partial
+    # coverage — a large-enough probe batch legitimately hashes into
+    # every bucket (seen at sf1: 1000 doc hashes over 64 buckets; the
+    # dd14 lesson, round 7). So the scale-invariant assert is
+    # mechanism-level: every file the pruned read opens is listed
+    # under a touched bucket, and a probe that misses some bucket
+    # leaves some file of the state unopened.
     prior = state.read_buckets(touched)
-    touched_dirs = {f"__bucket={int(b)}" for b in touched}
-    opened = {
-        seg
-        for p in prior.inputFiles()
-        for seg in p.split("/")
-        if seg.startswith("__bucket=")
+    man = state._manifest()
+    listed = {
+        os.path.join(state.path, rel)
+        for b in touched
+        for rel in man["buckets"].get(str(b), ())
     }
-    if not opened <= touched_dirs:
+    opened = {local_fs_path(p) for p in prior.inputFiles()}
+    if not opened <= listed or (
+        len(touched) < n_buckets and len(opened) >= len(man["files"])
+    ):
         raise AssertionError(
-            "bucket-pruned read opened untouched buckets: "
-            f"{sorted(opened - touched_dirs)[:5]}"
+            f"bucket-pruned read of {len(touched)}/{n_buckets} buckets "
+            f"opened {len(opened)}/{len(man['files'])} files, "
+            f"{len(opened - listed)} unlisted"
         )
     # ONE anti-join against the pruned prior state (bounded by the
     # batch): the 'new' count, the dup complement and the merge
@@ -1643,9 +1629,9 @@ def dd13_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         ("dup", dup_n),
         ("new", new_n),
-        # footer-metadata count: the committed version's exact size
-        # without re-scanning all 64 bucket directories (state.row_count
-        # docstring has the equivalence argument)
+        # manifest count: the committed version's exact size without
+        # re-scanning the state (state.row_count docstring has the
+        # equivalence argument)
         ("state_after", state.row_count()),
     ]
     return spark.createDataFrame(rows, "route string, n long")

@@ -398,7 +398,7 @@ def io08_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("io", "maintenance", "compaction"),
 )
 def io09_bucket_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cdc_spark.operators.maintenance import compact_buckets, dir_file_stats
+    from cdc_spark.operators.maintenance import compact_buckets
     from cdc_spark.queries.cdc_queries import _as_changes
     from cdc_spark.streaming.state import BucketedStateTable
 
@@ -411,15 +411,12 @@ def io09_bucket_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id"],
         n_buckets=4,
     )
-    def reachable_files(v: int) -> int:
-        man = state._load_manifest(v)
-        return sum(
-            dir_file_stats(os.path.join(state.path, rel))["n_files"]
-            for rel in man["buckets"].values()
-        )
+    def live_files(v: int) -> int:
+        # distinct files the version's buckets list: what a read opens
+        return len(state._load_manifest(v)["files"])
 
     # Fragment the writes the way a high-parallelism micro-batch sink
-    # does (each touched bucket gets one file per writing task). At
+    # does (each writing task leaves one file per apply). At
     # sf0.01 AQE's partition coalescing would fold the tiny shuffle
     # back to one task, hiding exactly the layout problem this
     # operator exists to fix — suspend coalescing for the applies
@@ -443,9 +440,9 @@ def io09_bucket_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set(coalesce_key, prev_coalesce)
         spark.conf.set(shuffle_key, prev_shuffle)
     v = state.current_version()
-    before = reachable_files(v)
+    before = live_files(v)
     v_new = compact_buckets(state, min_files=3)
-    after = reachable_files(v_new)
+    after = live_files(v_new)
     if v_new == v or after >= before:
         raise AssertionError(
             f"compaction did not shrink layout: {before} -> {after} "

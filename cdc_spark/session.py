@@ -13,6 +13,8 @@ hold up on a 1000-executor cluster at ~100 TB:
   Arrow batches, not pickled rows.
 - Shuffle partitions sized to cores for local runs; on a real cluster
   AQE coalesces from a deliberately high initial number instead.
+- Python workers find ``cdc_spark`` wherever the driver runs from:
+  the directory holding the package leads their ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -22,6 +24,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory that holds the cdc_spark package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -54,6 +58,10 @@ def get_spark(
         # Spark parquet reader rejects; read as long and convert in the
         # catalog (see catalog.load_table).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # UDF and mapInPandas bodies import cdc_spark in the workers
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(
+            filter(None, (PACKAGE_ROOT, os.environ.get("PYTHONPATH")))
+        ))
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

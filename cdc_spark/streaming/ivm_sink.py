@@ -26,9 +26,10 @@ Per batch the work is:
    row-state apply, which reuses the scan record;
 5. the affected groups' aggregate rows are read bucket-pruned, merged
    with the delta, and the touched aggregate buckets are rewritten
-   through ``overwrite_buckets`` — groups whose row count reaches zero
-   are simply not written, so the aggregate table never carries empty
-   groups;
+   through ``overwrite_buckets`` as one file per write task (a few
+   files, no shuffle: a group-cardinality table is small) — groups
+   whose row count reaches zero are simply not written, so the
+   aggregate table never carries empty groups;
 6. the batch's and the delta's checkpoint blocks are released.
 
 State size appears nowhere: both sides cost O(batch + touched
@@ -78,12 +79,7 @@ class IncrementalAggregate:
         self.measures = dict(measures)
         self.scale = scale
         self.table = BucketedStateTable(
-            state.spark,
-            agg_path,
-            self.group_cols,
-            n_buckets=n_buckets,
-            one_file_per_bucket=True,  # group-cardinality table: keep
-            # one footer per bucket so pruned reads stay metadata-cheap
+            state.spark, agg_path, self.group_cols, n_buckets=n_buckets
         )
         self._payload = ["__n"]
         for alias in self.measures:
@@ -152,10 +148,8 @@ class IncrementalAggregate:
             # the one-parse fold SQL needs (see BucketedStateTable.apply).
             pre = None
             if man is not None:
-                pre = st._read_dirs(
-                    man,
-                    st._dirs(man, touched_info.buckets),
-                    session=changes.sparkSession,
+                pre = st._read(
+                    man, touched_info.buckets, session=changes.sparkSession
                 ).join(
                     changes.select(*st.keys).distinct(),
                     on=st.keys,

@@ -109,7 +109,7 @@ class CdcStreamPipeline:
 
         Only the state buckets touched by this batch's keys are
         rewritten; untouched buckets are inherited by manifest
-        reference (their files are not even opened)."""
+        reference (files no touched bucket lists are not opened)."""
         typed = self.registry.materialize(
             self._parse(raw_batch), self.schema, self.table
         )

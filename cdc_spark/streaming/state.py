@@ -8,10 +8,14 @@ to be O(touched buckets), not O(state). This module provides
 Delta-MERGE-shaped semantics without Delta jars:
 
 - state is hash-bucketed by key: ``pmod(xxhash64(keys), n_buckets)``;
-- each version is a MANIFEST mapping bucket-id → parquet directory;
-  buckets untouched by a batch are *inherited* — the manifest entry
-  keeps pointing at the older version's directory, and the files are
-  never rewritten (byte-identical by construction, asserted in tests);
+- each version writes one flat parquet file per write task, sorted
+  by the ``__bucket`` column it carries; a MANIFEST maps each bucket
+  id → the files holding its live rows, plus each file's rows per
+  bucket and bytes.
+  A file can span buckets, so a read filters each file to the
+  requested buckets that still list it. Untouched buckets are
+  *inherited*: their lists keep naming older files, which are never
+  rewritten (byte-identical by construction, asserted in tests);
 - a micro-batch rewrites only the buckets its keys hash into (a
   truncate dirties every bucket — it wipes all keys);
 - the CURRENT pointer is fsync'd and swapped atomically; a corrupt or
@@ -34,26 +38,31 @@ import json
 import os
 from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from cdc_spark.cdc.merge import apply_changes
 
 _BUCKET = "__bucket"
 
 # Generation cap for insert-only appends (round 14): an
-# ``apply(..., insert_only=True)`` APPENDS a delta directory to each
-# touched bucket instead of rewriting its contents — O(batch) written
-# bytes instead of O(touched bucket contents), the LSM discipline for
-# the commonest CDC-dedup shape (probe, anti-join, insert the
-# provably-new keys). Reads union a bucket's generation list; when any
-# touched bucket has MAX_GENERATIONS generations the apply falls back
-# to the normal merge path, which folds those buckets back to one
-# directory — bounded read amplification, coarse compaction.
+# ``apply(..., insert_only=True)`` APPENDS the batch's files to each
+# touched bucket's list — O(batch) written bytes, the LSM discipline
+# for the commonest CDC-dedup shape (probe, anti-join, insert the
+# provably-new keys). When a touched bucket's list names
+# MAX_GENERATIONS distinct versions the apply takes the merge path,
+# which folds it back to one version's files — bounded read
+# amplification, coarse compaction.
 MAX_GENERATIONS = 8
+
+
+def generations(files: Sequence[str]) -> int:
+    """Distinct versions a bucket's file list names (``vK/...``)."""
+    return len({rel.split("/", 1)[0] for rel in files})
 
 
 class TouchedInfo(NamedTuple):
@@ -84,7 +93,7 @@ class ConcurrentWriteError(RuntimeError):
 def local_fs_path(path: str) -> str:
     """The state layer's single filesystem seam (round 14).
 
-    Manifests, the CURRENT pointer, footer-metadata counts and staged
+    Manifests, the CURRENT pointer, commit-time file stats and staged
     shard moves all use plain local-file IO (``open``/``os.listdir``/
     ``shutil``). That is correct in this harness — every state path is
     a local temp directory by design — but silently WRONG against
@@ -179,19 +188,11 @@ class BucketedStateTable:
         keys: Sequence[str],
         *,
         n_buckets: int = 16,
-        one_file_per_bucket: bool = False,
     ):
         self.spark = spark
         self.path = local_fs_path(path)  # the one FS-assumption seam
         self.keys = list(keys)
         self.n_buckets = n_buckets
-        # For SMALL tables (materialized aggregates, dimension state) a
-        # pre-write repartition by bucket costs a tiny shuffle and buys
-        # exactly one file per bucket — reads open n_buckets footers
-        # instead of tasks × n_buckets. Leave False for large row
-        # state, where the extra full shuffle of touched data per
-        # micro-batch is the wrong trade.
-        self.one_file_per_bucket = one_file_per_bucket
         os.makedirs(self.path, exist_ok=True)
 
     # --- layout -------------------------------------------------------
@@ -211,24 +212,23 @@ class BucketedStateTable:
             return json.load(fh)
 
     @staticmethod
-    def _rels(rel) -> list[str]:
-        """A manifest bucket entry is a single relative directory
-        (rewritten bucket) or a list of them, oldest first (base +
-        appended insert-only generations)."""
-        return list(rel) if isinstance(rel, list) else [rel]
-
-    def _dirs(self, man: dict, bucket_ids=None) -> list[str]:
-        """Data directories of the named buckets (every bucket when
-        None) in manifest ``man``, generation lists flattened. Buckets
-        with no files yet are silently absent (an empty bucket has no
-        rows)."""
-        wanted = None if bucket_ids is None else {int(b) for b in bucket_ids}
-        return [
-            os.path.join(self.path, r)
-            for b, rel in man["buckets"].items()
-            if wanted is None or int(b) in wanted
-            for r in self._rels(rel)
-        ]
+    def _live_files(man: dict, bucket_ids=None) -> dict[str, frozenset | None]:
+        """Files the named buckets (every bucket when None) of manifest
+        ``man`` list, each mapped to the buckets a read of it keeps —
+        None when all its rows are wanted and live (each bucket it
+        holds rows of wants and lists it)."""
+        wanted = None if bucket_ids is None else {str(b) for b in bucket_ids}
+        live: dict[str, set[str]] = {}
+        for b, files in man["buckets"].items():
+            if wanted is None or b in wanted:
+                for rel in files:
+                    live.setdefault(rel, set()).add(b)
+        return {
+            rel: None
+            if man["files"][rel]["counts"].keys() <= bs
+            else frozenset(int(b) for b in bs)
+            for rel, bs in live.items()
+        }
 
     def current_version(self) -> int | None:
         return self._current()[0]
@@ -312,7 +312,7 @@ class BucketedStateTable:
         man = self._manifest(version)
         if man is None:
             return None
-        return self._read_dirs(man, self._dirs(man), session=session)
+        return self._read(man, session=session)
 
     def read_as_of_lsn(self, lsn: int) -> DataFrame | None:
         """Snapshot-consistent read at a replication position: the
@@ -350,10 +350,10 @@ class BucketedStateTable:
         aggregate from the feed alone: delta = f(new) - f(old), no
         read of the base state.
 
-        Manifests double as the change index: a bucket whose directory
-        mapping is identical in both manifests was *inherited* through
-        every intermediate apply, so none of its keys changed — only
-        buckets whose mapping differs are opened and full-outer-diffed.
+        Manifests double as the change index: a bucket whose file list
+        is identical in both manifests was *inherited* through every
+        intermediate apply, so none of its keys changed — only buckets
+        whose list differs are read and full-outer-diffed.
         Cost is O(changed buckets), not O(state), exactly the apply
         path's discipline applied to auditing. The reference's analog
         is replaying the WAL between two LSNs (``main.go:66-136``);
@@ -367,8 +367,8 @@ class BucketedStateTable:
             (b for b in set(ba) | set(bb) if ba.get(b) != bb.get(b)),
             key=int,
         )
-        old = self._read_dirs(man_a, self._dirs(man_a, changed))
-        new = self._read_dirs(man_b, self._dirs(man_b, changed))
+        old = self._read(man_a, changed)
+        new = self._read(man_b, changed)
         vcols = [
             f.name
             for f in new.schema.fields
@@ -416,58 +416,58 @@ class BucketedStateTable:
     def read_buckets(
         self, bucket_ids, version: int | None = None
     ) -> DataFrame | None:
-        """Bucket-pruned read: only the named buckets' directories are
+        """Bucket-pruned read: only files the named buckets list are
         opened — the I/O analog of partition pruning, O(touched
         buckets) regardless of table size."""
         man = self._manifest(version)
         if man is None:
             return None
-        return self._read_dirs(man, self._dirs(man, bucket_ids))
+        return self._read(man, bucket_ids)
 
-    def _read_dirs(
-        self, man: dict, dirs: list[str], session=None
-    ) -> DataFrame:
+    def _read(self, man: dict, bucket_ids=None, session=None) -> DataFrame:
+        """Live rows of the named buckets (every bucket when None):
+        files needing the same bucket filter share one scan."""
         spark = session or self.spark
         schema = StructType.fromJson(man["schema"])
-        if not dirs:
+        groups: dict[frozenset | None, list[str]] = {}
+        for rel, keep in self._live_files(man, bucket_ids).items():
+            groups.setdefault(keep, []).append(os.path.join(self.path, rel))
+        if not groups:
             return spark.createDataFrame([], schema)
         # The manifest records the table's current schema, so the scan
         # needs no footer-based inference (one listing+schema job per
         # read saved — that fixed cost dominates small micro-batch
-        # applies). Buckets inherited from before a schema evolution
-        # may lack newer columns; an explicit user schema makes the
-        # parquet reader fill those with null, which is exactly what
+        # applies). Files written before a schema evolution may lack
+        # newer columns; an explicit user schema makes the parquet
+        # reader fill those with null, which is exactly what
         # mergeSchema=true derived by scanning every footer.
-        return spark.read.schema(schema).parquet(*dirs)
+        scan = StructType(
+            [*schema.fields, StructField(_BUCKET, IntegerType())]
+        )
+        parts = []
+        for keep, paths in groups.items():
+            df = spark.read.schema(scan).parquet(*paths)
+            if keep is not None:
+                df = df.where(F.col(_BUCKET).isin(sorted(keep)))
+            parts.append(df.drop(_BUCKET))
+        return reduce(DataFrame.union, parts)
 
     def row_count(self, version: int | None = None) -> int | None:
-        """Exact row count of a committed version from parquet footer
-        metadata alone — no Spark job, no data read (round 13, guide
-        §1.4/§6: ``read().count()`` scanned every bucket just to add
-        up numbers each footer already stores; at 100 TB that is a
-        full-state pass for one integer). Footer ``num_rows`` is exact
-        by the parquet spec, so this equals ``read().count()`` always.
-        """
-        import pyarrow.parquet as pq
-
+        """Exact row count of a committed version from its manifest
+        alone — no Spark job, no data read (round 13: ``read().count()``
+        scanned the whole state for one integer). The commit records
+        each file's rows per bucket, and a bucket's live rows are its
+        rows in the files it lists, so this equals ``read().count()``
+        always — also for a file whose sibling buckets were rewritten
+        since."""
         man = self._manifest(version)
         if man is None:
             return None
-        total = 0
-        for d in self._dirs(man):
-            for name in os.listdir(d):
-                # every non-hidden file — the same visibility rule the
-                # parquet scan applies (names starting with '_' or '.'
-                # are metadata: _SUCCESS, .crc), so this sums exactly
-                # the files read() would scan regardless of how a
-                # writer names its data files (r13 ADVICE: the old
-                # 'part-' prefix filter silently undercounted any
-                # differently-named data file)
-                if not name.startswith(("_", ".")):
-                    total += pq.ParquetFile(
-                        os.path.join(d, name)
-                    ).metadata.num_rows
-        return total
+        return sum(
+            man["files"][rel]["counts"][b]
+            for b, files in man["buckets"].items()
+            for rel in files
+        )
 
     # --- incremental apply -------------------------------------------
 
@@ -492,15 +492,15 @@ class BucketedStateTable:
         ``insert_only=True`` is the caller's GUARANTEE that no change
         key exists in the current state (e.g. the batch was anti-joined
         against a membership probe first — the dd13 shape). The apply
-        then APPENDS one delta directory per touched bucket instead of
-        reading and rewriting bucket contents: written bytes are
-        O(batch), never O(touched bucket contents) — at tens-of-GB
+        then APPENDS the batch's files to the touched buckets' lists
+        instead of reading and rewriting bucket contents: written bytes
+        are O(batch), never O(touched bucket contents) — at tens-of-GB
         buckets that is the difference between appending megabytes and
         rewriting terabytes per probe batch. Reads union a bucket's
-        generation list (read/read_buckets/version_diff/row_count all
-        flatten it). The apply takes the merge path instead — folding
-        the touched buckets to one directory again — when a touched
-        bucket already holds ``MAX_GENERATIONS`` generations, when the
+        files (read/read_buckets/version_diff/row_count all do). The
+        apply takes the merge path instead — folding the touched
+        buckets to one version's files again — when a touched bucket
+        already holds ``MAX_GENERATIONS`` generations, when the
         batch truncates, and when it carries any op other than c/r (a
         delete or update must reach the stored row, which an append
         cannot). A violated guarantee — a c/r for a key already stored
@@ -556,25 +556,24 @@ class BucketedStateTable:
                 and not touched_info.has_non_insert
                 and man is not None
                 and not any(
-                    len(self._rels(man["buckets"][str(b)]))
+                    generations(man["buckets"].get(str(b), ()))
                     >= MAX_GENERATIONS
                     for b in touched
-                    if str(b) in man["buckets"]
                 )
             )
 
             base = None
-            if man is not None and not append:
-                base_dirs = self._dirs(man, touched)
-                if base_dirs:
-                    # read base on the CHANGES frame's session: inside
-                    # foreachBatch the batch frame lives in a cloned
-                    # micro-batch session, and apply_changes' one-parse
-                    # SQL resolves both relations in one session — a
-                    # base bound to the outer session would not resolve
-                    base = self._read_dirs(
-                        man, base_dirs, session=changes.sparkSession
-                    )
+            if (
+                man is not None
+                and not append
+                and any(str(b) in man["buckets"] for b in touched)
+            ):
+                # read base on the CHANGES frame's session: inside
+                # foreachBatch the batch frame lives in a cloned
+                # micro-batch session, and apply_changes' one-parse SQL
+                # resolves both relations in one session — a base bound
+                # to the outer session would not resolve
+                base = self._read(man, touched, session=changes.sparkSession)
 
             if len(touched) < self.n_buckets:
                 changes = changes.where(
@@ -583,7 +582,7 @@ class BucketedStateTable:
             # mid-stream schema evolution: apply_changes widens the
             # base with nulls for payload columns it predates; the
             # committed manifest then records the widened schema, and
-            # inherited old buckets null-backfill on read (_read_dirs)
+            # inherited old files null-backfill on read (_read)
             new_state = apply_changes(
                 base,
                 changes,
@@ -615,14 +614,15 @@ class BucketedStateTable:
         references.
 
         Bucket inheritance makes naive deletion wrong: manifest vN may
-        point at ``vK/__bucket=i`` for K << N (the bucket was never
-        rewritten since), so a version directory stays pinned as long
-        as ANY retained manifest references it. Unreferenced, unretained
-        version directories (superseded bucket rewrites + aborted
-        writes) are removed whole. Time travel shrinks to the retained
-        window; the IVM sink's resync handles a vacuumed-away pre
-        version by falling back to a full rebuild. O(versions) driver
-        work, no Spark job.
+        list ``vK/part-….parquet`` under bucket i for K << N (the bucket
+        was never rewritten since), so a version directory stays pinned
+        as long as ANY retained manifest lists one of its files — also
+        when only a sibling bucket of that file is still live.
+        Unreferenced, unretained version directories (superseded bucket
+        rewrites + aborted writes) are removed whole. Time travel
+        shrinks to the retained window; the IVM sink's resync handles a
+        vacuumed-away pre version by falling back to a full rebuild.
+        O(versions) driver work, no Spark job.
 
         Returns ``{"removed": [...], "kept": [...]}`` (version ints).
         """
@@ -643,11 +643,7 @@ class BucketedStateTable:
                 man = self._load_manifest(v)
             except (FileNotFoundError, json.JSONDecodeError):
                 continue
-            for rel in man["buckets"].values():
-                for r in self._rels(rel):
-                    head = r.split("/", 1)[0]
-                    if head.startswith("v") and head[1:].isdigit():
-                        pinned.add(int(head[1:]))
+            pinned.update(int(rel.split("/")[0][1:]) for rel in man["files"])
         removed = []
         for v in versions:
             if v not in pinned:
@@ -714,57 +710,44 @@ class BucketedStateTable:
         ``prev``'s ``applied_lsn`` and ``batch_id``; a non-None value
         in ``extra_meta`` replaces an inherited one."""
         v_cur = prev["version"] if prev is not None else None
-        prev_buckets: dict[str, str | list] = (
-            prev["buckets"] if prev is not None else {}
-        )
         v_new = (v_cur or 0) + 1
         target = self._version_dir(v_new)
+        written = {}
         if new_state is None:
             os.makedirs(target, exist_ok=True)
             schema = prev["schema"]
         else:
-            # no pre-write repartition (saves a full shuffle of the
-            # touched data per micro-batch). Tradeoff: each output task
-            # may write a file into every touched-bucket dir, so a
-            # version holds up to tasks × |touched| files; AQE
-            # coalesces small merges to few tasks, and compaction
-            # (operators/maintenance.py) folds fragments when the
-            # count matters.
+            # no shuffle, no partitionBy: a write costs per file, so
+            # each task writes ONE file, sorted by bucket (compaction
+            # narrows wide files when single-bucket reads matter)
             out = new_state.withColumn(_BUCKET, self._bucket_expr())
-            if self.one_file_per_bucket:
-                out = out.repartition(self.n_buckets, F.col(_BUCKET))
-            out.write.partitionBy(_BUCKET).mode("overwrite").parquet(target)
+            out = out.sortWithinPartitions(_BUCKET)
+            out.write.mode("overwrite").parquet(target)
             schema = json.loads(new_state.schema.json())
+            written = self._file_stats(v_new)
 
-        written = {
-            int(name.split("=", 1)[1]): f"v{v_new}/{name}"
-            for name in os.listdir(target)
-            if name.startswith(f"{_BUCKET}=")
+        # an append extends the touched buckets' lists, a rewrite
+        # replaces them; a new file is listed under the touched
+        # buckets it holds rows of
+        prev_buckets = prev["buckets"] if prev is not None else {}
+        buckets = {
+            b: list(files)
+            for b, files in prev_buckets.items()
+            if append or int(b) not in touched
         }
-        if append:
-            # insert-only delta: touched buckets KEEP their previous
-            # directories and gain one generation; a touched bucket
-            # with no written file (claimed but empty) inherits as-is
-            buckets = dict(prev_buckets)
-            for b, rel in written.items():
-                sb = str(b)
-                if sb in buckets:
-                    buckets[sb] = self._rels(buckets[sb]) + [rel]
-                else:
-                    buckets[sb] = rel
-        else:
-            buckets = {
-                b: rel
-                for b, rel in prev_buckets.items()
-                if int(b) not in touched
-            }
-            buckets.update({str(b): rel for b, rel in written.items()})
+        for rel, f in written.items():
+            for b in sorted(f["counts"], key=int):
+                if int(b) in touched:
+                    buckets.setdefault(b, []).append(rel)
+        known = {**(prev["files"] if prev is not None else {}), **written}
+        files = {rel: known[rel] for fs in buckets.values() for rel in fs}
         manifest = {
             "version": v_new,
             "n_buckets": self.n_buckets,
             "keys": self.keys,
             "schema": schema,
             "buckets": buckets,
+            "files": files,
             "touched": sorted(touched),
         }
         # the watermark and the epoch carry over every commit (a
@@ -787,6 +770,33 @@ class BucketedStateTable:
         )
         self._commit_pointer(v_cur, v_new)
         return v_new
+
+    def _file_stats(self, v: int) -> dict[str, dict]:
+        """Each data file of version ``v`` with rows → its row count per
+        bucket, total rows and bytes: one pyarrow read of the file's
+        sorted, run-length-encoded ``__bucket`` column, no Spark job.
+        '_' and '.' names are metadata, as for a scan."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        d = self._version_dir(v)
+        out = {}
+        for name in sorted(os.listdir(d)):
+            if name.startswith(("_", ".")):
+                continue
+            path = os.path.join(d, name)
+            col = pq.read_table(path, columns=[_BUCKET])[_BUCKET]
+            if not len(col):
+                continue
+            out[f"v{v}/{name}"] = {
+                "counts": {
+                    str(vc["values"]): vc["counts"]
+                    for vc in pc.value_counts(col).to_pylist()
+                },
+                "rows": len(col),
+                "bytes": os.path.getsize(path),
+            }
+        return out
 
     def _commit_pointer(self, v_expected: int | None, v_new: int) -> None:
         """Optimistic-concurrency commit: swap CURRENT only if it still

@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cdc_spark.cdc.merge import apply_changes
-from cdc_spark.streaming.state import BucketedStateTable
+from cdc_spark.streaming.state import BucketedStateTable, generations
 
 SCHEMA = "id long, name string, qty long, op string, lsn long"
 
@@ -28,18 +28,27 @@ def _changes(spark, rows):
 
 
 def _bucket_files(path: str, man: dict) -> dict[str, list[str]]:
-    """bucket id → sorted list of (relpath, sha256) under its dir."""
-    out = {}
-    for b, rel in man["buckets"].items():
-        d = Path(path) / rel
-        out[b] = sorted(
-            (
-                str(p.relative_to(path)),
-                hashlib.sha256(p.read_bytes()).hexdigest(),
-            )
-            for p in d.rglob("*.parquet")
+    """bucket id → sorted list of (relpath, sha256) of the files it
+    lists."""
+    return {
+        b: sorted(
+            (rel, hashlib.sha256((Path(path) / rel).read_bytes()).hexdigest())
+            for rel in files
         )
-    return out
+        for b, files in man["buckets"].items()
+    }
+
+
+def _narrow(spark, table, keys) -> int:
+    """Seed ``keys`` and compact, so each file covers about one bucket
+    (a seed apply writes files spanning every bucket it touches)."""
+    from cdc_spark.operators.maintenance import compact_buckets
+
+    table.apply(
+        _changes(spark, [(i, f"n{i}", i, "c", i) for i in keys]),
+        ["name", "qty"],
+    )
+    return compact_buckets(table, target_file_bytes=1 << 30, min_files=1)
 
 
 def _manifest(t: BucketedStateTable, v: int) -> dict:
@@ -84,9 +93,9 @@ def test_untouched_buckets_inherited_byte_identical(spark, table):
     files2 = _bucket_files(table.path, man2)
     for b in man1["buckets"]:
         if int(b) == touched:
-            assert man2["buckets"][b].startswith("v2/")
+            assert all(rel.startswith("v2/") for rel in man2["buckets"][b])
         else:
-            # inherited: same manifest entry → same files, same bytes
+            # inherited: same file list → same files, same bytes
             assert man2["buckets"][b] == man1["buckets"][b]
             assert files2[b] == files1[b]
 
@@ -128,8 +137,8 @@ def test_truncate_dirties_every_bucket(spark, table):
     assert man2["touched"] == list(range(8))  # all buckets wiped
     got = {r.id: r.name for r in table.read().collect()}
     assert got == {1: "after"}
-    # no inherited (pre-truncate) directories survive in the manifest
-    assert all(rel.startswith("v2/") for rel in man2["buckets"].values())
+    # no inherited (pre-truncate) files survive in the manifest
+    assert all(rel.startswith("v2/") for rel in man2["files"])
 
 
 def test_time_travel_versions(spark, table):
@@ -174,12 +183,12 @@ def test_delete_then_reinsert_across_batches(spark, table):
 
 
 def test_bucket_pruning_reads_only_touched(spark, table):
-    """The base scan for an apply only opens touched-bucket dirs."""
-    seed = [(i, f"n{i}", i, "c", i) for i in range(1, 65)]
-    table.apply(_changes(spark, seed), ["name", "qty"])
-    man1 = _manifest(table, 1)
-    # drop every bucket dir except key 7's: if apply read them, it
-    # would fail — proving untouched buckets are never opened
+    """The base scan for an apply only opens files that a touched
+    bucket lists."""
+    v = _narrow(spark, table, range(1, 65))
+    man = _manifest(table, v)
+    # hide every file key 7's bucket does not list: if apply read
+    # them, it would fail — proving untouched buckets are never opened
     b7 = (
         table.spark.range(1)
         .select(
@@ -187,27 +196,29 @@ def test_bucket_pruning_reads_only_touched(spark, table):
         )
         .collect()[0][0]
     )
-    for b, rel in man1["buckets"].items():
-        if int(b) != b7:
-            for p in (Path(table.path) / rel).rglob("*.parquet"):
-                p.rename(p.with_suffix(".hidden"))
+    hidden = [
+        Path(table.path) / rel
+        for rel in set(man["files"]) - set(man["buckets"][str(b7)])
+    ]
+    assert hidden
+    for p in hidden:
+        p.rename(p.with_suffix(".hidden"))
     table.apply(
         _changes(spark, [(7, "u7", 70, "u", 99)]), ["name", "qty"]
     )
     # restore for sanity read
-    for b, rel in man1["buckets"].items():
-        for p in (Path(table.path) / rel).rglob("*.hidden"):
-            p.rename(p.with_suffix(".parquet"))
+    for p in hidden:
+        p.with_suffix(".hidden").rename(p)
     got = {r.id: r.name for r in table.read().collect()}
     assert got[7] == "u7" and len(got) == 64
 
 
 def test_compact_buckets_preserves_data_and_folds_files(spark, table):
-    from cdc_spark.operators.maintenance import compact_buckets, dir_file_stats
+    from cdc_spark.operators.maintenance import compact_buckets
 
     seed = [(i, f"n{i}", i, "c", i) for i in range(1, 129)]
     # two applies so several buckets hold two file generations' rows;
-    # fragment the writes so each bucket dir holds multiple files
+    # fragment the writes so each bucket lists multiple files
     table.apply(_changes(spark, seed).repartition(8), ["name", "qty"])
     table.apply(
         _changes(spark, [(i, f"u{i}", i * 2, "u", 1000 + i) for i in range(1, 129)]
@@ -222,10 +233,10 @@ def test_compact_buckets_preserves_data_and_folds_files(spark, table):
     assert man.get("compaction") is True
     after = sorted((r.id, r.name, r.qty) for r in table.read().collect())
     assert after == before
-    # every compacted bucket holds O(1) files now
-    for b, rel in man["buckets"].items():
-        stats = dir_file_stats(os.path.join(table.path, rel))
-        assert stats["n_files"] <= 2  # range boundary may add one
+    # every compacted bucket lists O(1) files now, all of them new
+    for b, files in man["buckets"].items():
+        assert len(files) <= 2  # range boundary may add one
+        assert all(rel.startswith(f"v{v}/") for rel in files)
     # time travel to the pre-compaction version still works
     assert sorted(
         (r.id, r.name, r.qty) for r in table.read(version=2).collect()
@@ -237,6 +248,46 @@ def test_compact_buckets_noop_below_threshold(spark, table):
 
     table.apply(_changes(spark, [(1, "a", 1, "c", 1)]), ["name", "qty"])
     assert compact_buckets(table, min_files=99) == 1
+
+
+def test_compaction_replaces_files_shared_with_uncompacted_buckets(
+    spark, tmp_path
+):
+    """A bucket that needs no compaction but shares a file with one
+    that does is compacted with it: every file compaction reads leaves
+    the manifest, so no stale rows stay behind and vacuum can drop the
+    old versions."""
+    from cdc_spark.operators.maintenance import compact_buckets
+
+    t = BucketedStateTable(spark, str(tmp_path / "sh"), ["id"], n_buckets=2)
+    t.apply(
+        _changes(spark, [(i, "s", i, "c", i) for i in range(1, 21)]),
+        ["name", "qty"],
+    )
+    # an insert-only append to bucket 0 alone: bucket 0 then lists two
+    # versions, bucket 1 still one
+    ids = spark.range(100, 140).select(
+        "id", t._bucket_expr().alias("b")
+    ).collect()
+    fresh = [r.id for r in ids if r.b == 0][:2]
+    t.apply(
+        _changes(spark, [(i, "n", i, "c", i) for i in fresh]),
+        ["name", "qty"],
+        insert_only=True,
+    )
+    man = _manifest(t, t.current_version())
+    assert generations(man["buckets"]["0"]) == 2
+    assert generations(man["buckets"]["1"]) == 1
+    assert set(man["buckets"]["0"]) & set(man["buckets"]["1"])
+    before = sorted(t.read().collect())
+
+    v = compact_buckets(t, min_files=99)  # only bucket 0 trips a rule
+    man = _manifest(t, v)
+    assert sorted(man["touched"]) == [0, 1]
+    assert all(rel.startswith(f"v{v}/") for rel in man["files"])
+    assert sorted(t.read().collect()) == before
+    assert t.row_count() == len(before)
+    assert t.vacuum(keep_last=1)["kept"] == [v]
 
 
 @pytest.mark.parametrize("commit", ["compaction", "metadata_only"])
@@ -511,10 +562,7 @@ def test_hot_key_skewed_batch_applies_correctly(spark, tmp_path):
 
 def test_version_diff_classifies_ops_and_prunes_inherited(spark, table):
     # v1: keys 1..64 so every bucket holds rows
-    table.apply(
-        _changes(spark, [(i, f"n{i}", i, "c", i) for i in range(1, 65)]),
-        ["name", "qty"],
-    )
+    v1 = _narrow(spark, table, range(1, 65))
     # v2: update key 1, delete key 2, create key 100, and a no-op
     # rewrite of key 3 (same values — must NOT appear in the diff)
     v2 = table.apply(
@@ -529,29 +577,30 @@ def test_version_diff_classifies_ops_and_prunes_inherited(spark, table):
         ),
         ["name", "qty"],
     )
-    diff = table.version_diff(1, v2)
+    diff = table.version_diff(v1, v2)
     got = {r.id: (r.op, r.name, r.qty) for r in diff.collect()}
     assert got == {
         1: ("u", "upd", 999),
         2: ("d", None, None),
         100: ("c", "new", 1),
     }
-    # pruning: only buckets whose manifest mapping changed are opened —
-    # walk the physical plan's file scans and check every root path is
-    # a changed-bucket directory
-    man1, man2 = _manifest(table, 1), _manifest(table, v2)
-    changed_dirs = {
+    # pruning: only files of buckets whose file list changed are
+    # opened — walk the physical plan's file scans and check every
+    # root path is a file a changed bucket lists
+    man1, man2 = _manifest(table, v1), _manifest(table, v2)
+    changed_files = {
         os.path.normpath(os.path.join(table.path, rel))
         for man in (man1, man2)
-        for b, rel in man["buckets"].items()
+        for b, files in man["buckets"].items()
         if man1["buckets"].get(b) != man2["buckets"].get(b)
+        for rel in files
     }
-    all_dirs = {
+    all_files = {
         os.path.normpath(os.path.join(table.path, rel))
         for man in (man1, man2)
-        for rel in man["buckets"].values()
+        for rel in man["files"]
     }
-    assert changed_dirs < all_dirs  # some buckets must be inherited
+    assert changed_files < all_files  # some buckets must be inherited
 
     def _scan_roots(node, acc):
         cls = node.getClass().getSimpleName()
@@ -573,7 +622,7 @@ def test_version_diff_classifies_ops_and_prunes_inherited(spark, table):
         diff._jdf.queryExecution().executedPlan(), set()
     )
     opened = {p for p in opened if p.startswith(os.path.normpath(table.path))}
-    assert opened and opened <= changed_dirs
+    assert opened and opened <= changed_files
 
 
 def test_version_diff_multi_version_span(spark, table):
@@ -620,7 +669,7 @@ def test_apply_widens_schema_mid_stream(spark, table):
     assert man["compaction"] is True
     assert {r.id: (r.name, r.qty, r.phone) for r in table.read().collect()} == got
     compacted = spark.read.parquet(
-        *[os.path.join(table.path, rel) for rel in man["buckets"].values()]
+        *[os.path.join(table.path, rel) for rel in man["files"]]
     )
     assert {r.id: (r.name, r.qty, r.phone) for r in compacted.collect()} == got
 
@@ -682,9 +731,11 @@ def test_local_fs_path_seam(spark, tmp_path, monkeypatch):
 
 
 def test_row_count_matches_read_regardless_of_file_names(spark, tmp_path):
-    """r13 ADVICE: row_count() must sum exactly the files read() would
-    scan — including data files NOT named part-* (a compaction or
-    external writer may name them differently)."""
+    """r13 ADVICE: row_count() must count exactly the rows read()
+    returns. Both follow the manifest's file lists, so a data file in
+    the version directory that no bucket lists (an aborted or external
+    writer's, named like any other) is in neither, and a file whose
+    sibling bucket was rewritten counts only its still-listed rows."""
     import shutil
 
     t = BucketedStateTable(spark, str(tmp_path / "rc"), ["id"], n_buckets=2)
@@ -695,23 +746,22 @@ def test_row_count_matches_read_regardless_of_file_names(spark, tmp_path):
         ),
         ["name", "qty"],
     )
-    v = t.current_version()
-    man = _manifest(t, v)
-    # rename one data file to a non part- name; the scan still reads it
-    for rel in man["buckets"].values():
-        d = os.path.join(t.path, rel)
-        for name in os.listdir(d):
-            if name.startswith("part-") and name.endswith(".parquet"):
-                os.replace(
-                    os.path.join(d, name),
-                    os.path.join(d, "data-renamed.parquet"),
-                )
-                crc = os.path.join(d, "." + name + ".crc")
-                if os.path.exists(crc):
-                    os.remove(crc)
-                break
-        break
+    man = _manifest(t, t.current_version())
+    rel = next(iter(man["files"]))
+    src = os.path.join(t.path, rel)
+    shutil.copy(src, os.path.join(os.path.dirname(src), "part-99999-stray.parquet"))
     assert t.row_count() == t.read().count() == 20
+    # rewrite one bucket only: the first write's files stay listed
+    # under the other bucket and hold stale rows of the rewritten one
+    t.apply(_changes(spark, [(1, "y", 1, "u", 50)]), ["name", "qty"])
+    man = _manifest(t, t.current_version())
+    assert rel in man["files"] and len(man["buckets"]) == 2
+    assert t.row_count() == t.read().count() == 20
+    assert {r.id: r.name for r in t.read().collect()}[1] == "y"
+    # the count is the manifest's: it opens no data file
+    for r in man["files"]:
+        open(os.path.join(t.path, r), "w").close()
+    assert t.row_count() == 20
 
 
 def test_insert_only_append_generations(spark, tmp_path):
@@ -737,15 +787,16 @@ def test_insert_only_append_generations(spark, tmp_path):
 
     v2 = ta.current_version()
     man2 = _manifest(ta, v2)
-    # every touched bucket's entry is now a [base, delta] list whose
-    # head still points at the v1 directory
+    # every touched bucket's list is now the v1 files followed by the
+    # appended v2 files
     lists = {
-        b: rel for b, rel in man2["buckets"].items() if isinstance(rel, list)
+        b: files for b, files in man2["buckets"].items() if generations(files) > 1
     }
     assert lists, "append apply produced no generation lists"
-    for b, rels in lists.items():
-        assert rels[0] == _manifest(ta, v1)["buckets"][b]
-        assert rels[-1].startswith(f"v{v2}/")
+    for b, files in lists.items():
+        head = _manifest(ta, v1)["buckets"][b]
+        assert files[: len(head)] == head
+        assert all(rel.startswith(f"v{v2}/") for rel in files[len(head) :])
     # prior generation files byte-identical (never rewritten)
     files_after = _bucket_files(ta.path, _manifest(ta, v1))
     assert files_before == files_after
@@ -763,7 +814,7 @@ def test_insert_only_append_generations(spark, tmp_path):
 
 def test_insert_only_generation_cap_folds(spark, tmp_path, monkeypatch):
     """At MAX_GENERATIONS the apply falls back to the merge path and
-    the touched buckets fold to a single directory again."""
+    the touched buckets fold to one version's files again."""
     import cdc_spark.streaming.state as state_mod
 
     monkeypatch.setattr(state_mod, "MAX_GENERATIONS", 2)
@@ -783,18 +834,16 @@ def test_insert_only_generation_cap_folds(spark, tmp_path, monkeypatch):
         insert_only=True,
     )
     man = _manifest(t, t.current_version())
-    assert any(isinstance(rel, list) for rel in man["buckets"].values())
+    assert any(generations(files) > 1 for files in man["buckets"].values())
     # next insert-only apply hits the cap on the touched buckets and
-    # folds them via the merge path (single dir again)
+    # folds them via the merge path (one version's files again)
     t.apply(
         _changes(spark, [(i, "b", i, "c", i) for i in range(20, 24)]),
         ["name", "qty"],
         insert_only=True,
     )
     man = _manifest(t, t.current_version())
-    assert all(
-        not isinstance(rel, list) for rel in man["buckets"].values()
-    )
+    assert all(generations(files) == 1 for files in man["buckets"].values())
     assert t.read().count() == 12 == t.row_count()
 
 
@@ -859,7 +908,7 @@ def test_compact_folds_generations(spark, tmp_path):
     before = {tuple(r) for r in t.read().collect()}
     v_new = compact_buckets(t, min_files=1000)  # lists force the fold
     man = _manifest(t, v_new)
-    assert all(not isinstance(rel, list) for rel in man["buckets"].values())
+    assert all(generations(files) == 1 for files in man["buckets"].values())
     assert {tuple(r) for r in t.read().collect()} == before
     assert t.row_count() == len(before)
 
@@ -896,3 +945,118 @@ def test_self_scanning_apply_evaluates_each_change_once(spark, tmp_path):
         (4, "s", 4),
         (9, "n", 9),
     ]
+
+
+def test_random_interleaving_matches_reference_fold(spark, tmp_path, monkeypatch):
+    """Applies over random bucket subsets, insert-only appends past the
+    generation cap, a truncate, a compaction and a vacuum, checked
+    after every step against a pure-Python latest-wins fold: read(),
+    read_buckets(), read(version=) of a retained version,
+    version_diff() of the last commit and row_count(). The first
+    apply after the all-bucket seed rewrites some buckets only, so
+    files written for the seed stay live for their other buckets."""
+    import random
+
+    import cdc_spark.streaming.state as state_mod
+    from cdc_spark.operators.maintenance import compact_buckets
+
+    monkeypatch.setattr(state_mod, "MAX_GENERATIONS", 2)
+    rng = random.Random(8)
+    n_buckets = 4
+    t = BucketedStateTable(spark, str(tmp_path / "mix"), ["id"], n_buckets=n_buckets)
+    pool = 80
+    bucket_of = dict(
+        spark.range(pool)
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(n_buckets)))
+        .collect()
+    )
+    by_bucket = {b: [k for k in range(pool) if bucket_of[k] == b] for b in range(n_buckets)}
+    refs: dict[int, dict] = {}  # version -> {id: (name, qty)}
+    cur: dict = {}
+    lsn = 0
+
+    def rows(df):
+        return {r.id: (r.name, r.qty) for r in df.collect()}
+
+    def batch(keys_ops):
+        nonlocal lsn
+        out = []
+        for k, op in keys_ops:
+            lsn += 1
+            out.append((k, f"s{lsn}", lsn, op, lsn) if op != "d" else (k, None, None, "d", lsn))
+        return out
+
+    def fold(state, changes):
+        state = dict(state)
+        for k, name, qty, op, _ in sorted(changes, key=lambda c: c[4]):
+            if op == "t":
+                state.clear()
+            elif op == "d":
+                state.pop(k, None)
+            else:
+                state[k] = (name, qty)
+        return state
+
+    def commit(changes, **kw):
+        nonlocal cur
+        v = t.apply(_changes(spark, changes), ["name", "qty"], **kw)
+        cur = fold(cur, changes)
+        refs[v] = cur
+        return v
+
+    def random_apply():
+        subset = rng.sample(range(n_buckets), rng.randint(1, 2))
+        keys = rng.sample([k for b in subset for k in by_bucket[b]], 4)
+        ops = []
+        for k in keys:
+            ops.append((k, rng.choice("ud") if k in cur else "c"))
+            if rng.random() < 0.3:  # a second change of the same key
+                ops.append((k, rng.choice("uc")))
+        return commit(batch(ops))
+
+    def append():
+        subset = rng.sample(range(n_buckets), rng.randint(1, 2))
+        fresh = [k for b in subset for k in by_bucket[b] if k not in cur]
+        return commit(batch((k, "c") for k in rng.sample(fresh, 3)), insert_only=True)
+
+    def check(step):
+        v = t.current_version()
+        assert rows(t.read()) == refs[v], step
+        assert t.row_count() == len(refs[v]), step
+        s = rng.sample(range(n_buckets), 2)
+        want = {k: r for k, r in refs[v].items() if bucket_of[k] in s}
+        assert rows(t.read_buckets(s)) == want, step
+        old = rng.choice([w for w in refs if os.path.exists(t._manifest_path(w))])
+        assert rows(t.read(version=old)) == refs[old], step
+        if v - 1 in refs and os.path.exists(t._manifest_path(v - 1)):
+            a, b = refs[v - 1], refs[v]
+            want = {k: ("d", None, None) for k in a.keys() - b.keys()}
+            want.update({k: ("c", *b[k]) for k in b.keys() - a.keys()})
+            want.update({k: ("u", *b[k]) for k in a.keys() & b.keys() if a[k] != b[k]})
+            got = {r.id: (r.op, r.name, r.qty) for r in t.version_diff(v - 1, v).collect()}
+            assert got == want, step
+
+    commit(batch((k, "c") for k in rng.sample(range(pool), 24)))
+    assert t._manifest()["touched"] == list(range(n_buckets))
+    check("seed")
+    random_apply()
+    assert 0 < len(t._manifest()["touched"]) < n_buckets
+    check("partial rewrite")
+    for step in ("apply", "append", "append", "append past cap", "apply"):
+        random_apply() if step == "apply" else append()
+        check(step)
+    commit(batch([(0, "t"), *((k, "c") for k in rng.sample(range(pool), 6))]))
+    check("truncate")
+    random_apply()
+    check("apply after truncate")
+    v = compact_buckets(t, target_file_bytes=1 << 30, min_files=1)
+    refs[v] = cur
+    check("compaction")
+    for step in ("apply", "append"):
+        random_apply() if step == "apply" else append()
+        check(step)
+    removed = t.vacuum(keep_last=2)["removed"]
+    assert removed
+    check("vacuum")
+    random_apply()
+    check("apply after vacuum")

@@ -85,11 +85,11 @@ def test_agg_table_inherits_untouched_buckets(spark, tmp_path):
     ]
     assert len(man2["touched"]) == 1
     assert len(inherited) == len(man1["buckets"]) - 1
-    # inherited bucket files are literally the old version's files
+    # inherited buckets list only files of earlier versions, on disk
     for b in inherited:
-        assert man2["buckets"][b].startswith(f"v{v1}/") or os.path.isdir(
-            os.path.join(inc.table.path, man2["buckets"][b])
-        )
+        for rel in man2["buckets"][b]:
+            assert not rel.startswith(f"v{v2}/")
+            assert os.path.isfile(os.path.join(inc.table.path, rel))
     assert _agg_rows(inc) == _recompute(inc)
 
 

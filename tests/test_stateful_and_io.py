@@ -147,8 +147,8 @@ def test_kafka_connectors_configure_without_broker(spark):
 
 def test_compaction_reduces_files_preserves_content(spark, tmp_path):
     from cdc_spark.operators.maintenance import (
+        census,
         compact_buckets,
-        dir_file_stats,
         needs_compaction,
     )
     from cdc_spark.streaming.state import BucketedStateTable
@@ -162,14 +162,16 @@ def test_compaction_reduces_files_preserves_content(spark, tmp_path):
     # fragmented: 64 tiny files
     v1 = state.overwrite_buckets(df.repartition(64), [0])
 
-    import os
+    def version_census(v):
+        files = state._load_manifest(v)["files"].values()
+        return census(f["bytes"] for f in files)
 
-    stats = dir_file_stats(os.path.join(state.path, f"v{v1}"))
+    stats = version_census(v1)
     assert stats["n_files"] == 64
     assert needs_compaction(stats, target_file_bytes=1 << 20)
 
     v2 = compact_buckets(state, target_file_bytes=1 << 20)
-    stats2 = dir_file_stats(os.path.join(state.path, f"v{v2}"))
+    stats2 = version_census(v2)
     assert stats2["n_files"] < 8
     assert not needs_compaction(stats2, target_file_bytes=1 << 20)
 
