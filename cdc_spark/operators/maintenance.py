@@ -11,7 +11,7 @@ deck's sync-to-analytics-DB pattern (CDC_small.pdf slides 33-37) does.
 Compaction here is expressed as a *versioned rewrite*: read the
 fragmented buckets, repartition them to the byte-budgeted file count,
 and publish as a new immutable version through the state table's
-one commit path, the same atomic pointer swap the streaming sink
+one commit path, the same atomic directory rename the streaming sink
 uses. Readers never see a half-compacted table, and the
 pre-compaction version stays readable (time travel / audit).
 """
@@ -81,9 +81,9 @@ def compact_buckets(
     micro-batch files (total files ≈ max(buckets, ceil(bytes/target))).
     The rows are committed through ``overwrite_buckets`` with
     ``compaction: True`` in the manifest, so the version carries the
-    applied-LSN watermark and ``batch_id`` over, and an apply racing
-    the compaction wins cleanly (the compaction rolls back with
-    ``ConcurrentWriteError``).
+    applied-LSN watermark and ``batch_id`` over. Of an apply and a
+    compaction planned against the same version, the first to commit
+    wins; the other raises ``ConcurrentWriteError``.
 
     Returns the new version, or the current one when nothing needs
     compaction. Data is byte-for-byte equivalent; only layout changes.

@@ -11,11 +11,11 @@ Streaming like this (SURVEY.md §3.1):
 - Dump sink (main.go:429-445) → foreachBatch apply into a state table
 
 State lives in a ``BucketedStateTable`` (streaming/state.py):
-hash-bucketed immutable parquet versions plus a manifest + CURRENT
-pointer — per micro-batch only touched buckets are rewritten
-(Delta-MERGE-shaped apply without Delta jars). It is the engine's one
-state table: small snapshot-per-version tables (the continuous rollup,
-write-audit-publish) are its ``n_buckets=1`` case.
+hash-bucketed immutable parquet versions, each committed with its
+manifest by one atomic rename — per micro-batch only touched buckets
+are rewritten (Delta-MERGE-shaped apply without Delta jars). It is the
+engine's one state table: small snapshot-per-version tables (the
+continuous rollup, write-audit-publish) are its ``n_buckets=1`` case.
 """
 
 from __future__ import annotations

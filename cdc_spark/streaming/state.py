@@ -18,9 +18,11 @@ Delta-MERGE-shaped semantics without Delta jars:
   rewritten (byte-identical by construction, asserted in tests);
 - a micro-batch rewrites only the buckets its keys hash into (a
   truncate dirties every bucket — it wipes all keys);
-- the CURRENT pointer is fsync'd and swapped atomically; a corrupt or
-  missing pointer falls back to the highest version with a readable
-  manifest, so a crash mid-write never bricks the table;
+- a version commits in one atomic step: data and an fsync'd manifest
+  go to a writer-private staging directory ``v{n}.{token}``, renamed
+  onto ``v{n}``; the rename fails if another writer committed ``v{n}``
+  first. The current version is the highest ``v{n}`` whose manifest
+  loads, so a crash mid-write never leaves a half-written version;
 - immutable versions double as the audit trail: ``read(version=...)``
   time-travels. A snapshot table (a rollup, a published audit
   snapshot) is the ``n_buckets=1`` case: ``overwrite_buckets(rows,
@@ -34,8 +36,11 @@ buckets) degenerates to a full MERGE, which is what any engine pays.
 
 from __future__ import annotations
 
+import errno
 import json
 import os
+import shutil
+import uuid
 from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager
 from functools import reduce
@@ -81,9 +86,9 @@ class TouchedInfo(NamedTuple):
 
 
 class ConcurrentWriteError(RuntimeError):
-    """Another writer committed a version between this writer's read
-    and its commit. The losing write is rolled back (its version
-    directory is removed); retry the apply against the new current
+    """Another writer committed this writer's version (or a later one)
+    between this writer's read and its commit. The loser removes only
+    its own staging directory; retry the apply against the new current
     version. One writer per table is the supported regime — a
     Structured Streaming sink serializes batches per checkpoint; this
     guard turns a misconfigured second pipeline into a clean error
@@ -93,12 +98,13 @@ class ConcurrentWriteError(RuntimeError):
 def local_fs_path(path: str) -> str:
     """The state layer's single filesystem seam (round 14).
 
-    Manifests, the CURRENT pointer, commit-time file stats and staged
-    shard moves all use plain local-file IO (``open``/``os.listdir``/
-    ``shutil``). That is correct in this harness — every state path is
-    a local temp directory by design — but silently WRONG against
-    object storage: ``os.listdir("s3://…")`` raises confusingly at
-    best. This function is the one place that assumption lives:
+    Manifests, the commit's directory rename, commit-time file stats
+    and staged shard moves all use plain local-file IO (``open``/
+    ``os.rename``/``shutil``). That is correct in this harness — every
+    state path is a local temp directory by design — but silently
+    WRONG against object storage: ``os.listdir("s3://…")`` raises, and
+    no atomic directory rename exists to commit with. This function is
+    the one place that assumption lives:
     accepts a bare local path or a ``file:`` URI (normalized to the
     bare path), and fails loudly for any other scheme — an object-
     store deployment must route this seam through the Hadoop FS API
@@ -163,19 +169,28 @@ def _local_checkpoints() -> Iterator[Callable[[DataFrame], DataFrame]]:
             ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-def _fsync_replace(tmp: str, dst: str, payload: str) -> None:
-    """Durable pointer write: fsync the file, atomic rename, fsync the
-    directory so the rename itself survives a crash."""
-    with open(tmp, "w") as fh:
+def _fsync_write(path: str, payload: str) -> None:
+    with open(path, "w") as fh:
         fh.write(payload)
         fh.flush()
         os.fsync(fh.fileno())
-    os.replace(tmp, dst)
-    dfd = os.open(os.path.dirname(dst) or ".", os.O_RDONLY)
+
+
+def _fsync_dir(path: str) -> None:
+    """fsync a directory, so a rename into it survives a crash."""
+    dfd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(dfd)
     finally:
         os.close(dfd)
+
+
+def _fsync_replace(tmp: str, dst: str, payload: str) -> None:
+    """Durable pointer write: fsync the file, atomic rename, fsync the
+    directory so the rename itself survives a crash."""
+    _fsync_write(tmp, payload)
+    os.replace(tmp, dst)
+    _fsync_dir(os.path.dirname(dst) or ".")
 
 
 class BucketedStateTable:
@@ -196,10 +211,6 @@ class BucketedStateTable:
         os.makedirs(self.path, exist_ok=True)
 
     # --- layout -------------------------------------------------------
-
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "CURRENT")
 
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.path, f"v{v}")
@@ -230,19 +241,33 @@ class BucketedStateTable:
             for rel, bs in live.items()
         }
 
+    def _versions(self) -> list[int]:
+        """Numbers of the ``v{n}`` directories, ascending. A staging
+        directory ``v{n}.{token}`` is not one."""
+        return sorted(
+            int(name[1:])
+            for name in os.listdir(self.path)
+            if name.startswith("v") and name[1:].isdigit()
+        )
+
+    def _committed(self) -> Iterator[tuple[int, dict]]:
+        """(version, manifest) of each committed version, newest first.
+        A version directory whose manifest does not load never
+        committed."""
+        for v in reversed(self._versions()):
+            try:
+                man = self._load_manifest(v)
+            except (FileNotFoundError, json.JSONDecodeError):
+                continue
+            yield v, man
+
     def current_version(self) -> int | None:
         return self._current()[0]
 
     def _current(self) -> tuple[int | None, dict | None]:
-        """(current version, its manifest) for one manifest load."""
-        try:
-            with open(self._pointer) as fh:
-                v = int(fh.read().strip())
-            # pointer must reference a readable manifest
-            return v, self._load_manifest(v)
-        except (FileNotFoundError, ValueError, json.JSONDecodeError):
-            v = self._recover_version()
-            return v, None if v is None else self._load_manifest(v)
+        """(current version, its manifest): the newest committed
+        version — one listing and, as a rule, one manifest load."""
+        return next(self._committed(), (None, None))
 
     def _manifest(self, version: int | None = None) -> dict | None:
         """Manifest of ``version``, or of the current version (None on
@@ -250,24 +275,6 @@ class BucketedStateTable:
         if version is None:
             return self._current()[1]
         return self._load_manifest(version)
-
-    def _recover_version(self) -> int | None:
-        """Corrupt/missing pointer: highest version with a valid
-        manifest (a version directory without one is an aborted write)."""
-        best = None
-        try:
-            names = os.listdir(self.path)
-        except FileNotFoundError:
-            return None
-        for name in names:
-            if name.startswith("v") and name[1:].isdigit():
-                v = int(name[1:])
-                try:
-                    self._load_manifest(v)
-                except (FileNotFoundError, json.JSONDecodeError):
-                    continue
-                best = v if best is None else max(best, v)
-        return best
 
     # --- bucketing ----------------------------------------------------
 
@@ -321,20 +328,11 @@ class BucketedStateTable:
         Version manifests double as the LSN→version index — a driver-
         side scan of manifest files, no Spark job; versions predating
         LSN tracking (no watermark recorded) are skipped."""
-        v_cur = self.current_version()
-        if v_cur is None:
-            return None
-        best = None
-        for v in range(v_cur, 0, -1):
-            try:
-                man = self._load_manifest(v)
-            except (FileNotFoundError, json.JSONDecodeError):
-                continue  # vacuumed or aborted version
+        for _, man in self._committed():
             applied = man.get("applied_lsn")
             if applied is not None and applied <= lsn:
-                best = v
-                break
-        return self.read(version=best) if best is not None else None
+                return self._read(man)
+        return None
 
     def version_diff(
         self, v_old: int, v_new: int, *, include_old: bool = False
@@ -619,23 +617,23 @@ class BucketedStateTable:
         as long as ANY retained manifest lists one of its files — also
         when only a sibling bucket of that file is still live.
         Unreferenced, unretained version directories (superseded bucket
-        rewrites + aborted writes) are removed whole. Time travel
+        rewrites) are removed whole, and so is every staging directory
+        whose target is at or below the current version: its commit
+        crashed, failed or lost, and can never succeed. Time travel
         shrinks to the retained window; the IVM sink's resync handles a
         vacuumed-away pre version by falling back to a full rebuild.
         O(versions) driver work, no Spark job.
 
         Returns ``{"removed": [...], "kept": [...]}`` (version ints).
         """
-        import shutil
-
         v_cur = self.current_version()
         if v_cur is None:
             return {"removed": [], "kept": []}
-        versions = sorted(
-            int(n[1:])
-            for n in os.listdir(self.path)
-            if n.startswith("v") and n[1:].isdigit()
-        )
+        for name in os.listdir(self.path):
+            n, dot, _ = name[1:].partition(".")  # staging: v{n}.{token}
+            if name[:1] == "v" and dot and n.isdigit() and int(n) <= v_cur:
+                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+        versions = self._versions()
         retained = [v for v in versions if v > v_cur - keep_last]
         pinned: set[int] = set(retained)
         for v in retained:
@@ -708,13 +706,15 @@ class BucketedStateTable:
         ``new_state`` None writes no rows (touched buckets end up
         empty) and keeps ``prev``'s schema. The manifest inherits
         ``prev``'s ``applied_lsn`` and ``batch_id``; a non-None value
-        in ``extra_meta`` replaces an inherited one."""
-        v_cur = prev["version"] if prev is not None else None
-        v_new = (v_cur or 0) + 1
-        target = self._version_dir(v_new)
+        in ``extra_meta`` replaces an inherited one. Renaming this
+        call's own staging directory onto ``v{n}`` commits; it raises
+        ``ConcurrentWriteError`` if another writer committed first."""
+        v_new = (prev["version"] if prev is not None else 0) + 1
+        # never matches v\d+, so no listing takes it for a version
+        stage = f"{self._version_dir(v_new)}.{uuid.uuid4().hex}"
         written = {}
         if new_state is None:
-            os.makedirs(target, exist_ok=True)
+            os.makedirs(stage)
             schema = prev["schema"]
         else:
             # no shuffle, no partitionBy: a write costs per file, so
@@ -722,9 +722,9 @@ class BucketedStateTable:
             # narrows wide files when single-bucket reads matter)
             out = new_state.withColumn(_BUCKET, self._bucket_expr())
             out = out.sortWithinPartitions(_BUCKET)
-            out.write.mode("overwrite").parquet(target)
+            out.write.parquet(stage)
             schema = json.loads(new_state.schema.json())
-            written = self._file_stats(v_new)
+            written = self._file_stats(stage, v_new)
 
         # an append extends the touched buckets' lists, a rewrite
         # replaces them; a new file is listed under the touched
@@ -761,25 +761,41 @@ class BucketedStateTable:
         manifest.update(
             (k, v) for k, v in (extra_meta or {}).items() if v is not None
         )
-        # manifest lands before the pointer: a crash in between leaves
-        # a complete, unreferenced version that recovery may adopt
-        _fsync_replace(
-            self._manifest_path(v_new) + ".tmp",
-            self._manifest_path(v_new),
+        _fsync_write(
+            os.path.join(stage, "MANIFEST.json"),
             json.dumps(manifest, indent=1),
         )
-        self._commit_pointer(v_cur, v_new)
+        # a committed version >= v_new: this writer planned against a
+        # stale one. Checked before the rename, this also catches a
+        # target vacuum removed; after it, a later writer building on
+        # this commit would look the same.
+        lost = (self.current_version() or 0) >= v_new
+        if not lost:
+            try:
+                os.rename(stage, self._version_dir(v_new))
+            except OSError as e:
+                # a committed version is never empty: the target exists
+                if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
+                    raise
+                lost = True
+        if lost:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise ConcurrentWriteError(
+                f"state table {self.path}: version {v_new} was committed "
+                "by another writer first — re-read and retry"
+            )
+        _fsync_dir(self.path)
         return v_new
 
-    def _file_stats(self, v: int) -> dict[str, dict]:
-        """Each data file of version ``v`` with rows → its row count per
-        bucket, total rows and bytes: one pyarrow read of the file's
-        sorted, run-length-encoded ``__bucket`` column, no Spark job.
-        '_' and '.' names are metadata, as for a scan."""
+    def _file_stats(self, d: str, v: int) -> dict[str, dict]:
+        """Each data file in ``d`` (to commit as version ``v``) with rows
+        → its row count per bucket, total rows and bytes: one pyarrow
+        read of the file's sorted, run-length-encoded ``__bucket``
+        column, no Spark job. '_' and '.' names are metadata, as for a
+        scan."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        d = self._version_dir(v)
         out = {}
         for name in sorted(os.listdir(d)):
             if name.startswith(("_", ".")):
@@ -797,23 +813,3 @@ class BucketedStateTable:
                 "bytes": os.path.getsize(path),
             }
         return out
-
-    def _commit_pointer(self, v_expected: int | None, v_new: int) -> None:
-        """Optimistic-concurrency commit: swap CURRENT only if it still
-        names the version this writer planned against; otherwise roll
-        the prepared version back and raise ``ConcurrentWriteError``."""
-        try:
-            with open(self._pointer) as fh:
-                now = int(fh.read().strip())
-        except (FileNotFoundError, ValueError):
-            now = None
-        if now != v_expected:
-            import shutil
-
-            shutil.rmtree(self._version_dir(v_new), ignore_errors=True)
-            raise ConcurrentWriteError(
-                f"state table {self.path}: expected version {v_expected} "
-                f"at commit but found {now}; apply was rolled back — "
-                "re-read and retry"
-            )
-        _fsync_replace(self._pointer + ".tmp", self._pointer, str(v_new))

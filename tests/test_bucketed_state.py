@@ -156,21 +156,16 @@ def test_empty_batch_is_noop(spark, table):
     assert table.current_version() == 1
 
 
-def test_corrupt_pointer_recovers(spark, table):
-    table.apply(_changes(spark, [(1, "a", 1, "c", 1)]), ["name", "qty"])
-    table.apply(_changes(spark, [(2, "b", 2, "c", 2)]), ["name", "qty"])
-    with open(os.path.join(table.path, "CURRENT"), "w") as fh:
-        fh.write("")  # torn write
-    assert table.current_version() == 2
-    assert table.read().count() == 2
-
-
 def test_aborted_version_dir_ignored(spark, table):
     table.apply(_changes(spark, [(1, "a", 1, "c", 1)]), ["name", "qty"])
-    # simulate a crash mid-write: version dir without a manifest
+    # a version dir without a manifest never committed
     os.makedirs(os.path.join(table.path, "v9"), exist_ok=True)
-    os.remove(os.path.join(table.path, "CURRENT"))
     assert table.current_version() == 1
+    assert table.apply(_changes(spark, [(2, "b", 2, "c", 2)]), ["name", "qty"]) == 2
+    assert table.current_version() == 2
+    got = sorted((r.id, r.name, r.qty) for r in table.read().collect())
+    assert got == [(1, "a", 1), (2, "b", 2)]
+    assert os.listdir(table._version_dir(9)) == []
 
 
 def test_delete_then_reinsert_across_batches(spark, table):
@@ -329,32 +324,238 @@ def test_commit_keeps_applied_lsn_and_batch_id(spark, table, commit):
     assert sorted(tuple(r) for r in table.read().collect()) == rows
 
 
-def test_concurrent_writer_detected_and_rolled_back(spark, table):
-    from unittest import mock
+def _tree(path: str) -> dict[str, str]:
+    """relpath → sha256 of every file under ``path``."""
+    return {
+        str(f.relative_to(path)): hashlib.sha256(f.read_bytes()).hexdigest()
+        for f in Path(path).rglob("*")
+        if f.is_file()
+    }
+
+
+def _staging_dirs(path: str) -> list[str]:
+    return [n for n in os.listdir(path) if n.startswith("v") and "." in n]
+
+
+@pytest.mark.parametrize("race", ["before_commit", "before_rename"])
+def test_stale_writer_loses_and_keeps_winner_version(spark, tmp_path, monkeypatch, race):
+    """Two handles on one path both plan against v1; A commits v2
+    while B is mid-apply: before B's commit starts, or between B's
+    staleness check and its rename. B's commit must raise, and A's v2
+    must stay committed and byte-identical."""
+    from cdc_spark.streaming.state import ConcurrentWriteError
+
+    path = str(tmp_path / "two")
+    a = BucketedStateTable(spark, path, ["id"], n_buckets=4)
+    b = BucketedStateTable(spark, path, ["id"], n_buckets=4)
+    a.apply(_changes(spark, [(1, "a", 1, "c", 1)]), ["name", "qty"])
+    fired, winner = [], {}
+
+    def a_commits_first(fn):
+        def wrapped(*args, **kw):
+            if not fired:  # once: B has read v1 and planned its merge
+                fired.append(race)
+                assert a.apply(_changes(spark, [(2, "b", 2, "c", 2)]), ["name", "qty"]) == 2
+                winner.update(_tree(a._version_dir(2)))
+            return fn(*args, **kw)
+
+        return wrapped
+
+    if race == "before_commit":
+        b._commit_new_version = a_commits_first(b._commit_new_version)
+    else:
+        monkeypatch.setattr(os, "rename", a_commits_first(os.rename))
+    with pytest.raises(ConcurrentWriteError):
+        b.apply(_changes(spark, [(3, "c", 3, "c", 3)]), ["name", "qty"])
+    monkeypatch.undo()
+    assert {r.id for r in a.read().collect()} == {1, 2}
+    assert _tree(a._version_dir(2)) == winner
+    assert a.current_version() == 2
+    assert _staging_dirs(path) == []
+
+
+def test_threaded_writers_keep_every_committed_version(spark, tmp_path):
+    """Four threads, each with its own handle, apply disjoint keys and
+    retry on ConcurrentWriteError: no committed version is lost, and
+    version numbers stay contiguous."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
 
     from cdc_spark.streaming.state import ConcurrentWriteError
 
-    import pytest
+    path = str(tmp_path / "stress")
+    BucketedStateTable(spark, path, ["id"], n_buckets=4).apply(
+        _changes(spark, [(0, "s", 0, "c", 0)]), ["name", "qty"]
+    )
+    losses = []
 
-    table.apply(_changes(spark, [(1, "a", 1, "c", 1)]), ["name", "qty"])
-    # writer B commits v2 while writer A (same handle, stale read) is
-    # mid-apply: force A to plan against v1 by pinning current_version
-    with mock.patch.object(table, "current_version", return_value=1):
-        with pytest.raises(ConcurrentWriteError):
-            # a real interleaving: bump CURRENT under A's feet first
-            from cdc_spark.streaming.state import _fsync_replace
+    def writer(w: int) -> None:
+        t = BucketedStateTable(spark, path, ["id"], n_buckets=4)
+        rows = [(10 * w + i, "x", w, "c", 1) for i in (1, 2)]
+        for _ in range(20):
+            try:
+                t.apply(_changes(spark, rows), ["name", "qty"])
+                return
+            except ConcurrentWriteError:
+                losses.append(w)
+        raise AssertionError(f"writer {w} never committed")
 
-            _fsync_replace(
-                table._pointer + ".tmp", table._pointer, "2"
-            )
-            table.apply(
-                _changes(spark, [(2, "b", 2, "c", 2)]), ["name", "qty"]
-            )
-    # loser rolled back: A's prepared v2 directory is gone, and the
-    # dangling pointer recovers to the highest valid manifest (v1)
-    assert not os.path.exists(table._version_dir(2))
-    got = {r.id for r in table.read().collect()}
-    assert got == {1}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the commits' Python steps
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            list(pool.map(writer, range(4), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    t = BucketedStateTable(spark, path, ["id"], n_buckets=4)
+    assert losses  # the writers did race
+    assert t.current_version() == 5  # the seed plus one per writer
+    assert all(os.path.exists(t._manifest_path(v)) for v in range(1, 6))
+    want = {0} | {10 * w + i for w in range(4) for i in (1, 2)}
+    assert {r.id for r in t.read().collect()} == want
+    assert t.row_count() == len(want)
+    assert _staging_dirs(path) == []
+
+
+def test_stale_writer_does_not_resurrect_vacuumed_version(spark, tmp_path):
+    """B plans against v1 (target v2); meanwhile A commits v2 and v3,
+    both rewriting one bucket, and vacuum removes v2. B's rename would
+    succeed onto the gap: it must raise and leave nothing behind."""
+    from cdc_spark.streaming.state import ConcurrentWriteError
+
+    path = str(tmp_path / "gap")
+    a = BucketedStateTable(spark, path, ["id"], n_buckets=4)
+    b = BucketedStateTable(spark, path, ["id"], n_buckets=4)
+    bucket_of = dict(
+        spark.range(40)
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(4)))
+        .collect()
+    )
+    x = [k for k in range(40) if bucket_of[k] == 0][:1]
+    y = [k for k in range(40) if bucket_of[k] == 1][:3]
+    a.apply(_changes(spark, [(x[0], "x", 0, "c", 1)]), ["name", "qty"])
+    commit_b = b._commit_new_version
+
+    def a_commits_and_vacuums(*args, **kw):
+        for lsn, k in enumerate(y[:2], start=2):  # v2, v3: bucket 1
+            a.apply(_changes(spark, [(k, "y", lsn, "c", lsn)]), ["name", "qty"])
+        assert a.vacuum(keep_last=1)["removed"] == [2]
+        return commit_b(*args, **kw)
+
+    b._commit_new_version = a_commits_and_vacuums
+    with pytest.raises(ConcurrentWriteError):
+        # bucket 1 is empty in v1: B's merge reads no base file
+        b.apply(_changes(spark, [(y[2], "z", 9, "c", 9)]), ["name", "qty"])
+    assert not os.path.exists(a._version_dir(2))
+    assert _staging_dirs(path) == []
+    assert a.current_version() == 3
+    assert {r.id for r in a.read().collect()} == {x[0], y[0], y[1]}
+
+
+_CRASH_SCHEMA = "op string, lsn long, k long, g string, v double"
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize(
+    "seam,nth",
+    [
+        ("staged_data", 1),
+        ("staged_data", 2),
+        ("staged_manifest", 1),
+        ("renamed", 2),
+        ("ivm_gap", 1),
+    ],
+)
+def test_crash_at_each_commit_step_then_replay(spark, tmp_path, monkeypatch, seam, nth):
+    """Crash matrix of the commit protocol. Batch 1 of an IVM apply
+    crashes at one step of the nth commit (1: the row state, 2: the
+    aggregate) or in the gap between the two commits. Fresh handles
+    then replay batch 1 under the same batch_id and apply batch 2:
+    state, aggregate, progress and a vacuum must all come out as if
+    nothing had crashed."""
+    import cdc_spark.streaming.state as state_mod
+    from cdc_spark.cdc.ivm import base_agg, finish_agg
+    from cdc_spark.streaming.ivm_sink import IncrementalAggregate
+
+    measures = {"sum_v": F.col("v")}
+
+    def open_():
+        st = BucketedStateTable(spark, str(tmp_path / "rows"), ["k"], n_buckets=4)
+        return IncrementalAggregate(
+            st, str(tmp_path / "agg"), ["g"], measures, n_buckets=4
+        )
+
+    batches = [
+        [("c", 1, 1, "a", 1.0), ("c", 2, 2, "a", 2.0), ("c", 3, 3, "b", 4.0)],
+        [("u", 4, 1, "b", 1.5), ("d", 5, 2, None, None), ("c", 6, 4, "c", 8.0)],
+        [("u", 7, 3, "c", 0.5), ("c", 8, 5, "a", 3.0)],
+    ]
+
+    def apply(inc, i):
+        inc.apply(spark.createDataFrame(batches[i], _CRASH_SCHEMA), ["g", "v"], batch_id=i)
+
+    def crash_after(fn):
+        calls = []
+
+        def wrapped(*args, **kw):
+            out = None if seam == "ivm_gap" else fn(*args, **kw)
+            calls.append(1)
+            if len(calls) == nth:
+                raise _Crash(seam)
+            return out
+
+        return wrapped
+
+    inc = open_()
+    apply(inc, 0)
+    if seam == "staged_data":  # the Spark write into the staging dir
+        target = (BucketedStateTable, "_file_stats")
+    elif seam == "staged_manifest":  # the staging dir's manifest
+        target = (state_mod, "_fsync_write")
+    elif seam == "renamed":  # the commit, before apply returns
+        target = (BucketedStateTable, "_commit_new_version")
+    else:  # row state committed, the aggregate's merge never runs
+        target = (IncrementalAggregate, "_merge_delta")
+    monkeypatch.setattr(*target, crash_after(getattr(*target)))
+    with pytest.raises(_Crash):
+        apply(inc, 1)
+    monkeypatch.undo()
+    if seam.startswith("staged"):  # the crash left a staging dir
+        assert _staging_dirs((inc.state, inc.table)[nth - 1].path)
+
+    inc = open_()
+    apply(inc, 1)  # replay under the same batch_id
+    apply(inc, 2)
+    st = inc.state
+
+    fold: dict = {}
+    for op, _, k, g, v in (c for b in batches for c in b):
+        if op == "d":
+            fold.pop(k, None)
+        else:
+            fold[k] = (g, v)
+    assert {r.k: (r.g, r.v) for r in st.read().collect()} == fold
+    want = finish_agg(base_agg(st.read(), ["g"], measures), ["g"], ["sum_v"])
+    agg = sorted(map(tuple, want.collect()))
+    assert sorted(map(tuple, inc.read().collect())) == agg
+    p = st.replication_progress()
+    assert (p["batch_id"], p["applied_lsn"]) == (2, 8)
+    assert st.current_version() == 3
+
+    for t in (st, inc.table):
+        kept = t.vacuum()["kept"]
+        for v in kept:
+            if os.path.exists(t._manifest_path(v)):
+                assert all(
+                    os.path.exists(os.path.join(t.path, rel))
+                    for rel in t._load_manifest(v)["files"]
+                )
+        assert _staging_dirs(t.path) == []
+    assert {r.k: (r.g, r.v) for r in st.read().collect()} == fold
+    assert sorted(map(tuple, inc.read().collect())) == agg
 
 
 def test_batch_id_makes_replay_exactly_once(spark, tmp_path):
@@ -696,10 +897,10 @@ def test_version_diff_across_schema_evolution(spark, table):
 
 
 def test_local_fs_path_seam(spark, tmp_path, monkeypatch):
-    """Round 14: the state layer's file IO (manifests, pointer, footer
-    counts) is local-filesystem-only through ONE seam — a file: URI
-    normalizes to the bare path, any other scheme fails loudly instead
-    of feeding a URI to os.listdir."""
+    """Round 14: the state layer's file IO (manifests, the commit
+    rename, footer counts) is local-filesystem-only through ONE seam —
+    a file: URI normalizes to the bare path, any other scheme fails
+    loudly instead of feeding a URI to os.listdir."""
     from cdc_spark.streaming.state import local_fs_path
 
     monkeypatch.chdir(tmp_path)
