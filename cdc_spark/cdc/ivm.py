@@ -1,5 +1,5 @@
 """Incremental view maintenance: apply a CDC batch to a materialized
-aggregate in O(batch), not O(state).
+aggregate in O(touched keys), not O(state).
 
 The reference's deck closes with "sync the change stream into an
 analytics store" (slides 33-37); the natural next step a user takes is
@@ -12,11 +12,13 @@ aggregates:
     delta(g)    =  Σ contribution(post-state row of touched key)
                  − Σ contribution(pre-state row of touched key)
 
-Only *touched* keys (keys present in the batch) contribute to the
-delta, so the plan's cost is O(|batch| + |touched keys|): one shuffle
-of the batch by key, one key-pruned read of the prior state (bucket
-pruning on a `BucketedStateTable`, or a semi join here), and a
-grouped fold whose width is the number of touched groups — state size
+Only keys whose image moved contribute to the delta (an unchanged key
+adds +1 and −1, which cancel), so it can be taken over any key set
+that covers the touched keys: a semi join of the prior state to the
+batch's keys, or the touched buckets of two committed versions of a
+`BucketedStateTable` — what `streaming/ivm_sink.py` diffs after each
+row-state commit. The cost is O(that key set) plus a grouped fold
+whose shuffle partial aggregation keeps O(touched groups); state size
 never appears. Compare `main.go:115-130`, which re-applies every
 change to the *row* store but leaves any aggregate to a full re-query.
 
@@ -29,6 +31,7 @@ the touched groups), which `delta_groups_reagg` provides.
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -40,11 +43,11 @@ def _contributions(
     rows: DataFrame,
     group_cols: Sequence[str],
     measures: Mapping[str, Column],
-    weight: int | Column,
+    weight: int,
     scale: int,
 ) -> DataFrame:
     """Per-row signed contribution vectors for the delta fold
-    (``weight`` ±1, or a column holding it).
+    (``weight`` ±1).
 
     Measures are carried as exact split-long fixed-point pairs (the
     `dsum` representation) so the subtraction in the merge is exact —
@@ -68,105 +71,32 @@ def agg_delta(
     *,
     scale: int = 6,
 ) -> DataFrame:
-    """Group-level delta between two state snapshots of the touched keys.
+    """Group-level delta between two state snapshots of one key set.
 
-    ``pre_rows`` / ``post_rows`` are the state rows of the keys the
-    batch touches, before and after applying it (untouched keys must
-    not appear — they cancel by construction and would only add I/O).
-    ``pre_rows=None`` means cold start (no prior state). Output: one
-    row per affected group with ``__dn`` (count delta) and split-long
-    measure deltas, ready for :func:`merge_agg`.
+    ``pre_rows`` / ``post_rows`` are the state rows of the same keys
+    (the touched keys, or whole touched buckets) before and after one
+    or more applies. ``pre_rows=None`` means cold start (no prior
+    state). A key whose image did not move contributes +1 and −1 and
+    cancels, so a group whose every counter nets to zero is dropped:
+    a caller passing whole buckets gets only the groups that moved.
+    Output: one row per moved group with ``__dn`` (count delta) and
+    split-long measure deltas, ready for :func:`merge_agg`. Partial
+    aggregation keeps the shuffle O(groups), not O(rows).
     """
-    post = _contributions(post_rows, group_cols, measures, +1, scale)
+    contrib = _contributions(post_rows, group_cols, measures, +1, scale)
     if pre_rows is not None:
         pre = _contributions(pre_rows, group_cols, measures, -1, scale)
-        post = post.unionByName(pre)
-    return _sum_deltas(post, group_cols, measures)
-
-
-def _sum_deltas(
-    contrib: DataFrame,
-    group_cols: Sequence[str],
-    measures: Mapping[str, Column],
-) -> DataFrame:
-    sums = [F.sum("__w").alias("__dn")]
+        contrib = contrib.unionByName(pre)
+    sums = {"__dn": "__w"}
     for alias in measures:
-        sums.append(F.sum(f"__hi_{alias}").alias(f"__dhi_{alias}"))
-        sums.append(F.sum(f"__lo_{alias}").alias(f"__dlo_{alias}"))
-    return contrib.groupBy(*group_cols).agg(*sums)
-
-
-def agg_delta_from_batch(
-    pre_rows: DataFrame | None,
-    changes: DataFrame,
-    keys: Sequence[str],
-    payload: Sequence[str],
-    group_cols: Sequence[str],
-    measures: Mapping[str, Column],
-    *,
-    lsn_col: str = "lsn",
-    op_col: str = "op",
-    scale: int = 6,
-) -> DataFrame:
-    """Group-level delta straight from (pre-images, change batch) in a
-    SINGLE fold — no separate post-state input.
-
-    Semantically identical to ``agg_delta(pre, apply_changes(pre,
-    batch))`` but half the plan: the batch is folded per key once by
-    the merge's own fold text (``merge._fold_ctes`` and
-    ``merge._post_image``, one ``spark.sql`` parse), left-joined to the
-    pre-images, and each key emits its −pre and +post contribution
-    from the same join row via an exploded 2-element array. One key
-    shuffle + one group shuffle; ``pre_rows`` is scanned once.
-
-    ``pre_rows`` must be restricted to the batch's keys (semi join or
-    bucket pruning), and the batch must not truncate: a truncate
-    changes keys the batch never names. ``IncrementalAggregate``
-    applies such a batch to the row state first and folds
-    ``agg_delta`` over the full pre and post images. ``None`` means
-    cold start. Payload columns the pre-images predate are
-    widened with nulls, as the row-state merge does.
-    """
-    from cdc_spark.cdc.merge import _fold_ctes, _post_image, _q, widen
-
-    keys = list(keys)
-    payload = [c for c in payload if c not in keys]
-    spark = changes.sparkSession
-    fold = _fold_ctes("{changes}", keys, payload, lsn_col, op_col)
-    key_sel = ", ".join(f"__u.{_q(k)}" for k in keys)
-
-    if pre_rows is None:
-        rows = spark.sql(
-            f"WITH {fold} SELECT {key_sel}, 1 AS __w"
-            f"{''.join(f', __u.{_q(c)}' for c in payload)} FROM __pk __u "
-            "WHERE __u.__last_live IS NOT NULL",
-            changes=changes,
-        )
-    else:
-
-        def image(w: int, values: list[str]) -> str:
-            fields = "".join(
-                f", '{c}', {v}" for c, v in zip(payload, values, strict=True)
-            )
-            return f"named_struct('__w', {w}{fields})"
-
-        pre_img = image(-1, [f"__bp.{_q(c)}" for c in payload])
-        post_img = image(1, [_post_image(c, "__u", "__bp") for c in payload])
-        on_keys = " AND ".join(f"__u.{_q(k)} = __bp.{_q(k)}" for k in keys)
-        rows = spark.sql(
-            f"WITH {fold}, __j AS (SELECT {key_sel}, explode(array("
-            f"CASE WHEN __bp.__has_base THEN {pre_img} END, "
-            f"CASE WHEN __u.__last_live IS NOT NULL THEN {post_img} END"
-            ")) AS __s FROM __pk __u LEFT JOIN "
-            "(SELECT *, true AS __has_base FROM {pre}) __bp "
-            f"ON {on_keys}) SELECT {', '.join(_q(k) for k in keys)}, __s.* "
-            "FROM __j WHERE __s IS NOT NULL",
-            changes=changes,
-            pre=widen(pre_rows, changes, payload),
-        )
-
-    contrib = _contributions(rows, group_cols, measures, F.col("__w"), scale)
-    return _sum_deltas(contrib, group_cols, measures)
+        sums[f"__dhi_{alias}"] = f"__hi_{alias}"
+        sums[f"__dlo_{alias}"] = f"__lo_{alias}"
+    delta = contrib.groupBy(*group_cols).agg(
+        *[F.sum(c).alias(d) for d, c in sums.items()]
+    )
+    # a null sum had only null contributions: merge_agg adds it as 0
+    moved = [F.coalesce(F.col(d), F.lit(0)) != 0 for d in sums]
+    return delta.where(reduce(Column.__or__, moved))
 
 
 def base_agg(
@@ -194,17 +124,14 @@ def merge_agg(
     base: DataFrame | None,
     delta: DataFrame,
     group_cols: Sequence[str],
-    *,
-    keep_empty: bool = False,
 ) -> DataFrame:
     """base ⊕ delta: full-outer merge on group, add counters exactly.
 
     Groups whose row count reaches zero disappear (the aggregate of an
-    empty group is no row, matching a full recompute) unless
-    ``keep_empty`` is set — sinks keep them to emit delete tombstones
-    for groups that vanished. ``base=None`` means cold start. The join
-    is group-cardinality-sized — both sides are aggregates, so AQE
-    broadcasts the (small) delta side against a large base at scale.
+    empty group is no row, matching a full recompute). ``base=None``
+    means cold start. The join is group-cardinality-sized — both
+    sides are aggregates, so AQE broadcasts the (small) delta side
+    against a large base at scale.
     """
     gc = list(group_cols)
     if base is None:
@@ -213,8 +140,7 @@ def merge_agg(
         for c in delta.columns:
             if c.startswith("__dhi_") or c.startswith("__dlo_"):
                 out.append(F.col(c).alias("__" + c[3:]))
-        merged = delta.select(*out)
-        return merged if keep_empty else merged.where(F.col("__n") > 0)
+        return delta.select(*out).where(F.col("__n") > 0)
     joined = base.join(delta, on=gc, how="full")
     n = F.coalesce(F.col("__n"), F.lit(0)) + F.coalesce(
         F.col("__dn"), F.lit(0)
@@ -231,8 +157,7 @@ def merge_agg(
                     + F.coalesce(F.col(dcol), F.lit(0))
                 ).alias(alias)
             )
-    merged = joined.select(*out)
-    return merged if keep_empty else merged.where(F.col("__n") > 0)
+    return joined.select(*out).where(F.col("__n") > 0)
 
 
 def finish_agg(

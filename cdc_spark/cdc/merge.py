@@ -118,7 +118,7 @@ def _fold_ctes(
     surviving upsert, null ⇒ the key's final state is deleted/absent),
     ``__last_ins`` (lsn of the newest surviving full image), and each
     payload column holding the validated fold (null ⇒ unchanged-TOAST,
-    to be resolved against a base image by :func:`_post_image`).
+    to be resolved against a base image by the merge's post-image).
     Truncates are not handled here; callers filter them first.
     """
     L, O = _q(lsn_col), _q(op_col)
@@ -151,17 +151,6 @@ def _fold_ctes(
         " AS __last_live, "
         f"CASE WHEN {after_del('__ins_cand')} THEN __ins_cand END"
         f" AS __last_ins{pay_sel} FROM __pk0)"
-    )
-
-
-def _post_image(c: str, fold: str, base: str) -> str:
-    """SQL text of payload column ``c``'s final value for an upserted
-    key, given the fold row ``fold`` and the base-image row ``base``:
-    a live insert resets the row (no fallback); otherwise a null fold
-    means unchanged-TOAST and falls back to the base image."""
-    return (
-        f"CASE WHEN {fold}.__last_ins IS NOT NULL THEN {fold}.{_q(c)} "
-        f"ELSE coalesce({fold}.{_q(c)}, {base}.{_q(c)}) END"
     )
 
 
@@ -221,11 +210,11 @@ def apply_changes(
     Column API paid ~10 eagerly-analyzed DataFrame constructions of a
     deepening tree per call — ~0.3 s of driver time PER MICRO-BATCH
     on the apply hot path, the same per-batch plan-build tax the LSH
-    operators shed. The per-key fold (:func:`_fold_ctes`) and the
-    post-image rule (:func:`_post_image`) are shared with the IVM
-    delta fold (``ivm.agg_delta_from_batch``), so the row state and
-    every aggregate maintained from it read one definition — pinned
-    by the property suite's independent reference implementation
+    operators shed. An aggregate maintained from the row state
+    (``streaming/ivm_sink.py``) diffs the versions this merge
+    committed, so the row state and every aggregate read one
+    definition of the fold — pinned by the property suite's
+    independent reference implementation
     (tests/test_merge_property.py).
     """
     keys = list(keys)
@@ -280,9 +269,16 @@ def apply_changes(
         return changes.sparkSession.sql(sql, changes=changes)
 
     base = widen(base, changes, payload)
+    # post-image: a live insert resets the row (no fallback);
+    # otherwise a null fold means unchanged-TOAST and falls back to
+    # the base image
     upsert_sel = ", ".join(
         [f"__u.{_q(k)}" for k in keys]
-        + [f"{_post_image(c, '__u', '__bp')} AS {_q(c)}" for c in payload]
+        + [
+            f"CASE WHEN __u.__last_ins IS NOT NULL THEN __u.{_q(c)} "
+            f"ELSE coalesce(__u.{_q(c)}, __bp.{_q(c)}) END AS {_q(c)}"
+            for c in payload
+        ]
     )
     on_keys = " AND ".join(f"__b.{_q(k)} = __pk.{_q(k)}" for k in keys)
     on_keys_u = " AND ".join(f"__u.{_q(k)} = __bp.{_q(k)}" for k in keys)

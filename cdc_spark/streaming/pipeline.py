@@ -83,9 +83,10 @@ class CdcStreamPipeline:
 
     def attach_aggregate(self, agg_path, group_cols, measures, **kw):
         """Maintain a materialized per-group aggregate alongside the
-        row state (``streaming/ivm_sink.py``): every micro-batch folds
-        its delta into the aggregate in O(batch). Returns the
-        :class:`IncrementalAggregate` for reading."""
+        row state (``streaming/ivm_sink.py``): every micro-batch's
+        row-state commit is folded into the aggregate in O(touched
+        buckets). Returns the :class:`IncrementalAggregate` for
+        reading."""
         from cdc_spark.streaming.ivm_sink import IncrementalAggregate
 
         self.aggregate = IncrementalAggregate(

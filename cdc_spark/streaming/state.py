@@ -619,7 +619,12 @@ class BucketedStateTable:
         Unreferenced, unretained version directories (superseded bucket
         rewrites) are removed whole, and so is every staging directory
         whose target is at or below the current version: its commit
-        crashed, failed or lost, and can never succeed. Time travel
+        crashed, failed or lost, and can never succeed. A non-empty,
+        unreferenced version directory whose manifest does not load
+        never committed (crash debris, or made by hand) and is removed
+        too: a commit's rename cannot replace it, so it would fail
+        every later commit of that version. An empty one is left: a
+        rename may be landing on it. Time travel
         shrinks to the retained window; the IVM sink's resync handles a
         vacuumed-away pre version by falling back to a full rebuild.
         O(versions) driver work, no Spark job.
@@ -635,12 +640,18 @@ class BucketedStateTable:
                 shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
         versions = self._versions()
         retained = [v for v in versions if v > v_cur - keep_last]
-        pinned: set[int] = set(retained)
+        pinned: set[int] = set()
         for v in retained:
+            # listed before the manifest load: a commit renamed onto the
+            # directory in between is then not taken for debris
+            empty = not os.listdir(self._version_dir(v))
             try:
                 man = self._load_manifest(v)
             except (FileNotFoundError, json.JSONDecodeError):
+                if empty:
+                    pinned.add(v)
                 continue
+            pinned.add(v)
             pinned.update(int(rel.split("/")[0][1:]) for rel in man["files"])
         removed = []
         for v in versions:

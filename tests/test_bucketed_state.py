@@ -168,6 +168,24 @@ def test_aborted_version_dir_ignored(spark, table):
     assert os.listdir(table._version_dir(9)) == []
 
 
+def test_vacuum_removes_manifestless_version_dir(spark, table):
+    """A non-empty version dir with no manifest never committed, and
+    no commit's rename can replace it: vacuum removes it, so the next
+    apply commits that version. An empty one stays: a rename may be
+    landing on it."""
+    table.apply(_changes(spark, [(1, "a", 1, "c", 1)]), ["name", "qty"])
+    os.makedirs(table._version_dir(2))
+    Path(table._version_dir(2), "part-0.parquet").write_bytes(b"debris")
+    os.makedirs(table._version_dir(9))
+    res = table.vacuum()
+    assert 2 in res["removed"] and 9 in res["kept"]
+    assert not os.path.exists(table._version_dir(2))
+    assert os.listdir(table._version_dir(9)) == []
+    assert table.apply(_changes(spark, [(2, "b", 2, "c", 2)]), ["name", "qty"]) == 2
+    got = sorted((r.id, r.name, r.qty) for r in table.read().collect())
+    assert got == [(1, "a", 1), (2, "b", 2)]
+
+
 def test_delete_then_reinsert_across_batches(spark, table):
     table.apply(_changes(spark, [(1, "a", 1, "c", 1)]), ["name", "qty"])
     table.apply(_changes(spark, [(1, None, None, "d", 2)]), ["name", "qty"])
@@ -701,6 +719,47 @@ def test_ivm_resync_survives_vacuum(spark, tmp_path):
     )
     got = sorted((r.g, r.n_rows, r.sum_v) for r in inc.read().collect())
     assert got == [("a", 1, 7.0), ("b", 2, 11.0)]
+
+
+def test_ivm_resync_rebuilds_when_pre_files_vacuumed(spark, tmp_path):
+    """The agg's pre version survives vacuum (a retained manifest lists
+    its own files) but an older file its manifest lists does not: the
+    resync must rebuild, not fail reading the missing file."""
+    from cdc_spark.streaming.ivm_sink import IncrementalAggregate
+
+    st = BucketedStateTable(spark, str(tmp_path / "rows"), ["k"], n_buckets=4)
+    inc = IncrementalAggregate(
+        st, str(tmp_path / "agg"), ["g"], {"sum_v": F.col("v")}, n_buckets=2
+    )
+    schema = "op string, lsn long, k long, g string, v double"
+    bucket_of = dict(
+        spark.range(40)
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(4)))
+        .collect()
+    )
+    first = {bucket_of[k]: k for k in range(39, 0, -1)}  # a key per bucket
+    inc.apply(  # v1: every bucket
+        spark.createDataFrame(
+            [("c", k, k, "a", 1.0) for k in range(1, 40)], schema
+        ),
+        ["g", "v"],
+    )
+    inc.apply(  # v2: bucket 0 only; the agg reflects v2
+        spark.createDataFrame([("u", 100, first[0], "a", 2.0)], schema),
+        ["g", "v"],
+    )
+    st.apply(  # v3, state only: every other bucket, so v1 is unlisted
+        spark.createDataFrame(
+            [("u", 100 + b, first[b], "b", 3.0) for b in (1, 2, 3)], schema
+        ),
+        ["g", "v"],
+    )
+    assert st.vacuum(keep_last=1) == {"removed": [1], "kept": [2, 3]}
+    inc.apply(
+        spark.createDataFrame([("c", 200, 77, "c", 5.0)], schema), ["g", "v"]
+    )
+    got = sorted((r.g, r.n_rows, r.sum_v) for r in inc.read().collect())
+    assert got == [("a", 36, 37.0), ("b", 3, 9.0), ("c", 1, 5.0)]
 
 
 def test_read_as_of_lsn_snapshot_consistency(spark, tmp_path):

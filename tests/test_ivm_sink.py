@@ -241,7 +241,7 @@ def test_resync_after_state_only_commit(spark, tmp_path):
         PAYLOAD,
     )
     assert _agg_rows(inc) != _recompute(inc)  # agg is stale right now
-    # next apply must first resync, then fold its own batch
+    # the next apply's diff spans the missed version and its own
     inc.apply(
         spark.createDataFrame([("c", 5, 4, "c", 7.0)], SCHEMA), PAYLOAD
     )
@@ -250,8 +250,8 @@ def test_resync_after_state_only_commit(spark, tmp_path):
 
 def test_replayed_batch_folds_zero_delta(spark, tmp_path):
     """At-least-once replay: re-applying a fully committed batch leaves
-    the aggregate unchanged (the delta computes against pre-images that
-    already include the batch, so it cancels)."""
+    the aggregate unchanged (the row-state version it commits holds the
+    same rows, so the diff cancels)."""
     inc = _mk(spark, tmp_path)
     b1 = [("c", 1, 1, "a", 1.0), ("c", 2, 2, "b", 2.0)]
     b2 = [("u", 3, 1, "a", 4.0), ("d", 4, 2, None, None)]
@@ -265,7 +265,8 @@ def test_replayed_batch_folds_zero_delta(spark, tmp_path):
 
 def test_adopt_existing_state_backfills(spark, tmp_path):
     """Attaching an IncrementalAggregate to a row state that already
-    has data must backfill the aggregate before folding deltas."""
+    has data must backfill the aggregate, batch included, in one
+    aggregate version."""
     st = BucketedStateTable(spark, str(tmp_path / "rows"), ["k"], n_buckets=8)
     st.apply(
         spark.createDataFrame(
@@ -281,6 +282,8 @@ def test_adopt_existing_state_backfills(spark, tmp_path):
     )
     assert _agg_rows(inc) == [("a", 2, 3.0), ("b", 1, 9.0)]
     assert _agg_rows(inc) == _recompute(inc)
+    assert inc.table._versions() == [1]
+    assert inc.table._load_manifest(1)["row_version"] == 2
 
 
 def test_pre_upgrade_agg_without_row_version_rebuilds(spark, tmp_path):
@@ -367,9 +370,10 @@ def _stored_rdds(spark) -> set[int]:
     ids=["common", "truncate"],
 )
 def test_apply_evaluates_each_change_once(spark, tmp_path, rows):
-    """The touched-bucket scan materializes the batch: the delta fold,
-    the pre-image key semi-join and the row-state merge read the
-    stored blocks, so the source runs once per row per apply."""
+    """The row-state apply's touched-bucket scan materializes the
+    batch and its merge reads the stored blocks; the aggregate reads
+    only committed versions. So the source runs once per row per
+    apply."""
     inc = _mk(spark, tmp_path)
     inc.apply(
         spark.createDataFrame(
@@ -385,8 +389,9 @@ def test_apply_evaluates_each_change_once(spark, tmp_path, rows):
 
 def test_apply_releases_checkpoint_blocks(spark, tmp_path):
     """The batch's and the delta's checkpoint blocks are dropped when
-    an apply returns — common path, truncate path and the resync — so
-    a long stream does not hold every batch's blocks until a GC."""
+    an apply returns — a common batch, a truncate and a catch-up after
+    a row-state-only commit — so a long stream does not hold every
+    batch's blocks until a GC."""
     inc = _mk(spark, tmp_path)
     before = _stored_rdds(spark)
     inc.apply(
