@@ -1,7 +1,7 @@
 """Table catalog over the driver-generated parquet test data.
 
-``load_tables`` gives the query layer one entry point for the star
-schema + extension tables (TESTDATA.md). Scans stay lazy DataFrames so
+``load_table`` gives the query layer one entry point per table of the
+star schema + extension tables (TESTDATA.md). Scans stay lazy DataFrames so
 Catalyst keeps predicate pushdown / column pruning / partition pruning
 on every downstream query.
 
@@ -179,16 +179,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     schema = table_schema(spark, sf_dir, name)
     df = spark.read.schema(schema).parquet(table_path(sf_dir, name))
     return normalize_event_time(df, "ts")
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every test table as a lazy DataFrame keyed by name."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load tables and register each as a temp view for spark.sql use."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

@@ -86,21 +86,11 @@ def _nearest_centroid(emb: Column, centroids: list[list[float]]) -> Column:
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
 
-def quantize_expr(emb: Column, scale: int) -> Column:
-    """Element-wise half-up integer quantization (``ss04``'s explicit
-    codes): identical arithmetic in Spark, DuckDB and Python, so every
-    engine derives the SAME integers — the trick that makes the IVF
-    coarse quantizer hash-checkable."""
-    return F.transform(
-        emb,
-        lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast(
-            "long"
-        ),
-    )
-
-
 def quantize_vec(vec: Sequence[float], scale: int) -> list[int]:
-    """Driver-side twin of :func:`quantize_expr` (same formula)."""
+    """Element-wise half-up integer quantization,
+    ``floor(x * scale + 0.5)``: the same arithmetic in Spark, DuckDB and
+    Python, so every engine derives the SAME integers — the trick that
+    makes the IVF coarse quantizer hash-checkable."""
     import math
 
     return [int(math.floor(float(x) * scale + 0.5)) for x in vec]

@@ -219,18 +219,6 @@ def fingerprint_rows(df, text_col: str, id_col: str, k: int = 3):
     )
 
 
-def ngram_profile(col: str | Column, n: int = 2) -> Column:
-    """Character n-gram array (for n-gram-based language/similarity
-    heuristics): distinct character bigrams of the lowercased text."""
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(0))),
-            lambda i: F.substr(c, i, F.lit(n)),
-        )
-    )
-
-
 def repetition_stats(df, text_col: str, id_col: str):
     """Gopher-style repetition signals per document.
 

@@ -6,9 +6,10 @@ a fresh driver row each round. An entry's fingerprint hashes its
 oracle SQL plus the TRANSITIVE SOURCE CLOSURE of its query function
 inside ``cdc_spark`` — the function itself, every cdc_spark
 function/class it references (through module-level imports, attribute
-access on cdc_spark modules, nested lambdas, and function-local
+access on cdc_spark modules, nested lambdas, function-local
 ``from cdc_spark... import`` and ``import cdc_spark... as``
-statements, followed recursively), so a change to a shared operator
+statements, and what a module reached as an object imports from other
+cdc_spark modules, followed recursively), so a change to a shared operator
 moves the fingerprint of every entry built on it.
 
 ``tests/registry_fingerprints.json`` is the ledger: one line per
@@ -80,6 +81,11 @@ def collect_sources(fn) -> dict[str, str]:
                     out[name] = inspect.getsource(obj)
                 except (OSError, TypeError):
                     pass
+                # its source holds its own definitions; what it imports
+                # from other cdc_spark modules is visited as itself
+                for v in list(vars(obj).values()):
+                    if getattr(v, "__module__", name) != name:
+                        visit(v)
             return
         if not (inspect.isfunction(obj) or inspect.isclass(obj)):
             return

@@ -2204,11 +2204,17 @@ def st27_streaming_kmv_cardinality(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from cdc_spark.operators.dedup import portable_hash60
+    from cdc_spark.streaming.state import BucketedStateTable
 
     events = load_table(spark, sf_dir, "events").select("user_id")
     src_dir = tempfile.mkdtemp(prefix="st27_src_")
     events.repartition(6).write.mode("overwrite").parquet(src_dir)
-    state_dir = tempfile.mkdtemp(prefix="st27_state_")
+    # the sketch is a snapshot table: each fold commits a new version
+    # by one rename (a replayed epoch commits nothing), then drops the
+    # superseded one, so the stored state stays k rows
+    sketch = BucketedStateTable(
+        spark, tempfile.mkdtemp(prefix="st27_state_"), ["_h"], n_buckets=1
+    )
     n_batches = [0]
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -2222,27 +2228,18 @@ def st27_streaming_kmv_cardinality(
             .orderBy("_h")
             .limit(_ST27_K)
         )
-        spark_ = batch_df.sparkSession
-        cur = os.path.join(state_dir, "sketch")
-        if os.path.isdir(cur):
-            merged = (
-                spark_.read.parquet(cur)
-                .unionByName(batch_sk)
+        base = sketch.read(session=batch_df.sparkSession)
+        if base is not None:
+            batch_sk = (
+                base.unionByName(batch_sk)
                 .distinct()
                 .orderBy("_h")
                 .limit(_ST27_K)
             )
-        else:
-            merged = batch_sk
-        nxt = os.path.join(state_dir, f"sketch_v{batch_id}")
-        merged.write.mode("overwrite").parquet(nxt)
-        # atomic-enough swap for a local demo: replace the symlink-free
-        # dir; at scale this is the versioned-publish pattern io18 uses
-        import shutil
-
-        if os.path.isdir(cur):
-            shutil.rmtree(cur)
-        os.rename(nxt, cur)
+        sketch.overwrite_buckets(
+            batch_sk, [0], extra_meta={"batch_id": batch_id}
+        )
+        sketch.vacuum(keep_last=1)
         if not batch_df.isEmpty():
             n_batches[0] += 1
 
@@ -2262,7 +2259,7 @@ def st27_streaming_kmv_cardinality(
         raise AssertionError(
             f"expected 6 one-file micro-batches, got {n_batches[0]}"
         )
-    sk = spark.read.parquet(os.path.join(state_dir, "sketch")).agg(
+    sk = sketch.read().agg(
         F.max("_h").alias("kth_hash"),
         F.count("*").alias("n_hashes"),
     )
@@ -2344,13 +2341,16 @@ def st28_streaming_quantile_sketch(
 ) -> DataFrame:
     from cdc_spark.operators.dedup import portable_hash60
     from cdc_spark.operators.sketches import sample_quantiles
+    from cdc_spark.streaming.state import BucketedStateTable
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").cast("long").alias("n_chars")
     )
     src_dir = tempfile.mkdtemp(prefix="st28_src_")
     docs.repartition(6).write.mode("overwrite").parquet(src_dir)
-    state_dir = tempfile.mkdtemp(prefix="st28_state_")
+    sample = BucketedStateTable(
+        spark, tempfile.mkdtemp(prefix="st28_state_"), ["doc_id"], n_buckets=1
+    )
     n_batches = [0]
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -2359,24 +2359,17 @@ def st28_streaming_quantile_sketch(
             "n_chars",
             portable_hash60(F.col("doc_id").cast("string")).alias("_h"),
         ).orderBy("_h", "doc_id").limit(_ST28_K)
-        spark_ = batch_df.sparkSession
-        cur = os.path.join(state_dir, "sample")
-        if os.path.isdir(cur):
-            merged = (
-                spark_.read.parquet(cur)
-                .unionByName(batch_sk)
+        base = sample.read(session=batch_df.sparkSession)
+        if base is not None:
+            batch_sk = (
+                base.unionByName(batch_sk)
                 .orderBy("_h", "doc_id")
                 .limit(_ST28_K)
             )
-        else:
-            merged = batch_sk
-        nxt = os.path.join(state_dir, f"sample_v{batch_id}")
-        merged.write.mode("overwrite").parquet(nxt)
-        import shutil
-
-        if os.path.isdir(cur):
-            shutil.rmtree(cur)
-        os.rename(nxt, cur)
+        sample.overwrite_buckets(
+            batch_sk, [0], extra_meta={"batch_id": batch_id}
+        )
+        sample.vacuum(keep_last=1)
         if not batch_df.isEmpty():
             n_batches[0] += 1
 
@@ -2396,8 +2389,9 @@ def st28_streaming_quantile_sketch(
         raise AssertionError(
             f"expected 6 one-file micro-batches, got {n_batches[0]}"
         )
-    state = spark.read.parquet(os.path.join(state_dir, "sample"))
-    return sample_quantiles(state, "n_chars", "doc_id", _ST28_Q).select(
+    return sample_quantiles(
+        sample.read(), "n_chars", "doc_id", _ST28_Q
+    ).select(
         "quantile",
         "sample_rank",
         F.col("est").alias("est_chars"),
@@ -2459,35 +2453,34 @@ def st29_streaming_cms_maintenance(
 ) -> DataFrame:
     from cdc_spark.operators.dedup import portable_hash60
     from cdc_spark.operators.sketches import countmin_counters
+    from cdc_spark.streaming.state import BucketedStateTable
 
     events = load_table(spark, sf_dir, "events").select("user_id")
     src_dir = tempfile.mkdtemp(prefix="st29_src_")
     events.repartition(6).write.mode("overwrite").parquet(src_dir)
-    state_dir = tempfile.mkdtemp(prefix="st29_state_")
+    grid = BucketedStateTable(
+        spark,
+        tempfile.mkdtemp(prefix="st29_state_"),
+        ["j", "bucket"],
+        n_buckets=1,
+    )
     n_batches = [0]
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         batch_grid = countmin_counters(
             batch_df, "user_id", _ST29_D, _ST29_W
         )
-        spark_ = batch_df.sparkSession
-        cur = os.path.join(state_dir, "grid")
-        if os.path.isdir(cur):
-            merged = (
-                spark_.read.parquet(cur)
-                .unionByName(batch_grid)
+        base = grid.read(session=batch_df.sparkSession)
+        if base is not None:
+            batch_grid = (
+                base.unionByName(batch_grid)
                 .groupBy("j", "bucket")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        else:
-            merged = batch_grid
-        nxt = os.path.join(state_dir, f"grid_v{batch_id}")
-        merged.write.mode("overwrite").parquet(nxt)
-        import shutil
-
-        if os.path.isdir(cur):
-            shutil.rmtree(cur)
-        os.rename(nxt, cur)
+        grid.overwrite_buckets(
+            batch_grid, [0], extra_meta={"batch_id": batch_id}
+        )
+        grid.vacuum(keep_last=1)
         if not batch_df.isEmpty():
             n_batches[0] += 1
 
@@ -2507,7 +2500,7 @@ def st29_streaming_cms_maintenance(
         raise AssertionError(
             f"expected 6 one-file micro-batches, got {n_batches[0]}"
         )
-    counters = spark.read.parquet(os.path.join(state_dir, "grid"))
+    counters = grid.read()
     probes = (
         events.groupBy("user_id")
         .agg(F.count("*").alias("true_n"))
@@ -3114,9 +3107,11 @@ def _st32_assert_bucket_pruned(df: DataFrame, *, dynamic: bool) -> None:
     "EMPTY micro-batch still publishes its empty result and its "
     f"marker). Every {_ST32_COMPACT_EVERY} batches maintenance "
     "FOLDS the accumulated shard partitions into a fresh compacted "
-    "version (written as shard=-v, atomic pointer swap, then the "
-    "superseded partitions are VACUUMED — the versioned publish + "
-    "budgeted rewrite from operators/maintenance.py) and the state "
+    "partition (staged outside the state root, then ONE rename onto "
+    "shard=-upto, upto strictly increasing so the live compacted "
+    "partition is the most negative one; then the superseded "
+    "partitions are VACUUMED — the versioned publish + budgeted "
+    "rewrite from operators/maintenance.py) and the state "
     "root provably shrinks to one live partition — asserted "
     "in-stream — so per-trigger listings stay O(cells), not "
     "O(batches). Oracle recomputes cells, shards and the "
@@ -3126,7 +3121,6 @@ def _st32_assert_bucket_pruned(df: DataFrame, *, dynamic: bool) -> None:
 def st32_streaming_semantic_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import json
     import shutil
 
     from cdc_spark.operators.dedup import portable_hash60
@@ -3136,7 +3130,7 @@ def st32_streaming_semantic_dedup(
         lsh_bucket,
         semantic_dedup_planes,
     )
-    from cdc_spark.streaming.state import _fsync_replace
+    from cdc_spark.streaming.state import commit_dir
 
     emb = load_table(spark, sf_dir, "embeddings")
     # provisioned-capacity sizing: one count job before the stream
@@ -3186,22 +3180,18 @@ def st32_streaming_semantic_dedup(
     done_dir = os.path.join(state_dir, "done")
     os.makedirs(done_dir, exist_ok=True)
     os.makedirs(vec_root, exist_ok=True)
-    ptr = os.path.join(state_dir, "COMPACTED")
 
-    def _read_ptr() -> tuple[int, int]:
-        """(version, upto): vectors/shard=-version holds every vector
-        of shards < upto. (0, 0) before the first fold."""
-        if not os.path.exists(ptr):
-            return (0, 0)
-        meta = json.loads(open(ptr).read())
-        return (int(meta["version"]), int(meta["upto"]))
+    def _compacted_upto() -> int:
+        """vectors/shard=-upto holds every vector of shards < upto; the
+        live compacted partition is the most negative one (0: none)."""
+        return -min([0, *(int(d[6:]) for d in os.listdir(vec_root))])
 
     def _probe_shards() -> list[int]:
         """Live state partitions a probe must read: the compacted
         pseudo-shard plus only the post-compaction batch shards —
         O(K), never O(batches)."""
-        version, upto = _read_ptr()
-        ids = [-version] if version else []
+        upto = _compacted_upto()
+        ids = [-upto] if upto else []
         for p in sorted(int(x) for x in os.listdir(done_dir)):
             if p >= upto and os.path.isdir(
                 os.path.join(vec_root, f"shard={p}")
@@ -3347,19 +3337,20 @@ def st32_streaming_semantic_dedup(
         )
         open(marker, "w").close()
         # maintenance: every K batches fold the live partitions into a
-        # fresh compacted version written as pseudo-shard -v, swap the
-        # pointer atomically, then vacuum the superseded partitions
-        # (operators/maintenance.py's versioned publish — readers
-        # never see a half-fold; a crash between marker and swap just
-        # defers the fold to the next cycle, replay skips at the
-        # marker above; a crash mid-vacuum leaves unreachable dirs the
-        # next vacuum removes)
+        # fresh compacted partition, staged outside vectors/ and
+        # renamed onto pseudo-shard -upto, then vacuum the superseded
+        # partitions (operators/maintenance.py's versioned publish —
+        # readers never see a half-fold; a crash before the rename
+        # just defers the fold to the next cycle, replay skips at the
+        # marker above; a crash mid-vacuum leaves partitions the
+        # probe no longer reads, which the next vacuum removes)
         done_now = sorted(int(x) for x in os.listdir(done_dir))
         if len(done_now) % _ST32_COMPACT_EVERY == 0:
             fold_ids = _probe_shards()
             if len(fold_ids) > 1:
-                version, _upto = _read_ptr()
-                newv = version + 1
+                upto = my_shard + 1
+                live = f"shard=-{upto}"
+                stage = os.path.join(state_dir, f"_stage-{upto}")
                 spark_.read.option("basePath", vec_root).parquet(
                     *[
                         os.path.join(vec_root, f"shard={p}")
@@ -3367,28 +3358,17 @@ def st32_streaming_semantic_dedup(
                     ]
                 ).select("vec_id", "embedding", "bucket").write.partitionBy(
                     "bucket"
-                ).mode("overwrite").parquet(
-                    os.path.join(vec_root, f"shard=-{newv}")
-                )
-                _fsync_replace(
-                    ptr + ".tmp",
-                    ptr,
-                    json.dumps(
-                        {"version": newv, "upto": my_shard + 1}
-                    ),
-                )
+                ).mode("overwrite").parquet(stage)
+                commit_dir(stage, os.path.join(vec_root, live))
                 for d in os.listdir(vec_root):
-                    sid = int(d.split("=", 1)[1])
-                    if sid != -newv:
+                    if d != live:
                         shutil.rmtree(os.path.join(vec_root, d))
                 # the listing provably SHRANK: the state root now
                 # holds exactly one live partition dir (the fresh
-                # compacted version), so the next probe lists
-                # O(cells) files no matter how many batches ran
+                # compacted one), so the next probe lists O(cells)
+                # files no matter how many batches ran
                 left = os.listdir(vec_root)
-                if left != [f"shard=-{newv}"] or _probe_shards() != [
-                    -newv
-                ]:
+                if left != [live] or _probe_shards() != [-upto]:
                     raise AssertionError(
                         f"compaction did not shrink the state listing: "
                         f"{len(fold_ids)} partitions -> {left}"

@@ -29,7 +29,11 @@ from pyspark.sql import functions as F
 from cdc_spark.catalog import normalize_event_time
 from cdc_spark.cdc.envelope import parse_pgoutput_json, parse_wal2json
 from cdc_spark.cdc.registry import SchemaRegistry
-from cdc_spark.streaming.state import BucketedStateTable
+from cdc_spark.streaming.state import (
+    BucketedStateTable,
+    commit_dir,
+    local_fs_path,
+)
 
 
 class CdcStreamPipeline:
@@ -72,14 +76,18 @@ class CdcStreamPipeline:
         self.dialect = dialect
         self.aggregate = None
         # change-feed publication: when set, every micro-batch that
-        # commits a new state version also appends that version's NET
+        # commits a new state version also publishes that version's NET
         # change feed (version_diff of the two manifests — O(changed
-        # buckets)) to this directory, stamped with the version. The
+        # buckets)) as this directory's ``version=N`` partition, staged
+        # and committed by one rename like a state version. The
         # published log is a faithful reconstruction: replaying it
         # through latest-wins merge reproduces the state (gated in
         # st14). This is the outbound half of CDC — the engine is a
         # change PRODUCER for downstream consumers, not just a sink.
-        self.cdf_path = cdf_path
+        self.cdf_path = None
+        if cdf_path:
+            self.cdf_path = local_fs_path(cdf_path)  # the FS seam
+            os.makedirs(self.cdf_path, exist_ok=True)
 
     def attach_aggregate(self, agg_path, group_cols, measures, **kw):
         """Maintain a materialized per-group aggregate alongside the
@@ -126,55 +134,30 @@ class CdcStreamPipeline:
             self._publish_cdf()
 
     def _published_versions(self) -> set[int]:
-        """Versions already durably published.
-
-        Primary signal: a ``version=N`` dir carrying the committer's
-        ``_SUCCESS`` marker (a torn tail write lacks it and is
-        overwritten by the idempotent re-publish). Fallback when the
-        marker convention is disabled (``mapreduce.fileoutputcommitter
-        .marksuccessfuljobs=false``, common on object stores): a dir
-        with committed ``part-*`` files and no in-flight
-        ``_temporary`` staging counts as published — without the
-        fallback every version would look unpublished, the whole feed
-        history would rewrite each micro-batch, and the backfill
-        would eventually raise on a vacuumed version."""
-        out = set()
-        try:
-            names = os.listdir(self.cdf_path)
-        except FileNotFoundError:
-            return out
-        for n in names:
-            if not (n.startswith("version=") and n[8:].isdigit()):
-                continue
-            vdir = os.path.join(self.cdf_path, n)
-            if os.path.exists(os.path.join(vdir, "_SUCCESS")):
-                out.add(int(n[8:]))
-                continue
-            try:
-                entries = os.listdir(vdir)
-            except (FileNotFoundError, NotADirectoryError):
-                continue
-            if "_temporary" not in entries and any(
-                e.startswith("part-") for e in entries
-            ):
-                out.add(int(n[8:]))
-        return out
+        """Versions in the feed: ``version=N`` exists only once its
+        complete staged write was renamed onto it."""
+        return {
+            int(n[8:])
+            for n in os.listdir(self.cdf_path)
+            if n.startswith("version=") and n[8:].isdigit()
+        }
 
     def _publish_cdf(self) -> None:
-        """Publish every state version not yet durably in the feed.
+        """Publish every state version not yet in the feed.
 
         Publication is NOT atomic with the state commit, so a crash
         can land between them; deriving the work list from what is
         actually on disk (rather than a remembered v_prev) makes the
         feed self-healing: on the next batch — or a restart whose
         replayed batch is an apply no-op — the missing versions are
-        backfilled. Each version writes to its own ``version=N``
-        partition directory with mode=overwrite, so a re-publish after
-        a torn write is idempotent (no duplicate feed rows), and plain
-        ``spark.read.parquet(cdf_path)`` still yields the ``version``
-        column via partition discovery. Retention contract: the state
-        versions needed for the diffs must not have been vacuumed past
-        the publication lag (``vacuum(keep_last=...)`` ≥ the gap).
+        backfilled. Version N's feed is written to ``_stage-v{N}`` with
+        mode=overwrite (a crash's torn stage is simply rewritten) and
+        committed by one rename onto ``version=N``: a reader, and
+        ``spark.read.parquet(cdf_path)``'s partition discovery, sees a
+        version whole or not at all, since the listing skips ``_``
+        names. Retention contract: the state versions needed for the
+        diffs must not have been vacuumed past the publication lag
+        (``vacuum(keep_last=...)`` ≥ the gap).
         """
         v_new = self.state.current_version()
         if v_new is None:
@@ -198,9 +181,9 @@ class CdcStreamPipeline:
                 )
             else:
                 feed = self.state.version_diff(v - 1, v, include_old=True)
-            feed.write.mode("overwrite").parquet(
-                os.path.join(self.cdf_path, f"version={v}")
-            )
+            stage = os.path.join(self.cdf_path, f"_stage-v{v}")
+            feed.write.mode("overwrite").parquet(stage)
+            commit_dir(stage, os.path.join(self.cdf_path, f"version={v}"))
 
     def start(
         self,

@@ -65,7 +65,9 @@ class ContinuousRollup:
         )
 
     def apply_batch(self, batch: DataFrame, epoch_id: int = 0) -> None:
-        """foreachBatch body: merge this batch's partials into state."""
+        """foreachBatch body: merge this batch's partials into state.
+        The commit records ``epoch_id``, so a replayed epoch writes
+        nothing (``overwrite_buckets``' replay rule)."""
         partials = self._partials(batch)
         base = self.state.read(session=batch.sparkSession)
         if base is None:
@@ -81,7 +83,9 @@ class ContinuousRollup:
                     F.max("max_value").alias("max_value"),
                 )
             )
-        self.state.overwrite_buckets(merged, [0])
+        self.state.overwrite_buckets(
+            merged, [0], extra_meta={"batch_id": epoch_id}
+        )
 
     def read(self) -> DataFrame | None:
         """Current rollup with derived columns (avg from exact partials)."""

@@ -98,8 +98,9 @@ class ConcurrentWriteError(RuntimeError):
 def local_fs_path(path: str) -> str:
     """The state layer's single filesystem seam (round 14).
 
-    Manifests, the commit's directory rename, commit-time file stats
-    and staged shard moves all use plain local-file IO (``open``/
+    Manifests, the commit's directory rename, commit-time file stats,
+    staged shard moves and the change feed's publication all use
+    plain local-file IO (``open``/
     ``os.rename``/``shutil``). That is correct in this harness — every
     state path is a local temp directory by design — but silently
     WRONG against object storage: ``os.listdir("s3://…")`` raises, and
@@ -113,7 +114,7 @@ def local_fs_path(path: str) -> str:
     if sep:
         if scheme != "file":
             raise NotImplementedError(
-                "BucketedStateTable file IO is local-filesystem only; "
+                "state and change-feed file IO is local-filesystem only; "
                 f"got scheme {scheme!r} in {path!r} — this seam needs a "
                 "Hadoop-FS-backed implementation for object storage"
             )
@@ -176,21 +177,20 @@ def _fsync_write(path: str, payload: str) -> None:
         os.fsync(fh.fileno())
 
 
-def _fsync_dir(path: str) -> None:
-    """fsync a directory, so a rename into it survives a crash."""
-    dfd = os.open(path, os.O_RDONLY)
+def commit_dir(stage: str, dst: str) -> None:
+    """The engine's one durable directory commit: ``stage`` holds the
+    complete content, one atomic rename makes it ``dst`` and an fsync of
+    the parent makes the rename survive a crash. Readers see no ``dst``
+    or all of it; the rename raises ``OSError`` when a non-empty ``dst``
+    exists. A ``stage`` inside a directory Spark lists must start with
+    ``_`` and contain no ``=``: the listing then skips it, where a
+    ``k=v`` name would be read as a partition."""
+    os.rename(stage, dst)
+    dfd = os.open(os.path.dirname(dst), os.O_RDONLY)
     try:
         os.fsync(dfd)
     finally:
         os.close(dfd)
-
-
-def _fsync_replace(tmp: str, dst: str, payload: str) -> None:
-    """Durable pointer write: fsync the file, atomic rename, fsync the
-    directory so the rename itself survives a crash."""
-    _fsync_write(tmp, payload)
-    os.replace(tmp, dst)
-    _fsync_dir(os.path.dirname(dst) or ".")
 
 
 class BucketedStateTable:
@@ -694,12 +694,21 @@ class BucketedStateTable:
         ``extra_meta`` lands in the new version's manifest (e.g. the
         row-state version a derived aggregate reflects). ``new_rows``
         None with no bucket ids is a metadata-only commit: no Spark
-        job, every bucket inherited."""
+        job, every bucket inherited.
+
+        A ``batch_id`` in ``extra_meta`` gets :meth:`apply`'s replay
+        rule: when the manifest planned against already records it, the
+        call writes nothing and returns that manifest's version."""
+        prev = self._manifest(version)
+        batch_id = (extra_meta or {}).get("batch_id")
+        if (
+            batch_id is not None
+            and prev is not None
+            and prev.get("batch_id") == batch_id
+        ):
+            return prev["version"]
         return self._commit_new_version(
-            new_rows,
-            {int(b) for b in bucket_ids},
-            self._manifest(version),
-            extra_meta,
+            new_rows, {int(b) for b in bucket_ids}, prev, extra_meta
         )
 
     def _commit_new_version(
@@ -783,7 +792,7 @@ class BucketedStateTable:
         lost = (self.current_version() or 0) >= v_new
         if not lost:
             try:
-                os.rename(stage, self._version_dir(v_new))
+                commit_dir(stage, self._version_dir(v_new))
             except OSError as e:
                 # a committed version is never empty: the target exists
                 if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
@@ -795,7 +804,6 @@ class BucketedStateTable:
                 f"state table {self.path}: version {v_new} was committed "
                 "by another writer first — re-read and retry"
             )
-        _fsync_dir(self.path)
         return v_new
 
     def _file_stats(self, d: str, v: int) -> dict[str, dict]:

@@ -233,6 +233,13 @@ def test_fingerprint_covers_shared_operators():
     assert "cdc_spark.cdc.pgoutput_wire" in collect_sources(
         REGISTRY["cdc10_pgoutput_binary"].fn
     )
+    # a cdc_spark module visited as an object brings in the cdc_spark
+    # functions and classes it imports from other modules
+    import cdc_spark.streaming.ivm_sink as ivm_sink
+
+    assert "cdc_spark.streaming.state.BucketedStateTable" in collect_sources(
+        ivm_sink
+    )
     # a global referenced only from a property getter (vars() hands
     # back the property object, which isfunction() rejects)
     from cdc_spark.cdc.registry import ColumnSpec

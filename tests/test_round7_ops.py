@@ -1,5 +1,6 @@
-"""Round-7 hardening: sink idempotence/overwrite contracts and the
-CDF publication marker fallback (the ADVICE findings)."""
+"""Round-7 hardening: sink idempotence/overwrite contracts and CDF
+publication without the committer's _SUCCESS markers (the ADVICE
+findings)."""
 
 from __future__ import annotations
 
@@ -65,20 +66,22 @@ def test_stream_sink_replay_clears_stale_batch_files(tmp_path):
     assert json.loads(files[0].read_text()) == {"i": 9}
 
 
-def test_published_versions_fallback_without_success_marker(
-    spark, tmp_path
-):
-    """Object-store deployments often disable _SUCCESS markers; a
-    committed version=N dir (part files, no _temporary staging) must
-    still count as published, or every micro-batch would rewrite the
-    entire feed history."""
+def test_cdf_published_once_without_success_marker(spark, tmp_path):
+    """Object-store deployments often disable _SUCCESS markers. A feed
+    version is published when its ``version=N`` directory exists, so
+    with the markers off each version is still written once and never
+    rewritten by a later publish."""
     from cdc_spark.cdc.registry import SchemaRegistry
     from cdc_spark.streaming.pipeline import CdcStreamPipeline
 
+    reg = SchemaRegistry()
+    reg.announce(
+        "public", "users", [("id", "integer", True), ("name", "text")]
+    )
     cdf = tmp_path / "cdf"
     pipe = CdcStreamPipeline(
         spark,
-        SchemaRegistry(),
+        reg,
         "public",
         "users",
         keys=["id"],
@@ -87,20 +90,51 @@ def test_published_versions_fallback_without_success_marker(
         cdf_path=str(cdf),
     )
 
-    def mk(version: int, *entries: str) -> None:
-        d = cdf / f"version={version}"
-        d.mkdir(parents=True)
-        for e in entries:
-            if e == "_temporary":
-                (d / e).mkdir()
-            else:
-                (d / e).write_text("")
+    def insert(i: int, name: str):
+        doc = {
+            "kind": "insert",
+            "schema": "public",
+            "table": "users",
+            "columnnames": ["id", "name"],
+            "columntypes": ["integer", "text"],
+            "columnvalues": [i, name],
+        }
+        return spark.createDataFrame(
+            [(json.dumps({"change": [doc]}),)], "value string"
+        )
 
-    mk(1, "part-00000.parquet", "_SUCCESS")  # marker convention
-    mk(2, "part-00000.parquet")              # marker disabled
-    mk(3, "part-00000.parquet", "_temporary")  # torn write in flight
-    mk(4)                                     # empty dir: torn start
-    assert pipe._published_versions() == {1, 2}
+    def stamp(v: int):
+        return sorted(
+            (e.name, e.inode(), e.stat().st_mtime_ns)
+            for e in os.scandir(cdf / f"version={v}")
+        )
+
+    conf = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    saved = hconf.get(conf)
+    hconf.set(conf, "false")
+    try:
+        pipe.apply_batch(insert(1, "a"), 0)
+        v1 = stamp(1)
+        pipe.apply_batch(insert(2, "b"), 1)
+        pipe.apply_batch(insert(2, "b"), 1)  # a replayed epoch
+        pipe.apply_batch(insert(3, "c"), 2)
+    finally:
+        if saved is None:
+            hconf.unset(conf)
+        else:
+            hconf.set(conf, saved)
+    assert pipe._published_versions() == {1, 2, 3}
+    assert stamp(1) == v1
+    assert not any(
+        "_SUCCESS" in os.listdir(cdf / f"version={v}") for v in (1, 2, 3)
+    )
+    feed = spark.read.parquet(str(cdf))
+    assert sorted((r.version, r.op, r.id) for r in feed.collect()) == [
+        (1, "c", 1),
+        (2, "c", 2),
+        (3, "c", 3),
+    ]
 
 
 def test_filtered_ivfpq_probe_prunes_and_reads_no_embeddings(

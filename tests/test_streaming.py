@@ -323,6 +323,32 @@ def test_continuous_rollup_incremental_equals_batch(spark):
     assert got[("2024-01-01 02:00:00", "view")] == (1, 1.0, 1.0)
 
 
+def test_continuous_rollup_replayed_epoch_is_noop(spark, tmp_path):
+    """A replayed epoch (a crash between the sink commit and the
+    stream's checkpoint commit) must not fold its partials twice."""
+    import datetime as dt
+
+    from cdc_spark.streaming.rollup import ContinuousRollup
+
+    rollup = ContinuousRollup(spark, str(tmp_path / "rollup"))
+    t = dt.datetime(2024, 1, 1)
+    batch = spark.createDataFrame(
+        [(t, 1.0), (t + dt.timedelta(minutes=30), 2.0)],
+        "ts timestamp, value double",
+    )
+
+    def n_sum():
+        r = rollup.read().first()
+        return (r.n, r.sum_value)
+
+    rollup.apply_batch(batch, 0)
+    rollup.apply_batch(batch, 0)  # the replay
+    assert n_sum() == (2, 3.0)
+    assert rollup.state.current_version() == 1
+    rollup.apply_batch(batch, 1)  # a new epoch still folds
+    assert n_sum() == (4, 6.0)
+
+
 def test_multi_table_stream_routing(spark):
     """one change stream carrying two tables; each pipeline materializes
     only its own table (registry-scoped decode), states independent."""
@@ -502,18 +528,8 @@ def test_running_totals_tws_requires_protobuf(spark, tmp_path):
             )
 
 
-def test_cdf_publication_backfills_after_crash(spark, dirs):
-    """Publication is not atomic with the state commit: a crash after
-    state.apply() but before the feed append must not lose that
-    version's feed forever. _publish_cdf derives its work list from
-    the version=N dirs on disk, so the NEXT publish backfills the
-    hole and replaying the feed still reproduces the state (the
-    st14/st16 closure)."""
-    from cdc_spark.cdc.merge import apply_changes
-
-    os.makedirs(dirs["src"], exist_ok=True)
-    cdf = os.path.join(os.path.dirname(dirs["state"]), "cdf")
-    pipe = CdcStreamPipeline(
+def _feed_pipe(spark, dirs, cdf_path):
+    return CdcStreamPipeline(
         spark,
         _users_registry(),
         "public",
@@ -521,35 +537,28 @@ def test_cdf_publication_backfills_after_crash(spark, dirs):
         keys=["id"],
         payload=["firstname", "lastname"],
         state_path=dirs["state"],
-        cdf_path=cdf,
+        cdf_path=cdf_path,
     )
 
-    def batch(*docs):
-        return spark.createDataFrame(
-            [(d,) for d in docs], "value string"
-        )
 
-    pipe.apply_batch(batch(_wal_doc("insert", [1, "A", "B"])), 0)
-    assert pipe._published_versions() == {1}
+def _doc_batch(spark, *docs):
+    return spark.createDataFrame([(d,) for d in docs], "value string")
 
-    # crash window: v2 commits to state, publication never runs
-    saved = pipe.cdf_path
-    pipe.cdf_path = None
-    pipe.apply_batch(
-        batch(_wal_doc("update", [1, "A2", "B"], keys=[1])), 1
+
+def _dir_stamp(d):
+    """(name, inode, mtime_ns) of every entry in ``d``: a rewrite of the
+    directory changes it."""
+    return sorted(
+        (e.name, e.inode(), e.stat().st_mtime_ns) for e in os.scandir(d)
     )
-    pipe.cdf_path = saved
-    assert pipe._published_versions() == {1}  # v2 is the hole
 
-    # next batch publishes v3 AND backfills v2
-    pipe.apply_batch(batch(_wal_doc("insert", [2, "C", "D"])), 2)
-    assert pipe._published_versions() == {1, 2, 3}
 
-    # the closure: replaying the published feed == the state
-    feed = spark.read.parquet(cdf)
+def _feed_replay_equals_state(spark, pipe, cdf):
+    from cdc_spark.cdc.merge import apply_changes
+
     replayed = apply_changes(
         None,
-        feed,
+        spark.read.parquet(cdf),
         ["id"],
         ["firstname", "lastname"],
         lsn_col="version",
@@ -558,10 +567,54 @@ def test_cdf_publication_backfills_after_crash(spark, dirs):
     )
     got = {(r.id, r.firstname, r.lastname) for r in replayed.collect()}
     want = {
-        (r.id, r.firstname, r.lastname)
-        for r in pipe.state.read().collect()
+        (r.id, r.firstname, r.lastname) for r in pipe.state.read().collect()
     }
-    assert got == want == {(1, "A2", "B"), (2, "C", "D")}
+    assert got == want
+    return got
+
+
+def test_cdf_publication_backfills_after_crash(spark, dirs):
+    """Publication is not atomic with the state commit: a crash after
+    state.apply() but before or during the feed's publication must not
+    lose that version's feed forever. _publish_cdf derives its work
+    list from the version=N dirs on disk, so the NEXT publish backfills
+    the hole, rewriting a torn ``_stage-v{N}`` the crash left, and
+    replaying the feed still reproduces the state (the st14/st16
+    closure)."""
+    os.makedirs(dirs["src"], exist_ok=True)
+    cdf = os.path.join(os.path.dirname(dirs["state"]), "cdf")
+    pipe = _feed_pipe(spark, dirs, cdf)
+
+    pipe.apply_batch(
+        _doc_batch(spark, _wal_doc("insert", [1, "A", "B"])), 0
+    )
+    assert pipe._published_versions() == {1}
+
+    # crash window: v2 commits to state, and its publication dies
+    # after some task files landed
+    saved = pipe.cdf_path
+    pipe.cdf_path = None
+    pipe.apply_batch(
+        _doc_batch(spark, _wal_doc("update", [1, "A2", "B"], keys=[1])), 1
+    )
+    pipe.cdf_path = saved
+    torn = os.path.join(cdf, "_stage-v2")
+    os.makedirs(os.path.join(torn, "_temporary"))
+    with open(os.path.join(torn, "part-00000-torn.parquet"), "wb") as fh:
+        fh.write(b"PAR1 torn")
+    assert pipe._published_versions() == {1}  # v2 is the hole
+    assert spark.read.parquet(cdf).count() == 1  # readers skip the stage
+
+    # next batch publishes v3 AND backfills v2
+    pipe.apply_batch(
+        _doc_batch(spark, _wal_doc("insert", [2, "C", "D"])), 2
+    )
+    assert pipe._published_versions() == {1, 2, 3}
+    assert not os.path.exists(torn)
+    assert _feed_replay_equals_state(spark, pipe, cdf) == {
+        (1, "A2", "B"),
+        (2, "C", "D"),
+    }
 
 
 def test_cdf_backfill_on_restart_with_no_new_data(spark, dirs):
@@ -598,6 +651,27 @@ def test_cdf_backfill_on_restart_with_no_new_data(spark, dirs):
     assert pipe2._published_versions() == set(
         range(1, pipe2.state.current_version() + 1)
     )
+
+
+def test_cdf_file_uri_publishes_each_version_once(spark, dirs):
+    """A ``file://`` cdf_path goes through the filesystem seam: the
+    second batch publishes version 2 only and leaves version 1's files
+    as they are."""
+    cdf = os.path.join(os.path.dirname(dirs["state"]), "cdf_uri")
+    pipe = _feed_pipe(spark, dirs, "file://" + cdf)
+    pipe.apply_batch(
+        _doc_batch(spark, _wal_doc("insert", [1, "A", "B"])), 0
+    )
+    v1 = _dir_stamp(os.path.join(cdf, "version=1"))
+    pipe.apply_batch(
+        _doc_batch(spark, _wal_doc("insert", [2, "C", "D"])), 1
+    )
+    assert _dir_stamp(os.path.join(cdf, "version=1")) == v1
+    assert pipe._published_versions() == {1, 2}
+    assert _feed_replay_equals_state(spark, pipe, cdf) == {
+        (1, "A", "B"),
+        (2, "C", "D"),
+    }
 
 
 def test_rocksdb_state_store_provider(spark, dirs):
