@@ -40,7 +40,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_spark.streaming.state import BucketedStateTable
+from cdc_spark.streaming.state import BucketedStateTable, _local_checkpoints
 
 
 def filter_committed(
@@ -126,30 +126,32 @@ class TransactionalApply:
             if pool_old is None
             else pool_old.unionByName(data, allowMissingColumns=True)
         )
-        # tx-cardinality sets: checkpoint so the admit/retire plans and
-        # the two writes evaluate the batch scan once, not four times
-        pool = pool.localCheckpoint(eager=False)
-        ready = pool.join(commits, on=tx, how="left_semi")
-        still = pool.join(finished, on=tx, how="left_anti")
+        with _local_checkpoints() as checkpoint:
+            # tx-cardinality sets: checkpoint so the admit/retire plans
+            # and the two writes evaluate the batch scan once, not four
+            # times
+            pool = checkpoint(pool)
+            ready = pool.join(commits, on=tx, how="left_semi")
+            still = pool.join(finished, on=tx, how="left_anti")
 
-        v = self.target.apply(
-            ready, self.payload, lsn_col=lsn_col, op_col=op_col
-        )
+            v = self.target.apply(
+                ready, self.payload, lsn_col=lsn_col, op_col=op_col
+            )
 
-        # pending pool: rewrite only buckets touched by this batch's
-        # inserts or retirements (committed AND aborted txns leave)
-        touched_tx = data.select(tx).unionByName(finished)
-        binfo = touched_tx.select(
-            self.pending._bucket_expr().alias("__b")
-        ).agg(F.collect_set("__b").alias("bs")).first()
-        bucket_ids = sorted(binfo["bs"] or ())
-        if bucket_ids:
-            in_touched = self.pending._bucket_expr().isin(
-                [int(b) for b in bucket_ids]
-            )
-            self.pending.overwrite_buckets(
-                still.where(in_touched), bucket_ids
-            )
+            # pending pool: rewrite only buckets touched by this batch's
+            # inserts or retirements (committed AND aborted txns leave)
+            touched_tx = data.select(tx).unionByName(finished)
+            binfo = touched_tx.select(
+                self.pending._bucket_expr().alias("__b")
+            ).agg(F.collect_set("__b").alias("bs")).first()
+            bucket_ids = sorted(binfo["bs"] or ())
+            if bucket_ids:
+                in_touched = self.pending._bucket_expr().isin(
+                    [int(b) for b in bucket_ids]
+                )
+                self.pending.overwrite_buckets(
+                    still.where(in_touched), bucket_ids
+                )
         return v
 
     def state(self, **kw) -> DataFrame | None:

@@ -1,4 +1,4 @@
-"""As-of and range joins — temporal operators Spark lacks natively.
+"""As-of joins — a temporal operator Spark lacks natively.
 
 As-of join semantics: for each left row, attach the single right row
 with the greatest ``right_ts <= left_ts`` within the same key group
@@ -451,35 +451,3 @@ def asof_join_bucketed(
         ],
     )
 
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-    left_ts: str,
-    right_ts: str,
-    *,
-    lower: str = "0 seconds",
-    upper: str = "5 minutes",
-) -> DataFrame:
-    """Equi-key join restricted to ``left_ts + lower <= right_ts <=
-    left_ts + upper``.
-
-    The equi keys keep this a hash/sort-merge join (the range is a
-    post-join filter Catalyst evaluates during the merge), so the only
-    blow-up is genuine matches within the band — the scalable shape
-    for "events within N minutes of each other" joins.
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    lo = F.expr(f"INTERVAL {lower}")
-    hi = F.expr(f"INTERVAL {upper}")
-    cond = None
-    for k in keys:
-        c = left[k] == right[k]
-        cond = c if cond is None else (cond & c)
-    cond = (
-        cond
-        & (right[right_ts] >= left[left_ts] + lo)
-        & (right[right_ts] <= left[left_ts] + hi)
-    )
-    return left.join(right, cond, "inner")

@@ -1146,7 +1146,7 @@ def cdc18_dead_letter_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc19_version_diff_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from cdc_spark.streaming.state import BucketedStateTable, TouchedInfo
+    from cdc_spark.streaming.state import BucketedStateTable
 
     events = load_table(spark, sf_dir, "events")
     # ONE materialization of the change projection for the whole replay
@@ -1168,49 +1168,16 @@ def cdc19_version_diff_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets=16,
     )
     bounds = [(None, mx // 3), (mx // 3, 2 * mx // 3), (2 * mx // 3, None)]
-    # ONE pass computes every replay batch's touched-bucket info
-    # (round 14, guide §1.2: each apply otherwise runs its own bounded
-    # scan job over its slice — 3 jobs re-reading the same checkpointed
-    # log). Slice membership is a pure lsn expression, so a single
-    # grouped aggregate yields (touched set, has_truncate, max lsn)
-    # per batch; the applies then skip their scans entirely while
-    # keeping bucket pruning exact.
-    slice_id = F.when(F.col("lsn") <= mx // 3, F.lit(0)).when(
-        F.col("lsn") <= 2 * mx // 3, F.lit(1)
-    ).otherwise(F.lit(2))
-    info_rows = (
-        changes.select(
-            slice_id.alias("__s"),
-            state._bucket_expr().alias("__b"),
-            (F.col("op") == "t").alias("__t"),
-            "lsn",
-        )
-        .groupBy("__s")
-        .agg(
-            F.collect_set("__b").alias("bs"),
-            F.max("__t").alias("has_t"),
-            F.max("lsn").alias("mx"),
-        )
-        .collect()
-    )
-    infos = {
-        r["__s"]: TouchedInfo(set(r["bs"]), bool(r["has_t"]), r["mx"])
-        for r in info_rows
-    }
+    # each apply's 1-row touched-bucket scan reads its slice of the
+    # checkpointed log, so bucket pruning stays exact per batch
     versions = []
-    for i, (lo, hi) in enumerate(bounds):
+    for lo, hi in bounds:
         b = changes
         if lo is not None:
             b = b.where(F.col("lsn") > lo)
         if hi is not None:
             b = b.where(F.col("lsn") <= hi)
-        versions.append(
-            state.apply(
-                b,
-                ["event_type", "value"],
-                touched_info=infos.get(i, TouchedInfo(set(), False)),
-            )
-        )
+        versions.append(state.apply(b, ["event_type", "value"]))
     return state.version_diff(versions[0], versions[-1])
 
 

@@ -2663,7 +2663,7 @@ def st30_streaming_heavy_hitters(
     import glob as _glob
     import shutil as _shutil
 
-    from cdc_spark.streaming.state import local_fs_path
+    from cdc_spark.streaming.state import BucketedStateTable, local_fs_path
 
     # the staged-shard rearrangement below is plain local-file IO —
     # route both directories through the state layer's one FS seam so
@@ -2688,25 +2688,14 @@ def st30_streaming_heavy_hitters(
                 1
             ).write.mode("append").parquet(src_dir)
     _shutil.rmtree(stage_dir, ignore_errors=True)
-    state_dir = tempfile.mkdtemp(prefix="st30_state_")
-    done_dir = os.path.join(state_dir, "done")
-    os.makedirs(done_dir, exist_ok=True)
-
-    def _done_ids() -> list[int]:
-        return sorted(int(x) for x in os.listdir(done_dir))
-
     # Retry-idempotent fold: foreachBatch replays a micro-batch after
-    # a failure with the SAME batch_id, so every effect must be safe
-    # to repeat. (1) a per-batch done-marker (written LAST) skips
-    # fully-folded replays outright; (2) the whole per-batch state —
+    # a failure with the SAME batch_id. The whole per-batch state —
     # merged CMS grid rows AND the accumulated candidate set — is ONE
-    # unified relation written to a batch-VERSIONED dir with
-    # mode=overwrite, and the merge always reads the predecessor
-    # version (never its own), so a partial write simply overwrites
-    # itself on replay — no double-merge, and a replayed candidate row
-    # is absorbed by the read-time distinct(). Empty micro-batches (an
-    # empty shard file) still write their marker and count toward
-    # n_batches — skipping them would trip the shard assertion below.
+    # unified relation kept in a snapshot table: each fold commits a
+    # new version by one rename (a replayed epoch commits nothing),
+    # then drops the superseded one. Empty micro-batches (an empty
+    # shard file) still commit a version and count toward n_batches —
+    # skipping them would trip the shard assertion below.
     #
     # Round 13 (guide §1.2 "the distributed algorithm" + §2.4): the
     # fold is ONE Spark action per trigger. The per-key counts feed
@@ -2716,15 +2705,11 @@ def st30_streaming_heavy_hitters(
     # driver actions per micro-batch (checkpoint, emptiness probe,
     # grid write, candidate append) and the trigger cadence paid each
     # one's scheduling floor. State stays d·w + ≤DEN·batches rows.
-    unified_schema = (
-        "kind string, j int, bucket bigint, cnt bigint, hot_key bigint"
+    sketch = BucketedStateTable(
+        spark, tempfile.mkdtemp(prefix="st30_state_"), ["kind"], n_buckets=1
     )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(done_dir, str(batch_id))
-        if os.path.exists(marker):
-            return  # replayed micro-batch: already fully folded
-        spark_ = batch_df.sparkSession
         pk = batch_df.groupBy("hot_key").agg(F.count("*").alias("c"))
         batch_grid = (
             pk.selectExpr(
@@ -2755,16 +2740,9 @@ def st30_streaming_heavy_hitters(
             .where(F.lit(_ST30_DEN) * F.col("c") >= F.col("__bt"))
             .select("hot_key")
         )
-        prev = [
-            i
-            for i in _done_ids()
-            if os.path.isdir(os.path.join(state_dir, f"state_v{i}"))
-        ]
         grid, cand_rows = batch_grid, batch_cand
-        if prev:
-            pdf = spark_.read.schema(unified_schema).parquet(
-                os.path.join(state_dir, f"state_v{max(prev)}")
-            )
+        pdf = sketch.read(session=batch_df.sparkSession)
+        if pdf is not None:
             grid = (
                 pdf.where(F.col("kind") == "g")
                 .select("j", "bucket", "cnt")
@@ -2798,19 +2776,10 @@ def st30_streaming_heavy_hitters(
         # a BOUNDED sketch (d·w + ≤DEN·batches rows at any corpus
         # size), so one file per version is the right layout at every
         # scale — coalesce(1) is O(state), not O(batch).
-        unified.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"state_v{batch_id}")
+        sketch.overwrite_buckets(
+            unified.coalesce(1), [0], extra_meta={"batch_id": batch_id}
         )
-        open(marker, "w").close()
-        # GC: once batch_id's marker exists, no future batch reads any
-        # older version — state stays d*w + candidates rows, not
-        # that times batches
-        import shutil
-
-        for i in _done_ids():
-            old = os.path.join(state_dir, f"state_v{i}")
-            if i < batch_id and os.path.isdir(old):
-                shutil.rmtree(old)
+        sketch.vacuum(keep_last=1)
 
     q = (
         spark.readStream.schema(keyed.schema)
@@ -2824,20 +2793,14 @@ def st30_streaming_heavy_hitters(
         .start()
     )
     await_stream(q)
-    done = _done_ids()
-    if len(done) != _ST30_SHARDS:
+    # one committed version per folded micro-batch
+    n_batches = sketch.current_version()
+    if n_batches != _ST30_SHARDS:
         raise AssertionError(
             f"expected {_ST30_SHARDS} one-shard micro-batches, "
-            f"got {len(done)}"
+            f"got {n_batches}"
         )
-    grids = [
-        i
-        for i in done
-        if os.path.isdir(os.path.join(state_dir, f"state_v{i}"))
-    ]
-    unified = spark.read.schema(unified_schema).parquet(
-        os.path.join(state_dir, f"state_v{max(grids)}")
-    )
+    unified = sketch.read()
     counters = unified.where(F.col("kind") == "g").select(
         "j", "bucket", "cnt"
     )

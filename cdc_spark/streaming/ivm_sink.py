@@ -15,28 +15,33 @@ Per batch the work is:
 1. the row-state apply (``BucketedStateTable.apply``) commits version
    v: replay guard, one touched-bucket scan that also materializes
    the batch, the merge of the touched buckets;
-2. ``_sync_with_state(v)`` reads, bucket-pruned, the row-state
-   buckets the versions after ``row_version`` touched (their
-   manifests record them), at ``row_version`` and at v;
+2. ``_sync_with_state(v)`` works out its anchor: the row-state
+   buckets the versions after ``row_version`` touched (their manifests
+   record them), read bucket-pruned at ``row_version`` (the pre image)
+   and at v (the post image);
 3. ``agg_delta`` diffs the two reads into per-group counter deltas
    (exact split-long fixed point, so base ⊕ delta ≡ full recompute
    bit for bit); groups that did not move net to zero and drop out;
 4. the checkpointed delta's aggregate buckets are collected in one
-   job, their rows are read bucket-pruned and merged with the delta,
-   and those buckets are rewritten as one aggregate version stamped
-   ``row_version`` = v (one file per write task, no shuffle: a
-   group-cardinality table is small). Groups whose row count reaches
-   zero are not written, so the aggregate never carries empty groups;
-   a delta with no groups commits the new ``row_version`` alone.
+   job, their rows are read bucket-pruned and ``merge_agg``ed with the
+   delta (one full outer join), and those buckets are rewritten as one
+   aggregate version stamped ``row_version`` = v (one file per write
+   task, no shuffle: a group-cardinality table is small). Groups whose
+   row count reaches zero are not written, so the aggregate never
+   carries empty groups; a delta with no groups commits the new
+   ``row_version`` alone.
 
 That one path also covers a replayed ``batch_id`` (the row-state
 apply returns the version the aggregate already reflects: no work), a
 truncate (it touched every bucket, so the diff is O(state) by
-necessity), a crash between the two commits (the next apply diffs
-every missed version at once) and the first apply on an existing row
-state (no ``row_version``: one full aggregation). Otherwise cost is
-O(touched buckets): the resync scans the touched buckets of both
-versions, and partial aggregation keeps its shuffle O(groups).
+necessity) and a crash between the two commits (the next apply diffs
+every missed version at once). With no usable anchor (no aggregate
+yet, no recorded ``row_version``, a row state behind it, a torn or
+vacuumed pre version) the pre image is empty over every row bucket and
+the delta, merged onto an empty aggregate, rewrites every aggregate
+bucket: one full aggregation. Otherwise cost is O(touched buckets):
+the resync scans the touched buckets of both versions, and partial
+aggregation keeps its shuffle O(groups).
 """
 
 from __future__ import annotations
@@ -49,7 +54,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cdc_spark.cdc.ivm import agg_delta, base_agg, finish_agg, merge_agg
+from cdc_spark.cdc.ivm import agg_delta, finish_agg, merge_agg
 from cdc_spark.streaming.state import BucketedStateTable, _local_checkpoints
 
 
@@ -111,83 +116,82 @@ class IncrementalAggregate:
         and a replayed batch whose effects are already in the row
         state folds nothing: effectively-once aggregate maintenance on
         top of an at-least-once stream. A truncating batch is folded
-        the same way: it touched every bucket. The aggregate's
-        manifest is loaded once and planned against by the commit."""
+        the same way: it touched every bucket.
+
+        Without a usable anchor (see the module notes) the pre image is
+        empty over every row bucket and the delta replaces the whole
+        aggregate: a zero-delta "adopt ``v_cur``" would stamp a
+        possibly-stale aggregate as in sync."""
         if v_cur is None:
             return
         _, man = self.table._current()
         rv = None if man is None else man.get("row_version")
         if rv == v_cur:
             return
-        try:
-            if rv is None or rv > v_cur:
-                # cold start (adopting an existing row state), a
-                # pre-upgrade aggregate with no recorded row_version,
-                # or a row state behind it: there is no anchor to diff
-                # from, and a zero-delta "adopt v_cur" would stamp a
-                # possibly-stale aggregate as in sync
-                raise FileNotFoundError("no row_version anchor")
-            mans = [
-                self.state._load_manifest(w) for w in range(rv, v_cur + 1)
-            ]
-            missed = sorted({int(b) for m in mans[1:] for b in m["touched"]})
-            # vacuum may keep the pre version's directory (a retained
-            # manifest lists its files) yet remove older files that
-            # the pre manifest lists
-            for rel in self.state._live_files(mans[0], missed):
-                if not os.path.exists(os.path.join(self.state.path, rel)):
-                    raise FileNotFoundError(rel)
-        except (FileNotFoundError, json.JSONDecodeError):
-            # no anchor, or a pre version garbage-collected or torn:
-            # rebuild outright with one full aggregation
-            content = base_agg(
-                self.state.read(version=v_cur),
-                self.group_cols,
-                self.measures,
-                scale=self.scale,
-            )
-            self.table._commit_new_version(
-                content,
-                set(range(self.table.n_buckets)),
-                man,
-                {"row_version": v_cur},
-            )
-            return
-        pre = self.state._read(mans[0], missed)
-        post = self.state._read(mans[-1], missed)
+        post_man = self.state._load_manifest(v_cur)
+        pre_man, missed = self._anchor(rv, post_man)
+        pre = None if pre_man is None else self.state._read(pre_man, missed)
+        post = self.state._read(post_man, missed)
         with _local_checkpoints() as checkpoint:
             delta = checkpoint(
                 agg_delta(
                     pre, post, self.group_cols, self.measures, scale=self.scale
                 )
             )
-            self._merge_delta(delta, man, row_version=v_cur)
+            self._merge_delta(
+                delta, None if pre is None else man, row_version=v_cur
+            )
+
+    def _anchor(
+        self, rv: int | None, post_man: dict
+    ) -> tuple[dict | None, list[int] | None]:
+        """(manifest of row-state version ``rv``, the row buckets the
+        versions after it up to ``post_man``'s touched), or (None,
+        None) when ``rv`` is no usable diff anchor."""
+        v_cur = post_man["version"]
+        if rv is None or rv > v_cur:
+            return None, None
+        try:
+            mans = [self.state._load_manifest(w) for w in range(rv, v_cur)]
+        except (FileNotFoundError, json.JSONDecodeError):
+            return None, None
+        mans.append(post_man)
+        missed = sorted({int(b) for m in mans[1:] for b in m["touched"]})
+        # vacuum may keep the pre version's directory (a retained
+        # manifest lists its files) yet remove older files that the pre
+        # manifest lists
+        for rel in self.state._live_files(mans[0], missed):
+            if not os.path.exists(os.path.join(self.state.path, rel)):
+                return None, None
+        return mans[0], missed
 
     def _merge_delta(
-        self, delta: DataFrame, man: dict, *, row_version: int
+        self, delta: DataFrame, man: dict | None, *, row_version: int
     ) -> None:
         """Fold a (checkpointed) per-group delta into the aggregate
         version ``man`` and commit the next one.
 
         One job collects the agg buckets the delta lands in (it also
-        fills the checkpoint). Their new content is computed directly —
-        carried-over rows of unaffected groups plus the merged rows of
-        affected ones (dead groups simply not written) — and committed
-        in one write job, no generic merge machinery on a table whose
-        rows we already fully know."""
+        fills the checkpoint); those buckets are read and merged with
+        the delta by one full outer join (groups the delta misses carry
+        over, dead groups are not written) and committed in one write
+        job. ``man`` None merges onto an empty aggregate instead and
+        rewrites every bucket, committed after the current version."""
         gc = self.group_cols
         at = self.table
-        binfo = delta.agg(
-            F.collect_set(at._bucket_expr()).alias("bs")
-        ).first()
-        bucket_ids = {int(b) for b in binfo["bs"] or ()}
-        content = None  # nothing moved: commit the row_version alone
-        if bucket_ids:
-            bucket_rows = at._read(man, bucket_ids)
-            groups = delta.select(*gc)
-            affected = bucket_rows.join(groups, on=gc, how="left_semi")
-            keep = bucket_rows.join(groups, on=gc, how="left_anti")
-            content = keep.unionByName(merge_agg(affected, delta, gc))
+        if man is None:
+            _, man = at._current()  # planned against, never read
+            bucket_ids = set(range(at.n_buckets))
+            content = merge_agg(None, delta, gc)
+        else:
+            binfo = delta.agg(
+                F.collect_set(at._bucket_expr()).alias("bs")
+            ).first()
+            bucket_ids = {int(b) for b in binfo["bs"] or ()}
+            # nothing moved: commit the row_version alone
+            content = None
+            if bucket_ids:
+                content = merge_agg(at._read(man, bucket_ids), delta, gc)
         at._commit_new_version(
             content, bucket_ids, man, {"row_version": row_version}
         )

@@ -11,7 +11,8 @@ aggregate bit-for-bit (tested).
 
 The rollup is a one-bucket ``BucketedStateTable`` keyed by
 (bucket_start, dims): each batch publishes the merged snapshot as one
-new immutable version, and earlier versions stay readable.
+new immutable version and then drops the one it superseded, so the
+stored state is one rollup, not one per batch.
 """
 
 from __future__ import annotations
@@ -67,7 +68,8 @@ class ContinuousRollup:
     def apply_batch(self, batch: DataFrame, epoch_id: int = 0) -> None:
         """foreachBatch body: merge this batch's partials into state.
         The commit records ``epoch_id``, so a replayed epoch writes
-        nothing (``overwrite_buckets``' replay rule)."""
+        nothing (``overwrite_buckets``' replay rule); the superseded
+        version is then vacuumed."""
         partials = self._partials(batch)
         base = self.state.read(session=batch.sparkSession)
         if base is None:
@@ -86,6 +88,7 @@ class ContinuousRollup:
         self.state.overwrite_buckets(
             merged, [0], extra_meta={"batch_id": epoch_id}
         )
+        self.state.vacuum(keep_last=1)
 
     def read(self) -> DataFrame | None:
         """Current rollup with derived columns (avg from exact partials)."""

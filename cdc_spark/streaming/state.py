@@ -72,17 +72,15 @@ def generations(files: Sequence[str]) -> int:
 
 class TouchedInfo(NamedTuple):
     """What one change batch touches — the result of the single 1-row
-    scan :meth:`BucketedStateTable.scan` runs, or a caller's own
-    equivalent (which then skips the scan)."""
+    scan :meth:`BucketedStateTable._scan` runs over it."""
 
     buckets: set
     has_truncate: bool
-    # high LSN of the batch (the applied-LSN watermark); None when the
-    # caller does not track it
-    max_lsn: int | None = None
+    # high LSN of the batch (the applied-LSN watermark)
+    max_lsn: int | None
     # any op other than c/r: such a batch cannot take the insert-only
-    # append path (conservative default for caller-built records)
-    has_non_insert: bool = True
+    # append path
+    has_non_insert: bool
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -284,7 +282,7 @@ class BucketedStateTable:
             F.lit(self.n_buckets),
         ).cast("int")
 
-    def scan(
+    def _scan(
         self, changes: DataFrame, *, lsn_col: str = "lsn", op_col: str = "op"
     ) -> TouchedInfo:
         """One bounded 1-row job: which buckets does this batch touch,
@@ -476,16 +474,14 @@ class BucketedStateTable:
         *,
         lsn_col: str = "lsn",
         op_col: str = "op",
-        touched_info: TouchedInfo | None = None,
         batch_id: int | None = None,
         insert_only: bool = False,
     ) -> int | None:
         """Merge one batch of typed changes; rewrite only touched
         buckets. Returns the new version (or the current one for an
-        empty batch). ``touched_info`` lets a caller that already
-        scanned the batch (:meth:`scan`) skip the scan here; an apply
-        that scans itself evaluates the batch once
-        (:func:`_local_checkpoints`).
+        empty batch). One 1-row scan of the batch (:meth:`_scan`) finds
+        the touched buckets; it also stores the batch, so the apply
+        evaluates each change row once (:func:`_local_checkpoints`).
 
         ``insert_only=True`` is the caller's GUARANTEE that no change
         key exists in the current state (e.g. the batch was anti-joined
@@ -534,15 +530,12 @@ class BucketedStateTable:
         ):
             return v_cur
         with _local_checkpoints() as checkpoint:
-            if touched_info is None:
-                changes = checkpoint(changes)  # filled by the scan job
-                touched_info = self.scan(
-                    changes, lsn_col=lsn_col, op_col=op_col
-                )
-            touched = set(touched_info.buckets)
+            changes = checkpoint(changes)  # filled by the scan job
+            info = self._scan(changes, lsn_col=lsn_col, op_col=op_col)
+            touched = set(info.buckets)
             if not touched:
                 return v_cur  # empty batch: no new version
-            any_t = touched_info.has_truncate
+            any_t = info.has_truncate
             if any_t:
                 touched = set(range(self.n_buckets))
 
@@ -551,7 +544,7 @@ class BucketedStateTable:
             append = (
                 insert_only
                 and not any_t
-                and not touched_info.has_non_insert
+                and not info.has_non_insert
                 and man is not None
                 and not any(
                     generations(man["buckets"].get(str(b), ()))
@@ -598,7 +591,7 @@ class BucketedStateTable:
             # standby status update the reference sends every 10s)
             prev_lsn = man.get("applied_lsn") if man is not None else None
             applied = max(
-                (x for x in (prev_lsn, touched_info.max_lsn) if x is not None),
+                (x for x in (prev_lsn, info.max_lsn) if x is not None),
                 default=None,
             )
             meta = {"batch_id": batch_id, "applied_lsn": applied}
@@ -626,7 +619,7 @@ class BucketedStateTable:
         every later commit of that version. An empty one is left: a
         rename may be landing on it. Time travel
         shrinks to the retained window; the IVM sink's resync handles a
-        vacuumed-away pre version by falling back to a full rebuild.
+        vacuumed-away pre version by diffing from an empty pre image.
         O(versions) driver work, no Spark job.
 
         Returns ``{"removed": [...], "kept": [...]}`` (version ints).

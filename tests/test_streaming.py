@@ -349,6 +349,26 @@ def test_continuous_rollup_replayed_epoch_is_noop(spark, tmp_path):
     assert n_sum() == (4, 6.0)
 
 
+def test_continuous_rollup_keeps_one_version(spark, tmp_path):
+    """Each epoch replaces the whole rollup, so superseded versions
+    are dropped: five epochs leave one version directory."""
+    import datetime as dt
+
+    from cdc_spark.streaming.rollup import ContinuousRollup
+
+    rollup = ContinuousRollup(spark, str(tmp_path / "rollup"))
+    t = dt.datetime(2024, 1, 1)
+    for epoch in range(5):
+        rollup.apply_batch(
+            spark.createDataFrame(
+                [(t, float(epoch))], "ts timestamp, value double"
+            ),
+            epoch,
+        )
+    assert rollup.state._versions() == [5]
+    assert (rollup.read().first().n, rollup.read().first().sum_value) == (5, 10.0)
+
+
 def test_multi_table_stream_routing(spark):
     """one change stream carrying two tables; each pipeline materializes
     only its own table (registry-scoped decode), states independent."""

@@ -149,3 +149,25 @@ def test_begin_markers_are_framing_not_data(spark, tmp_path):
     # within-batch form drops Begins too
     got = filter_committed(b1)
     assert sorted(r.k for r in got.collect()) == [2]
+
+
+def test_apply_batch_releases_pool_checkpoint(spark, tmp_path):
+    """The pending pool's checkpoint blocks are dropped when a batch
+    returns, so a long stream does not hold one pool per batch."""
+    app = _mk(spark, tmp_path)
+
+    def stored():
+        return {
+            i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
+
+    before = stored()
+    for i in range(3):
+        app.apply_batch(
+            spark.createDataFrame(
+                [("c", 2 * i + 1, 10 + i, i, "a"), ("C", 2 * i + 2, 10 + i, None, None)],
+                SCHEMA,
+            )
+        )
+        assert stored() <= before
+    assert _state_rows(app) == [(0, "a"), (1, "a"), (2, "a")]
